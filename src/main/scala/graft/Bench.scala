@@ -4,8 +4,6 @@ import java.util.concurrent.{Executors, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line.
   *
@@ -51,24 +49,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // measured sweet spot: 24 in-flight queries on 32 cores at the
     // round-9 suite (103 queries, post stage-cuts): same-epoch A/B pairs
     // gave 24t 5.58/5.72 s vs 16t 5.84/6.42 s (32t measured 5.70 — no
     // better). Round 8's sweet spot was 16 at the older per-query stage
     // counts; re-measure when the suite's stage profile shifts again.
     val threads = sys.env.get("SPARK_GRAFT_BENCH_THREADS").map(_.toInt)
-      .getOrElse(math.min(cpus.toInt, 24))
-    // tunable for probes; default = cpus (the scale-appropriate setting —
-    // AQE coalesces the tiny ones at this SF, see BASELINE.md round 8)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .getOrElse(math.min(cpus, 24))
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names = SparkEntry.queries.keys.toSeq.sorted
     val failed = scala.collection.mutable.LinkedHashSet[String]()

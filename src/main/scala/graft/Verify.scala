@@ -6,16 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs parquet output: the oracle engine materializes timestamps at µs;
-      // INT96 (ns) output would make every timestamp column hash-mismatch.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql)
     spark.stop()
@@ -43,9 +34,22 @@ object Verify {
           msg.take(4000))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    writeOracleSql(outDir, oracleSql)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObject(errors))
+    System.err.println(
+      s"[verify] ${queries.size - errors.size}/${queries.size} dumped, ${errors.size} failed")
+    errors.toMap
+  }
+
+  /** `<outDir>/oracle_sql.json`: the oracle SQL the DuckDB compare runs. */
+  def writeOracleSql(outDir: String, oracleSql: Map[String, String]): Unit =
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObject(oracleSql))
+
+  /** A flat JSON object of strings. Escapes backslash, quote, and ALL
+    * control chars (<0x20) — a tab or CR in the oracle SQL would
+    * otherwise make the checker's json.load fail and silently zero the
+    * correctness gate. */
+  private def jsonObject(entries: Iterable[(String, String)]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -55,14 +59,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
-    System.err.println(
-      s"[verify] ${queries.size - errors.size}/${queries.size} dumped, ${errors.size} failed")
-    errors.toMap
+    entries.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

@@ -491,7 +491,7 @@ object Avro {
     * string lengths, timestamp range) — without materializing a single
     * value. Same verdicts as a full decode at a fraction of the work
     * (no UTF-8 conversion, no Row allocation, string payloads skipped
-    * in O(1)); AvroMeasure pins the ratio. */
+    * in O(1)); docs/avro_measure_r15.json records the ratio. */
   private[graft] def validateStream(in0: InputStream, declared: StructType,
       file: String): Unit = {
     val in = new DataInputStream(new BufferedInputStream(in0, 1 << 16))
@@ -652,10 +652,10 @@ object Avro {
     * collect is file-COUNT-sized metadata, not data). The validation
     * pass is the structural skip-walk ([[validateStream]]): identical
     * verdicts to a full decode with none of the value materialization,
-    * so the added CPU is a fraction of one decode (AvroMeasure pins
-    * it). That is the price of atomic per-file quarantine with
-    * streaming memory use; use plain [[readAvro]] on trusted
-    * producers. */
+    * so the added CPU is a fraction of one decode
+    * (docs/avro_measure_r15.json records it). That is the price of
+    * atomic per-file quarantine with streaming memory use; use plain
+    * [[readAvro]] on trusted producers. */
   def readAvroWithQuarantine(spark: SparkSession, path: String,
       schema: StructType): (DataFrame, DataFrame) = {
     schema.fields.foreach(f => avroType(f.dataType))

@@ -11,9 +11,10 @@ class AggregatesSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("rmssd equals sqrt(avg(dv^2)) on the events table") {
-    Aggregates.register(spark)
+    val s = spark.newSession()
+    Aggregates.register(s)
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val dv = Tables.events(spark, sf())
+    val dv = Tables.events(s, sf())
       .select($"user_id", ($"value" - lag($"value", 1).over(w)).as("dv"))
       .filter($"dv".isNotNull)
     val got = dv.groupBy($"user_id")
@@ -24,9 +25,11 @@ class AggregatesSpec extends SparkSpecBase {
   }
 
   test("rmssd on a hand-computed fixture") {
-    Aggregates.register(spark)
+    val s = spark.newSession()
+    Aggregates.register(s)
     // diffs 3, -1 → rmssd = sqrt((9+1)/2) = sqrt(5)
-    val r = Seq(3.0, -1.0).toDF("dv").agg(expr("rmssd(dv)")).collect().head.getDouble(0)
+    val r = s.createDataFrame(Seq(Tuple1(3.0), Tuple1(-1.0))).toDF("dv")
+      .agg(expr("rmssd(dv)")).collect().head.getDouble(0)
     assert(math.abs(r - math.sqrt(5.0)) < 1e-12)
   }
 

@@ -41,16 +41,16 @@ class BloomSpec extends SparkSpecBase {
   }
 
   test("SQL surface: sketch, merge, contains; arity guarded") {
-    GraftSession.enrich(spark)
-    Tables.events(spark, sf()).createOrReplaceTempView("events")
-    val r = spark.sql(
+    val s = enrichedSession()
+    Tables.events(s, sf()).createOrReplaceTempView("events")
+    val r = s.sql(
       """SELECT graft_bloom_contains(graft_bloom_sketch(user_id), 3L) AS hit,
         |       graft_bloom_contains(graft_bloom_sketch(user_id), 999999L) AS miss
         |FROM events""".stripMargin).collect().head
     assert(r.getBoolean(0), "user 3 exists at every sf")
     assert(!r.getBoolean(1), "a far-off key should not be present")
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_bloom_contains(x'00') FROM events").collect()
+      s.sql("SELECT graft_bloom_contains(x'00') FROM events").collect()
     }
     assert(err.getMessage.toLowerCase.contains("graft_bloom_contains"))
   }

@@ -48,16 +48,16 @@ class CountMinSpec extends SparkSpecBase {
   }
 
   test("SQL surface: sketch, merge, estimate; arity guarded") {
-    GraftSession.enrich(spark)
-    Tables.events(spark, sf()).createOrReplaceTempView("events")
-    val est = spark.sql(
+    val s = enrichedSession()
+    Tables.events(s, sf()).createOrReplaceTempView("events")
+    val est = s.sql(
       """SELECT graft_cms_estimate(graft_cms_sketch(user_id), 3L) AS e
         |FROM events""".stripMargin).as[Long].head
     val exact = Tables.events(spark, sf())
       .filter($"user_id" === 3).count()
     assert(est >= exact)
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_cms_estimate(x'00') FROM events").collect()
+      s.sql("SELECT graft_cms_estimate(x'00') FROM events").collect()
     }
     assert(err.getMessage.toLowerCase.contains("graft_cms_estimate"))
   }

@@ -61,15 +61,16 @@ class HllSpec extends SparkSpecBase {
   }
 
   test("SQL registration: graft_hll / graft_hll_sketch / graft_hll_merge") {
-    Hll.register(spark)
-    Tables.events(spark, sf()).createOrReplaceTempView("hll_events")
-    val a = spark.sql("SELECT graft_hll(user_id) FROM hll_events").collect().head.getLong(0)
-    val viaSketch = spark.sql(
+    val s = spark.newSession()
+    Hll.register(s)
+    Tables.events(s, sf()).createOrReplaceTempView("hll_events")
+    val a = s.sql("SELECT graft_hll(user_id) FROM hll_events").collect().head.getLong(0)
+    val viaSketch = s.sql(
       """SELECT graft_hll_merge(sk) FROM
         |  (SELECT graft_hll_sketch(user_id) AS sk FROM hll_events GROUP BY event_type)
         |""".stripMargin).collect().head.getLong(0)
     assert(a == viaSketch)
-    val exact = spark.sql("SELECT count(DISTINCT user_id) FROM hll_events")
+    val exact = s.sql("SELECT count(DISTINCT user_id) FROM hll_events")
       .collect().head.getLong(0)
     assert(relErr(a, exact) < 0.05)
   }
@@ -89,14 +90,15 @@ class HllSpec extends SparkSpecBase {
   }
 
   test("graft_hll_estimate: native expression, SQL round-trip, arity guard") {
-    Hll.register(spark)
-    Tables.events(spark, sf()).createOrReplaceTempView("hll_events")
+    val s = spark.newSession()
+    Hll.register(s)
+    Tables.events(s, sf()).createOrReplaceTempView("hll_events")
     // decode of a persisted sketch equals the merge-of-one estimate
-    val viaExpr = spark.sql(
+    val viaExpr = s.sql(
       """SELECT graft_hll_estimate(sk) FROM
         |  (SELECT graft_hll_sketch(user_id) AS sk FROM hll_events)
         |""".stripMargin).collect().head.getLong(0)
-    val direct = spark.sql("SELECT graft_hll(user_id) FROM hll_events")
+    val direct = s.sql("SELECT graft_hll(user_id) FROM hll_events")
       .collect().head.getLong(0)
     assert(viaExpr == direct, s"expr=$viaExpr direct=$direct")
     // the decode path is a native expression, never a UDF
@@ -110,7 +112,7 @@ class HllSpec extends SparkSpecBase {
     for (fn <- Seq("graft_hll", "graft_hll_sketch", "graft_hll_merge",
         "graft_hll_estimate")) {
       val e = intercept[org.apache.spark.sql.AnalysisException](
-        spark.sql(s"SELECT $fn(user_id, event_type) FROM hll_events").collect())
+        s.sql(s"SELECT $fn(user_id, event_type) FROM hll_events").collect())
       assert(e.getMessage.contains("1"), s"$fn: ${e.getMessage}")
     }
   }

@@ -64,9 +64,9 @@ class KmvSpec extends SparkSpecBase {
   }
 
   test("SQL surface: sketch, merge, estimate, jaccard; arity guarded") {
-    GraftSession.enrich(spark)
-    Tables.events(spark, sf()).createOrReplaceTempView("events")
-    val r = spark.sql(
+    val s = enrichedSession()
+    Tables.events(s, sf()).createOrReplaceTempView("events")
+    val r = s.sql(
       """SELECT graft_kmv_estimate(graft_kmv_sketch(user_id)) AS d,
         |       graft_kmv_jaccard(graft_kmv_sketch(user_id),
         |                         graft_kmv_sketch(user_id)) AS j
@@ -76,7 +76,7 @@ class KmvSpec extends SparkSpecBase {
     assert(r.getLong(0) == exact, "below k the estimate is exact")
     assert(r.getDouble(1) == 1.0, "a set's overlap with itself is 1")
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_kmv_jaccard(x'00') FROM events").collect()
+      s.sql("SELECT graft_kmv_jaccard(x'00') FROM events").collect()
     }
     assert(err.getMessage.toLowerCase.contains("graft_kmv_jaccard"))
   }

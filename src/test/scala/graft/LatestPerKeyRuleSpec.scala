@@ -12,9 +12,16 @@ import graft.plans.LatestPerKeyRule
 class LatestPerKeyRuleSpec extends SparkSpecBase {
   import spark.implicits._
 
+  // the rule goes on a session of its own, never on the shared one
+  private lazy val ruled = {
+    val s = spark.newSession()
+    LatestPerKeyRule.install(s)
+    s
+  }
+
   // primitive columns → non-nullable schema → rule is applicable
-  private lazy val series = (1L to 300L)
-    .map(i => (i % 7, i * 1000, i, i.toDouble / 3))
+  private lazy val series = ruled.createDataFrame((1L to 300L)
+    .map(i => (i % 7, i * 1000, i, i.toDouble / 3)))
     .toDF("k", "t", "id", "v")
 
   private def latestPerKeyDF = {
@@ -28,14 +35,12 @@ class LatestPerKeyRuleSpec extends SparkSpecBase {
     }.nonEmpty
 
   test("rule rewrites Window+Filter to an Aggregate with max_by") {
-    LatestPerKeyRule.install(spark)
     val optimized = latestPerKeyDF.queryExecution.optimizedPlan
     assert(!hasWindow(latestPerKeyDF), s"window survived:\n$optimized")
     assert(optimized.toString.contains("max_by"))
   }
 
   test("rewritten plan returns the same rows as the window plan") {
-    LatestPerKeyRule.install(spark)
     val got = latestPerKeyDF.select($"k", $"id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = series.groupBy($"k").agg(max_by($"id", $"t").as("id"))
@@ -44,8 +49,7 @@ class LatestPerKeyRuleSpec extends SparkSpecBase {
   }
 
   test("nullable ordering key is left untouched (either direction)") {
-    LatestPerKeyRule.install(spark)
-    val ev = Tables.events(spark, sf()).select($"user_id", $"ts", $"event_id")
+    val ev = Tables.events(ruled, sf()).select($"user_id", $"ts", $"event_id")
     for (ord <- Seq($"ts".desc, $"ts".asc)) {
       val w = Window.partitionBy($"user_id").orderBy(ord)
       val df = ev.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
@@ -54,7 +58,6 @@ class LatestPerKeyRuleSpec extends SparkSpecBase {
   }
 
   test("global window (no partition keys) is left untouched") {
-    LatestPerKeyRule.install(spark)
     val w = Window.orderBy($"t".desc)
     val df = series.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
     assert(hasWindow(df)) // empty input would yield a phantom aggregate row

@@ -71,9 +71,9 @@ class MisraGriesSpec extends SparkSpecBase {
   }
 
   test("SQL surface: graft_mg_* registered and usable end to end") {
-    GraftSession.enrich(spark)
-    Tables.events(spark, sf()).createOrReplaceTempView("ev_mg")
-    val r = spark.sql(
+    val s = enrichedSession()
+    Tables.events(s, sf()).createOrReplaceTempView("ev_mg")
+    val r = s.sql(
       """SELECT graft_mg_estimate(sk, 'click') n, graft_mg_error(sk) e
         |FROM (SELECT graft_mg_merge(sk) sk
         |      FROM (SELECT graft_mg_sketch(event_type) sk

@@ -325,9 +325,9 @@ class PlanShapeSpec extends SparkSpecBase {
   test("stored plan audit covers every registered query") {
     // round 9's audit silently missed the last-added query — pin the
     // committed metrics file to the live registry so the bookkeeping
-    // cannot drift again (regenerate with `runMain graft.Explain`)
+    // cannot drift again (regenerate with `runMain graft.Tool explain`)
     val f = new java.io.File("docs/plans_sf0.01.txt.metrics.jsonl")
-    assert(f.exists(), s"${f.getPath} missing — run graft.Explain")
+    assert(f.exists(), s"${f.getPath} missing — run graft.Tool explain")
     val audited = scala.io.Source.fromFile(f).getLines()
       .map { l =>
         val m = "\"query\":\"([^\"]+)\"".r.findFirstMatchIn(l)

@@ -45,16 +45,16 @@ class QuantileSketchSpec extends SparkSpecBase {
   }
 
   test("SQL surface: sketch, merge, estimate; arity guarded") {
-    GraftSession.enrich(spark)
-    Tables.events(spark, sf()).createOrReplaceTempView("events")
-    val med = spark.sql(
+    val s = enrichedSession()
+    Tables.events(s, sf()).createOrReplaceTempView("events")
+    val med = s.sql(
       """SELECT graft_quantile_estimate(graft_quantile_sketch(value), 0.5) AS m
         |FROM events""".stripMargin).as[Double].head
     val exact = exactNearestRank(
       Tables.events(spark, sf()).select($"value").as[Double].collect().sorted, 0.5)
     assert(math.abs(med - exact) <= QuantileSketch.Alpha * exact + 1e-12)
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_quantile_estimate(x'00') FROM events").collect()
+      s.sql("SELECT graft_quantile_estimate(x'00') FROM events").collect()
     }
     assert(err.getMessage.toLowerCase.contains("graft_quantile_estimate"))
   }

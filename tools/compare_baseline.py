@@ -118,7 +118,7 @@ def main():
                          "dispatch-floor noise and exempt)")
     ap.add_argument("--plan-metrics", default="docs/plans_sf0.01.txt.metrics.jsonl",
                     help="current per-query structural plan metrics "
-                         "(written by graft.Explain)")
+                         "(written by graft.Tool explain)")
     ap.add_argument("--plan-prior", metavar="METRICS_JSONL",
                     help="prior round's committed plan metrics (e.g. "
                          "docs/plan_metrics_r13.jsonl): diff structural "
@@ -208,7 +208,7 @@ def main():
             cur = load_metrics(args.plan_metrics)
         except FileNotFoundError:
             sys.exit(f"plan gate: {args.plan_metrics} not found — run "
-                     "`runMain graft.Explain` first (refusing a vacuous pass)")
+                     "`runMain graft.Tool explain` first (refusing a vacuous pass)")
         pri = load_metrics(args.plan_prior)
         # anti-vacuity (round-14 review): a stale/empty current metrics
         # file would compare nothing and report success — the exact
@@ -217,7 +217,7 @@ def main():
         if overlap < max(1, len(pri) // 2):
             sys.exit(f"plan gate: only {overlap}/{len(pri)} prior queries "
                      f"present in {args.plan_metrics} — stale metrics? "
-                     "Re-run graft.Explain (refusing a vacuous pass)")
+                     "Re-run graft.Tool explain (refusing a vacuous pass)")
         keys = ("exchanges", "broadcasts", "windows", "sorts", "bnlj")
         bad, changed = [], []
         for q in sorted(cur):
