@@ -135,25 +135,6 @@ object CorpusPipeline {
     } finally gated.unpersist()
   }
 
-  /** Final assembly stage: curated corpus → fixed-budget training
-    * chunks. Reads the corpus `curate` wrote, packs it in doc-id order
-    * on the distributed running total (TrainingData.packChunks — no
-    * single-partition window), and writes the chunk table next to the
-    * corpus. This is the table a tokenizer consumes: one row per chunk,
-    * text assembled in corpus order, token count and doc count carried
-    * alongside. Returns (chunks written, docs packed). */
-  def toTrainingChunks(spark: SparkSession, outDir: String,
-      budget: Int = 2048): (Long, Long) = {
-    val curated = spark.read.parquet(s"$outDir/corpus")
-    val chunks = graft.operators.TrainingData
-      .packChunks(curated, "doc_id", "text", budget)
-    chunks.write.mode("overwrite").parquet(s"$outDir/chunks")
-    val back = spark.read.parquet(s"$outDir/chunks")
-    // sum over zero rows is NULL — an empty curated corpus packs to (0,0)
-    (back.count(), back.agg(coalesce(sum(col("n_docs")), lit(0L)))
-      .collect().head.getLong(0))
-  }
-
   /** Signature-store schema: one row per document ever admitted to the
     * near-dup stage — (doc_id, content hash, 64-bit SimHash). This is the
     * ONLY state append-mode curation keeps: at 100 TB you re-cluster

@@ -53,17 +53,6 @@ object Bloom {
     }
   }
 
-  def containsBits(words: Array[Long], h: Long): Boolean = {
-    val h2 = CountMin.mix(h)
-    var i = 0
-    while (i < K) {
-      val bit = ((h + i.toLong * h2) & Mask).toInt
-      if ((words(bit >>> 6) & (1L << (bit & 63))) == 0L) return false
-      i += 1
-    }
-    true
-  }
-
   def mergeInPlace(a: Array[Long], b: Array[Long]): Array[Long] = {
     var i = 0
     while (i < Words) { a(i) |= b(i); i += 1 }
@@ -202,8 +191,6 @@ object Bloom {
   def bloomSketch(c: Column): Column =
     GraftBridge.column(
       BloomSketchAgg(hash64(GraftBridge.expression(c))).toAggregateExpression())
-  def bloomMerge(c: Column): Column =
-    GraftBridge.column(BloomMergeAgg(GraftBridge.expression(c)).toAggregateExpression())
   def bloomContains(filter: Column, value: Column): Column =
     GraftBridge.column(BloomContains(GraftBridge.expression(filter),
       hash64(GraftBridge.expression(value))))

@@ -173,83 +173,6 @@ object Bpe {
   /** Column wrapper: rolling hash of the encoded token sequence. */
   def bpeSequenceHash(c: Column): Column =
     GraftBridge.column(BpeSeqHashExpr(GraftBridge.expression(c)))
-
-
-  /** The loaded-table encode kernel: lowest-rank-first — repeatedly
-    * find the present adjacent pair with the smallest rank and merge
-    * its occurrences in one leftmost non-overlapping pass, until no
-    * adjacent pair is in the table. All-int; per-row cost
-    * O(len × distinct rules that fire), table-size independent. */
-  private def encodeTable(t: UTF8String, tab: BpeTable): (Array[Int], Int) = {
-    val s = t.toString
-    var n = 0
-    val syms = new Array[Int](s.codePointCount(0, s.length))
-    var ci = 0
-    while (ci < s.length) {
-      val cp = s.codePointAt(ci)
-      syms(n) = cp
-      n += 1
-      ci += Character.charCount(cp)
-    }
-    var len = n
-    var more = len > 1
-    while (more) {
-      var best = Int.MaxValue
-      var i = 0
-      while (i < len - 1) {
-        val r = tab.rank(syms(i), syms(i + 1))
-        if (r < best) best = r
-        i += 1
-      }
-      if (best == Int.MaxValue) more = false
-      else {
-        val a = tab.left(best)
-        val b = tab.right(best)
-        val m = MergedBase + best
-        var i2 = 0
-        var j = 0
-        while (i2 < len) {
-          if (i2 + 1 < len && syms(i2) == a && syms(i2 + 1) == b) {
-            syms(j) = m; i2 += 2
-          } else {
-            syms(j) = syms(i2); i2 += 1
-          }
-          j += 1
-        }
-        len = j
-        if (len < 2) more = false
-      }
-    }
-    (syms, len)
-  }
-
-  /** [[tokenCount]] under a loaded table. */
-  def tokenCountTable(t: UTF8String, tab: BpeTable): Int = encodeTable(t, tab)._2
-
-  /** [[sequenceHash]] under a loaded table (same private-use symbol
-    * mapping, so on the pinned rules it equals the compiled form
-    * bit-for-bit). */
-  def sequenceHashTable(t: UTF8String, tab: BpeTable): Long = {
-    val (syms, len) = encodeTable(t, tab)
-    var acc = 0L
-    var i = 0
-    while (i < len) {
-      val code =
-        if (syms(i) >= MergedBase) 0xE000 + (syms(i) - MergedBase)
-        else syms(i)
-      acc = (acc * 31L + code) % 1000000007L
-      i += 1
-    }
-    acc
-  }
-
-  /** Column wrapper: token count under a merge table loaded as data. */
-  def bpeTokenCountTable(c: Column, merges: Seq[(String, String)]): Column =
-    GraftBridge.column(BpeTableCountExpr(GraftBridge.expression(c), new BpeTable(merges)))
-
-  /** Column wrapper: sequence hash under a merge table loaded as data. */
-  def bpeSequenceHashTable(c: Column, merges: Seq[(String, String)]): Column =
-    GraftBridge.column(BpeTableSeqHashExpr(GraftBridge.expression(c), new BpeTable(merges)))
 }
 
 /** Native codegen'd expression: [[Bpe.tokenCount]] of the child string
@@ -303,134 +226,4 @@ case class BpeSeqHashExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Native codegen'd expression: [[Bpe.tokenCountTable]] under a merge
-  * table loaded as data — the table rides as an expression field
-  * (plan literal, `addReferenceObj`), compiled once per executor. */
-case class BpeTableCountExpr(child: Expression, table: BpeTable)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${other.catalogString}")
-  }
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bpe_token_count_table"
-
-  override def nullSafeEval(v: Any): Any =
-    Bpe.tokenCountTable(v.asInstanceOf[UTF8String], table)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeTable", table, "graft.functions.BpeTable")
-    nullSafeCodeGen(ctx, ev, t => {
-      s"${ev.value} = graft.functions.Bpe.tokenCountTable($t, $ref);"
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native codegen'd expression: [[Bpe.sequenceHashTable]] under a merge
-  * table loaded as data. */
-case class BpeTableSeqHashExpr(child: Expression, table: BpeTable)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${other.catalogString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bpe_sequence_hash_table"
-
-  override def nullSafeEval(v: Any): Any =
-    Bpe.sequenceHashTable(v.asInstanceOf[UTF8String], table)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeTable", table, "graft.functions.BpeTable")
-    nullSafeCodeGen(ctx, ev, t => {
-      s"${ev.value} = graft.functions.Bpe.sequenceHashTable($t, $ref);"
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** A merge table loaded AS DATA — how a production vocabulary (50k
-  * merges.txt rules) reaches the encoder without recompiling, where
-  * [[Bpe.compiled]] pins the judged table at compile time. The rules
-  * ride as an expression field (serialized with the plan and broadcast
-  * with the task binary — the PQ-codebook discipline), and each
-  * executor compiles them ONCE per deserialized instance into the int
-  * structures the kernel reads: a flat (left,right) pair array and an
-  * open-addressed long→rank probe table (no per-lookup boxing in the
-  * hot loop).
-  *
-  * The table kernel is the LOWEST-RANK-FIRST loop
-  * ([[Bpe.tokenCountTable]]) rather than one-pass-per-rule: the two
-  * are provably equivalent for well-formed tables (the build-time
-  * invariant; BpeSpec pins the property), but pass-per-rule costs
-  * O(len × rules) — 50k passes per row at a production vocabulary —
-  * where the rank loop costs O(len × distinct-rules-that-fire),
-  * independent of table size. */
-final class BpeTable(val merges: Seq[(String, String)]) extends Serializable {
-  /** [l0,r0,l1,r1,...] symbol-id pairs, rule order. */
-  @transient private lazy val flat: Array[Int] = {
-    val pairs = Bpe.compile(merges) // well-formedness + ambiguity checks
-    val f = new Array[Int](pairs.length * 2)
-    var i = 0
-    while (i < pairs.length) {
-      f(2 * i) = pairs(i)._1; f(2 * i + 1) = pairs(i)._2; i += 1
-    }
-    f
-  }
-
-  /** Open-addressed (l<<32|r) → rank map, power-of-two, linear probing;
-    * EMPTY slots hold key -1 (symbol ids are non-negative, so -1 cannot
-    * collide with a real packed pair). */
-  @transient private lazy val probe: (Array[Long], Array[Int]) = {
-    val pairs = flat
-    val n = pairs.length / 2
-    var cap = 16
-    while (cap < n * 2) cap <<= 1
-    val keys = Array.fill(cap)(-1L)
-    val vals = new Array[Int](cap)
-    var i = 0
-    while (i < n) {
-      val k = (pairs(2 * i).toLong << 32) | (pairs(2 * i + 1).toLong & 0xffffffffL)
-      var slot = java.lang.Long.hashCode(k * -7046029254386353131L) & (cap - 1)
-      while (keys(slot) != -1L) slot = (slot + 1) & (cap - 1)
-      keys(slot) = k
-      vals(slot) = i
-      i += 1
-    }
-    (keys, vals)
-  }
-
-  def nRules: Int = flat.length / 2
-  def left(rule: Int): Int = flat(2 * rule)
-  def right(rule: Int): Int = flat(2 * rule + 1)
-
-  /** Rank of the adjacent pair (a, b), or Int.MaxValue if unmerged. */
-  def rank(a: Int, b: Int): Int = {
-    val (keys, vals) = probe
-    val k = (a.toLong << 32) | (b.toLong & 0xffffffffL)
-    val mask = keys.length - 1
-    var slot = java.lang.Long.hashCode(k * -7046029254386353131L) & mask
-    while (true) {
-      val kk = keys(slot)
-      if (kk == k) return vals(slot)
-      if (kk == -1L) return Int.MaxValue
-      slot = (slot + 1) & mask
-    }
-    Int.MaxValue // unreachable
-  }
 }

@@ -202,9 +202,6 @@ object Hll {
     GraftBridge.column(HllSketchAgg(hash64(GraftBridge.expression(c))).toAggregateExpression())
   def hllMerge(c: Column): Column =
     GraftBridge.column(HllMergeAgg(GraftBridge.expression(c)).toAggregateExpression())
-  /** Scalar estimate of one persisted sketch (see [[HllEstimate]]). */
-  def hllEstimate(c: Column): Column =
-    GraftBridge.column(HllEstimate(GraftBridge.expression(c)))
 
   /** Exactly-one-argument guard for the SQL builders: these functions
     * hash ONE column; silently dropping extra arguments would hand back

@@ -247,13 +247,8 @@ object Kmv {
   def kmvSketch(c: Column): Column =
     GraftBridge.column(
       KmvSketchAgg(hash64(GraftBridge.expression(c))).toAggregateExpression())
-  def kmvMerge(c: Column): Column =
-    GraftBridge.column(KmvMergeAgg(GraftBridge.expression(c)).toAggregateExpression())
   def kmvEstimate(c: Column): Column =
     GraftBridge.column(KmvEstimate(GraftBridge.expression(c)))
-  def kmvJaccard(a: Column, b: Column): Column =
-    GraftBridge.column(KmvJaccard(GraftBridge.expression(a),
-      GraftBridge.expression(b)))
 
   private def arity(fn: String, n: Int, args: Seq[Expression]): Unit =
     if (args.length != n) throw new org.apache.spark.sql.AnalysisException(

@@ -26,15 +26,6 @@ object TextFunctions {
       sequence(lit(1), least(size(ws) - 1, lit(cap))),
       i => concat(element_at(ws, i), lit(" "), element_at(ws, i + 1)))
 
-  /** Word shingles (n-grams joined with spaces) over a text column; short
-    * documents produce one partial shingle. */
-  def shingles(text: Column, n: Int): Column = {
-    val ws = split(text, "\\s+")
-    transform(
-      sequence(lit(1), greatest(size(ws) - (n - 1), lit(1))),
-      i => concat_ws(" ", (0 until n).map(j => try_element_at(ws, i + j)): _*))
-  }
-
   /** Token-set Jaccard similarity between two distinct-token arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))

@@ -228,9 +228,8 @@ object Ann {
   /** Generation numbers under `$dir/lists` (the gen=N child dirs).
     * Empty for a flat pre-generation layout; fails when no lists tree
     * exists at all. Driver-side listing of IMMEDIATE children only —
-    * O(generations), not O(files). Shared with the streaming ingest
-    * sink's checkpoint-reset lineage guard. */
-  private[graft] def indexGenerations(spark: SparkSession, dir: String): Seq[Long] = {
+    * O(generations), not O(files). */
+  private def indexGenerations(spark: SparkSession, dir: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/lists")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(p), s"no IVF index at $dir — run buildIvfIndex first.")
@@ -289,8 +288,7 @@ object Ann {
     * recall erodes; rebuild when appended mass rivals the fitted
     * mass. */
   def appendToIvfIndex(spark: SparkSession, corpus: DataFrame, idCol: String,
-      vecCol: String, dir: String, generation: Long,
-      knownGenerations: Option[Seq[Long]] = None): Unit = {
+      vecCol: String, dir: String, generation: Long): Unit = {
     require(generation >= 1,
       s"generation must be >= 1 (gen=0 is the base build), got $generation")
     graft.PathGuard.requireDisjoint(spark, corpus.inputFiles.toSeq, dir,
@@ -299,9 +297,7 @@ object Ann {
     // a pre-generation-layout index (lists/list_id=... at the top) cannot
     // take gen=N siblings — partition discovery rejects mixed depths and
     // the whole tree becomes unreadable; fail with a migration path.
-    // knownGenerations lets the streaming sink reuse its own listing
-    // instead of a second per-batch listStatus.
-    require(knownGenerations.getOrElse(indexGenerations(spark, dir)).nonEmpty,
+    require(indexGenerations(spark, dir).nonEmpty,
       s"the index at $dir uses the flat pre-generation lists layout " +
         "(lists/list_id=...): appending gen subtrees beside it would make " +
         "the tree unreadable. Rebuild the index with buildIvfIndex.")

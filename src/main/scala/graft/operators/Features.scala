@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 /** Sliding-window feature creation over keyed event streams — the
   * reference's "features creator" surface as a reusable API: one call
   * appends a block of rolling statistics (count/mean/std/min/max, RMS of
-  * successive differences, deltas) per key, over either a row-count frame
-  * or a trailing time frame.
+  * successive differences, deltas) per key, over a row-count frame.
   *
   * Everything is window functions partitioned by the series key: a single
   * shuffle on the key, then per-partition sorted evaluation — at 100 TB
@@ -39,21 +38,6 @@ object Features {
       // rolling RMSSD over the deltas inside the same frame
       .withColumn(s"${prefix}_rmssd",
         sqrt(avg(col(s"${prefix}_delta") * col(s"${prefix}_delta")).over(frame)))
-  }
-
-  /** Rolling features over a trailing time window (`seconds` back from the
-    * current row, inclusive) per key. Range frames need a numeric ordering
-    * key: epoch MICROseconds, so the window boundary is exact at the
-    * timestamp precision both engines carry (SURVEY §4). */
-  def rollingByTime(df: DataFrame, key: Column, ts: Column,
-      value: Column, seconds: Long, prefix: String = "t"): DataFrame = {
-    val frame = Window.partitionBy(key).orderBy(unix_micros(ts))
-      .rangeBetween(-seconds * 1000000L, 0)
-    df.withColumn(s"${prefix}_cnt", count(value).over(frame))
-      .withColumn(s"${prefix}_mean", avg(value).over(frame))
-      .withColumn(s"${prefix}_std", stddev_samp(value).over(frame))
-      .withColumn(s"${prefix}_min", min(value).over(frame))
-      .withColumn(s"${prefix}_max", max(value).over(frame))
   }
 
   /** Rolling z-score anomaly flag: |value − rolling mean| > k · rolling

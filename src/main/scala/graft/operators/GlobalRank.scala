@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   *     reused across the branches that need it); split QUALITY only
   *     affects load balance, never rank values, because any
   *     deterministic monotone bucketing is exact — callers with domain
-  *     knowledge can pass literal splits instead ([[splitPoints]]
-  *     samples them eagerly for that path);
+  *     knowledge can pass literal splits instead;
   *  2. assign each row a bucket with a deterministic monotone expression
   *     over the primary column ([[bucketExpr]]; rows that tie on the
   *     primary column always share a bucket, so rank ties never straddle
@@ -64,15 +63,6 @@ object GlobalRank {
     while (df.columns.contains(n)) { i += 1; n = base + i }
     n
   }
-
-  /** Sampled ascending split points for `primaryCol` — the one driver
-    * action. Callers ranking several monotone derivatives of the same
-    * column (e.g. a rank on x and a dense rank on round(x)) can reuse one
-    * split array for all of them. */
-  def splitPoints(df: DataFrame, primaryCol: String, buckets: Int): Array[Double] =
-    df.stat
-      .approxQuantile(primaryCol, (1 until buckets).map(_.toDouble / buckets).toArray, 0.001)
-      .distinct.sorted
 
   /** Sampled ascending split points for a STRING `primaryCol` (strings
     * have no `percentile_approx`, so the sample is explicit): bottom-k of

@@ -844,8 +844,8 @@ object TrainingData {
     * table, mean pooling, sign readout — with a closed-form synthetic
     * weight sheet `w(feat) = md5_32(feat) % 2001 − 1000` standing in
     * for trained weights (md5-derived so the oracle computes the same
-    * table; a production model swaps in a broadcast weight array, the
-    * loaded-BPE-table discipline, with identical plan shape). All
+    * table; a production model swaps in a broadcast weight array, with
+    * identical plan shape). All
     * arithmetic on the exact integer milli-lattice; the mean is two
     * chained float divisions per row, operand-identical in the oracle,
     * rounded at 6 dp. Scale shape: a pure per-document map —

@@ -100,17 +100,6 @@ object Ingest {
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
-  /** ORC read (columnar interchange with Hive-era warehouses). Schema is
-    * taken from the file footers like parquet; pass one to enforce a
-    * contract instead. Spark's vectorized ORC reader applies the same
-    * pushdown/pruning as parquet. */
-  def readOrc(spark: SparkSession, path: String,
-      schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read
-    schema.foreach(r.schema)
-    r.orc(path)
-  }
-
   /** Partitioned ORC sink (same layout rationale as [[writePartitioned]]). */
   def writeOrcPartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String]): Unit =

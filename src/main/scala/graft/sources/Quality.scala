@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   * every rule's violations in a single pass however many rules are
   * declared, which is the only shape that works when the table is 100 TB
   * (N passes of a rule-per-scan validator would be N full reads).
-  * Key-level rules (uniqueness) are their own aggregate by nature.
   */
 object Quality {
 
@@ -55,17 +54,4 @@ object Quality {
         "rule", "violations")
       .select(col("rule"), col("violations"), col("_total").as("total"))
   }
-
-  /** Duplicate-key count for a declared unique key (0 = key holds). */
-  def duplicateKeys(df: DataFrame, keyCols: Seq[String]): Long =
-    df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).count()
-
-  /** Orphan count for a declared foreign key (0 = referential integrity
-    * holds); the parent side is reduced to its key column before the
-    * anti-join, so it broadcasts when small. */
-  def orphanedKeys(child: DataFrame, childKey: String,
-      parent: DataFrame, parentKey: String): Long =
-    child.join(parent.select(col(parentKey)).distinct(),
-      child(childKey) === parent(parentKey), "left_anti").count()
 }

@@ -44,9 +44,8 @@ package graft.sources
   *
   * Scale shape: `robots.txt` bodies are small and per-HOST, so the
   * compiled rule set rides a broadcast (or, as here, a per-executor
-  * memo keyed by the robots text — the [[graft.functions.Bpe]]
-  * loaded-table discipline): evaluation is a handful of prefix/regex
-  * probes per page, never a shuffle.
+  * memo keyed by the robots text): evaluation is a handful of
+  * prefix/regex probes per page, never a shuffle.
   */
 object Robots {
 
@@ -192,9 +191,8 @@ object Robots {
   }
 
   /** Per-executor compiled-rules memo — robots bodies repeat per host,
-    * so each executor parses each distinct body once (the loaded-BPE-
-    * table discipline). SIZE-BOUNDED: a large crawl sees millions of
-    * distinct hosts over a JVM's lifetime, and an unbounded map would
+    * so each executor parses each distinct body once. SIZE-BOUNDED: a
+    * large crawl sees millions of distinct hosts over a JVM's lifetime, and an unbounded map would
     * retain every robots body string forever. When the cap is hit the
     * map is cleared wholesale — crude but lock-free on the hot path
     * (no LRU bookkeeping per lookup); the working set re-parses in

@@ -2,17 +2,18 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-/** Structured Streaming twins of the batch time-series operators
-  * (graft.operators.TimeSeries / SURVEY.md §2.9). Each takes a *streaming*
-  * events DataFrame (schema: event_id, ts timestamp, user_id, event_type,
-  * value) and returns a streaming result with identical semantics over a
-  * bounded input — the batch forms are what the oracle judges; these are
-  * the `readStream` deployment path.
+/** Structured Streaming entry points: the live file sources for events
+  * and documents, the streaming twins of the corpus and media curation
+  * pipelines (annotation and incremental dedup over a generation-per-batch
+  * signature store), and the three event-stream operators `graft.Demo`
+  * drives — hourly tumbling counts, stateful sessions and a stateful
+  * as-of join. The batch forms are what the oracle judges; these are the
+  * `readStream` deployment path.
   *
   * Watermarks bound state: an aggregation over 1-hour windows with a
   * 1-day watermark keeps ≤ ~25 open windows per key on the store, however
@@ -89,113 +90,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("c"), round(sum(col("value")), 2).as("s"))
       .select(col("w.start").as("wstart"), col("event_type"), col("c"), col("s"))
 
-  /** Streaming approximate distinct users per hourly window on the
-    * hand-built HLL aggregate (functions/Hll): the state store holds ONE
-    * 4 KB register buffer per open window — bounded however many
-    * distinct users flow through — where exact streaming countDistinct
-    * would have to hold every user id in state. The buffer serializes
-    * through TypedImperativeAggregate's serialize/deserialize, so
-    * checkpoint/restore and cross-batch merge are the same lossless
-    * register-max union the batch path uses. */
-  def approxDistinctPerWindow(events: DataFrame,
-      watermark: String = "1 day"): DataFrame = {
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(graft.functions.Hll.hll(col("user_id")).as("approx_users"))
-      .select(col("w.start").as("wstart"), col("approx_users"))
-  }
-
-  /** Per-window Count-Min frequency sketches on the stream: one 32 KB
-    * counter buffer per open window in the state store (exact per-key
-    * streaming counts would hold every key), emitted as a BINARY column
-    * — the persisted sketch table that [[graft.operators.SkewJoin
-    * .hotKeysBySketch]]-style probes answer later without touching the
-    * stream's data again. Counter-add merge is lossless across batches
-    * and checkpoint/restore (same TypedImperativeAggregate
-    * serialize path as the HLL twin above). */
-  def keyFrequencySketchPerWindow(events: DataFrame,
-      watermark: String = "1 day"): DataFrame = {
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(graft.functions.CountMin.cmsSketch(col("user_id")).as("sk"))
-      .select(col("w.start").as("wstart"), col("sk"))
-  }
-
-  /** Per-window value-distribution sketches on the stream: one ~33 KB
-    * bucket buffer per open window in the state store (exact streaming
-    * quantiles would hold every value), emitted as a BINARY column —
-    * the persisted distribution table that
-    * `graft_quantile_estimate(sk, q)` probes later for any quantile
-    * over any window range without re-touching stream data. Bucket-add
-    * merge is lossless across batches and checkpoint/restore (same
-    * TypedImperativeAggregate serialize path as the HLL/CMS twins
-    * above), and the sketch is deterministic, so stream and batch
-    * sketches of the same data are bit-identical. */
-  def valueDistributionSketchPerWindow(events: DataFrame,
-      watermark: String = "1 day"): DataFrame = {
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(graft.functions.QuantileSketch.quantileSketch(col("value")).as("sk"))
-      .select(col("w.start").as("wstart"), col("sk"))
-  }
-
-  /** Per-window KMV key samples on the stream: one ≤8 KB bottom-k
-    * buffer per open window, emitted as a BINARY column — the persisted
-    * sample table that later answers CROSS-window overlap questions
-    * ("how many of this hour's users are yesterday's users":
-    * `graft_kmv_jaccard` between any two stored rows) that the HLL
-    * twin's registers cannot. Keep-k-smallest merge is lossless across
-    * batches and checkpoint/restore, and deterministic, so stream and
-    * batch sketches of the same data are bit-identical. */
-  def keySampleSketchPerWindow(events: DataFrame,
-      watermark: String = "1 day"): DataFrame = {
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(graft.functions.Kmv.kmvSketch(col("user_id")).as("sk"))
-      .select(col("w.start").as("wstart"), col("sk"))
-  }
-
-  /** Per-window Misra-Gries heavy-hitter summaries on the stream: one
-    * ≤K-entry (key, counter) buffer per open window in the state store
-    * (exact streaming top-k would hold every key), emitted as a BINARY
-    * column — the persisted frequent-items table later probed via
-    * `graft_mg_estimate`/`graft_mg_error` without re-touching stream
-    * data. The fifth sketch twin (HLL/CMS/quantile/KMV above): in the
-    * EXACT regime (distinct keys per window ≤ K = 64) no truncation
-    * fires at any stage, so the streamed sketch bytes EQUAL the batch
-    * aggregate's regardless of batch boundaries or merge order; beyond
-    * it, estimates stay within the sketch's carried ±err band (the
-    * PODS'12 mergeable-summaries contract the batch side documents). */
-  def heavyHitterSketchPerWindow(events: DataFrame,
-      watermark: String = "1 day"): DataFrame = {
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(graft.functions.MisraGries.mgSketch(col("event_type")).as("sk"))
-      .select(col("w.start").as("wstart"), col("sk"))
-  }
-
-  /** Twin of TimeSeries.streamSliding: 60-minute windows sliding every 30
-    * minutes — window() assigns each event to both overlapping windows,
-    * which is exactly the explode-candidates plan the batch form uses. */
-  def sliding(events: DataFrame, watermark: String = "1 day"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "60 minutes", "30 minutes").as("w"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("w.start").as("wstart"), col("c"))
-
-  /** Twin of TimeSeries.streamSession: 30-minute-gap sessions per user via
-    * the native session_window state store. */
-  def sessions(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "1 day"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), col("w.start").as("st"), col("w.end").as("en"), col("n"))
-
-  /** One session interval in per-key state. The longs are unit-agnostic
-    * epoch offsets — [[statefulSessions]] stores millis,
-    * [[statefulSessionStats]] micros (its judged batch twin measures
-    * spans at µs grain). */
+  /** One session interval in per-key state, in epoch millis. */
   case class SessionSpan(start: Long, end: Long, n: Long)
 
   /** All of a key's not-yet-final sessions (watermark hasn't passed
@@ -252,834 +147,6 @@ object StreamingOps {
       }
   }
 
-  /** Per-user session-ROLLUP state: integer counters over the sessions
-    * the watermark has already sealed, plus the open spans (µs bounds —
-    * [[SessionSpan]]'s longs are unit-agnostic) still extensible by
-    * admissible events. */
-  case class SessionStatsState(nSessions: Long, nEvents: Long, maxN: Long,
-      engagedUs: Long, maxSpanUs: Long, open: Seq[SessionSpan])
-
-  /** One finalized per-user rollup — the judged `ts_session_stats`
-    * row shape. */
-  case class SessionStatsRow(user_id: Long, n_sessions: Long,
-      n_events: Long, max_session_events: Long, engaged_us: Long,
-      max_span_us: Long)
-
-  /** Streaming twin of the judged `ts_session_stats` per-user session
-    * rollup (session count, event count, max session size, engaged
-    * time, max span — 30-min inactivity gap). Sessions build by
-    * INTERVAL MERGE at µs precision (same spans machinery as
-    * [[statefulSessions]], same strict-`>`-gap rule as the batch
-    * `Sessionize`), which is order-insensitive — shuffled multi-batch
-    * delivery needs no fold-order buffer. A span folds into the
-    * counters once the watermark seals it (`end + gap ≤ wm`: any
-    * extender would be inadmissible), and the user's rollup row EMITS
-    * (append mode) when their last open span seals — on a bounded
-    * replay whose final watermark passes everything, that is exactly
-    * one row per user, bit-identical to the batch query (all-integer
-    * arithmetic, StreamingOpsSpec proves it on shuffled delivery). On
-    * an unbounded stream the rollup closes per ACTIVITY EPOCH (a user
-    * quiet past the watermark emits and resets; returning activity
-    * starts a fresh epoch) — the natural watermark-bounded-state
-    * semantics; downstream lifetime stats re-aggregate epochs. */
-  def statefulSessionStats(events: DataFrame, gapSeconds: Long = 1800,
-      watermark: String = "1 day"): Dataset[SessionStatsRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapUs = gapSeconds * 1000000L
-    events.select(col("user_id").cast("long").as("user_id"), col("ts"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionStatsState, SessionStatsRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp)],
-            state: GroupState[SessionStatsState]) =>
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          val st = state.getOption.getOrElse(
-            SessionStatsState(0L, 0L, 0L, 0L, 0L, Nil))
-          val incoming = rows.map { r =>
-            val us = micros(r._2); SessionSpan(us, us, 1L) }.toSeq
-          val merged = mergeSpans(st.open ++ incoming, gapUs)
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // sealed: an extender would need ts within gap of the span
-          // end, but every such instant is ≤ wm and the late filter
-          // drops ts ≤ watermark — extension impossible
-          val (ripe, open) = merged.partition(_.end + gapUs <= wmUs)
-          var nS = st.nSessions; var nE = st.nEvents; var mN = st.maxN
-          var eng = st.engagedUs; var mSp = st.maxSpanUs
-          ripe.foreach { s =>
-            nS += 1; nE += s.n; mN = math.max(mN, s.n)
-            eng += s.end - s.start; mSp = math.max(mSp, s.end - s.start)
-          }
-          if (open.nonEmpty) {
-            state.update(SessionStatsState(nS, nE, mN, eng, mSp, open))
-            // fire once the watermark can seal the earliest open span;
-            // clamped beyond the current watermark (Spark requires it)
-            state.setTimeoutTimestamp(math.max(
-              Math.floorDiv(open.map(_.end).min + gapUs, 1000L) + 1L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          } else if (nE > 0L) {
-            // epoch closed: every span sealed — emit the final rollup
-            state.remove()
-            Iterator.single(SessionStatsRow(user, nS, nE, mN, eng, mSp))
-          } else { state.remove(); Iterator.empty }
-      }
-  }
-
-  /** One OPEN day's OHLC accumulator: endpoint picks carry their µs
-    * timestamps ((openUs, openV) = value at the smallest ts seen so
-    * far, (closeUs, closeV) at the largest), extrema and count are
-    * plain running reductions — every field updates commutatively, so
-    * shuffled multi-batch delivery needs no fold-order buffer at all. */
-  case class OhlcDay(openUs: Long, openV: Double, highV: Double,
-      lowV: Double, closeUs: Long, closeV: Double, n: Long)
-
-  /** Per-user OHLC state: the OPEN UTC days only (epoch day →
-    * accumulator) — bounded by the calendar span the watermark still
-    * admits, never by event volume. */
-  case class OhlcState(days: Map[Long, OhlcDay])
-
-  /** One sealed daily candle — the judged `ts_ohlc_resample` row
-    * shape (`day` = UTC midnight). */
-  case class OhlcRow(user_id: Long, day: Timestamp, open_v: Double,
-      high_v: Double, low_v: Double, close_v: Double, n: Long)
-
-  /** Streaming twin of the judged `ts_ohlc_resample` daily
-    * open/high/low/close resample. Events fold into per-(user, UTC day)
-    * accumulators; a day's candle EMITS (append mode) once the
-    * watermark seals the day — the last admissible instant of day d is
-    * (d+1)·86400e6 − 1 µs, and Spark's late filter drops `ts ≤ wm`, so
-    * `nextMidnightUs − 1 ≤ wmUs` means no admissible event can touch
-    * the candle again. Every update is COMMUTATIVE (min/max picks with
-    * their timestamps, extrema, a count), so out-of-order delivery
-    * folds identically to in-order — emitted candles are bit-identical
-    * to the batch groupBy (same `round` HALF_UP at 2 dp; min_by/max_by
-    * tie-break never fires because (user, ts) is unique in the judged
-    * data — the twin keeps the FIRST-seen value on an exact-µs tie,
-    * which is the only divergence surface, documented here). State per
-    * user is O(open days), the same horizon bound as the sibling
-    * twins. */
-  def statefulOhlc(events: DataFrame,
-      watermark: String = "1 day"): Dataset[OhlcRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val DayUs = 86400000000L
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("value").cast("double").as("value"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OhlcState, OhlcRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Double)],
-            state: GroupState[OhlcState]) =>
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          def round2(v: Double): Double =
-            java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue()
-          var days = state.getOption.map(_.days).getOrElse(Map.empty)
-          rows.foreach { case (_, ts, v) =>
-            val us = micros(ts)
-            val day = Math.floorDiv(us, DayUs)
-            val d = days.get(day) match {
-              case None => OhlcDay(us, v, v, v, us, v, 1L)
-              case Some(a) => OhlcDay(
-                if (us < a.openUs) us else a.openUs,
-                if (us < a.openUs) v else a.openV,
-                math.max(a.highV, v), math.min(a.lowV, v),
-                if (us > a.closeUs) us else a.closeUs,
-                if (us > a.closeUs) v else a.closeV,
-                a.n + 1L)
-            }
-            days = days.updated(day, d)
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, open) = days.partition { case (day, _) =>
-            (day + 1L) * DayUs - 1L <= wmUs
-          }
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(OhlcState(open))
-            // fire when the earliest open day can seal (its next
-            // midnight, in ms, clamped beyond the current watermark)
-            state.setTimeoutTimestamp(math.max(
-              (open.keys.min + 1L) * 86400000L,
-              state.getCurrentWatermarkMs() + 1L))
-          }
-          ripe.toSeq.sortBy(_._1).iterator.map { case (day, a) =>
-            OhlcRow(user, new Timestamp(day * 86400000L), round2(a.openV),
-              round2(a.highV), round2(a.lowV), round2(a.closeV), a.n)
-          }
-      }
-  }
-
-  /** Per-user gap-fill state: open (not yet sealed) day totals in exact
-    * integer cents, plus the last ACTIVE day already emitted — the
-    * anchor the next emission's gap run starts after. Bounded by the
-    * watermark's open-day horizon. */
-  case class GapFillState(days: Map[Long, Long], lastActive: Option[Long])
-
-  /** One spine row — the judged `ts_gap_fill` shape (`filled` marks a
-    * generated 0-row for a calendar day with no activity). */
-  case class GapFillRow(user_id: Long, day: Timestamp, v: Double,
-      filled: Boolean)
-
-  /** Streaming twin of the judged `ts_gap_fill` dense daily spine:
-    * per-user daily totals emitted on a gap-free calendar grid, missing
-    * days materializing as flagged 0-rows. Totals fold as exact integer
-    * CENTS (commutative — no fold-order buffer); a day's row emits once
-    * the watermark seals it, and because an ACTIVE day seals only after
-    * every earlier day is sealed too, the gap 0-rows between the
-    * previous emitted active day and the newly sealed one are emitted
-    * in the same pass — the spine grows in order, append-mode. The
-    * batch spine runs min→max ACTIVE day, so trailing quiet days are
-    * never emitted (a gap row exists only once a LATER active day
-    * seals), matching the batch semantics exactly on a bounded replay.
-    * The emitted total is cents/100: the true daily sum of 2-dp data is
-    * a cent multiple, so the batch `round(sum(value), 2)` lands on the
-    * identical double (the win_range_numeric sum-rounding argument) —
-    * StreamingOpsSpec proves bit-identity on shuffled delivery. */
-  def statefulGapFill(events: DataFrame,
-      watermark: String = "1 day"): Dataset[GapFillRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val DayUs = 86400000000L
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("value").cast("double").as("value"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[GapFillState, GapFillRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Double)],
-            state: GroupState[GapFillState]) =>
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          val st = state.getOption.getOrElse(GapFillState(Map.empty, None))
-          var days = st.days
-          rows.foreach { case (_, ts, v) =>
-            val day = Math.floorDiv(micros(ts), DayUs)
-            val c = Math.round(v * 100)
-            days = days.updated(day, days.getOrElse(day, 0L) + c)
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, open) = days.partition { case (day, _) =>
-            (day + 1L) * DayUs - 1L <= wmUs
-          }
-          var lastActive = st.lastActive
-          val out = ripe.toSeq.sortBy(_._1).flatMap { case (day, cents) =>
-            val gaps = lastActive match {
-              case Some(prev) => (prev + 1) until day
-              case None => Seq.empty[Long]
-            }
-            lastActive = Some(day)
-            gaps.map(g =>
-              GapFillRow(user, new Timestamp(g * 86400000L), 0.0, true)) :+
-              GapFillRow(user, new Timestamp(day * 86400000L),
-                cents.toDouble / 100.0, false)
-          }
-          // lastActive is the permanent spine anchor: a returning user's
-          // quiet days must still materialize as gap rows, so the
-          // (one-Option) record survives even when no day is open —
-          // the batch spine's min-day memory, not leaked state
-          if (open.isEmpty && out.isEmpty && st.days.isEmpty
-              && st.lastActive.isEmpty) state.remove()
-          else {
-            state.update(GapFillState(open, lastActive))
-            if (open.nonEmpty)
-              state.setTimeoutTimestamp(math.max(
-                (open.keys.min + 1L) * 86400000L,
-                state.getCurrentWatermarkMs() + 1L))
-          }
-          out.iterator
-      }
-  }
-
-  /** Per-user changepoint state: daily totals in exact integer CENTS
-    * (epoch day → cents) + the latest event time. Bounded by the
-    * CALENDAR of the activity epoch, not by event volume — the same
-    * day-collapse that makes the batch query's split search O(days). */
-  case class ChangepointState(days: Map[Long, Long], lastUs: Long)
-
-  /** One finalized changepoint — the judged `ts_changepoint` row shape
-    * (`split_day_us` = UTC-midnight µs of the winning split day). */
-  case class ChangepointRow(user_id: Long, split_day_us: Long,
-      i_days: Long, n_days: Long, shift_num: Double)
-
-  /** Streaming twin of the judged `ts_changepoint` single-change-point
-    * detector. Events fold into per-(user, UTC day) totals kept in
-    * exact integer cents — an order-insensitive sum, so shuffled
-    * multi-batch delivery needs no fold-order buffer — and the
-    * exhaustive split search runs ONCE, when the user's series closes
-    * (no event for `idleSeconds` past the watermark: any extender
-    * would change the argmax, so a global argmax can only emit at
-    * epoch close — the append-mode analogue of
-    * [[statefulSessionStats]]' rollup seal). On a bounded replay with
-    * `idleSeconds` beyond the data span and a final watermark past
-    * everything, that is exactly one row per multi-day user,
-    * bit-identical to the batch query: `shift_num` is the same
-    * cent-lattice numerator |csᵢ·(n−i) − (tot−csᵢ)·i| computed in
-    * integer cents (the batch double arithmetic rounds to the
-    * identical cent — its documented design), and the (shift desc,
-    * day desc) argmax is replayed on the same ≥0.007-separated
-    * ranking. Single-day users emit nothing, exactly as the batch
-    * `i < n` filter drops them. */
-  def statefulChangepoint(events: DataFrame, idleSeconds: Long = 90L * 86400,
-      watermark: String = "1 day"): Dataset[ChangepointRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val idleUs = idleSeconds * 1000000L
-    val dayUs = 86400000000L
-    events.select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("value").cast("double").as("value"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[ChangepointState, ChangepointRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Double)],
-            state: GroupState[ChangepointState]) =>
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          val st0 = state.getOption.getOrElse(ChangepointState(Map.empty, Long.MinValue))
-          var days = st0.days; var lastUs = st0.lastUs
-          rows.foreach { r =>
-            val us = micros(r._2)
-            val day = Math.floorDiv(us, dayUs)
-            // 2-dp data → exact cents; Math.round is the exact lattice
-            // snap (the batch double sum rounds to the same cent)
-            days = days.updated(day, days.getOrElse(day, 0L) + Math.round(r._3 * 100.0))
-            if (us > lastUs) lastUs = us
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          if (lastUs != Long.MinValue && lastUs + idleUs <= wmUs) {
-            // series closed: replay the batch split search exactly
-            state.remove()
-            val ds = days.toSeq.sortBy(_._1)
-            val n = ds.size
-            if (n < 2) Iterator.empty
-            else {
-              val tot = ds.map(_._2).sum
-              var cs = 0L
-              var best: ChangepointRow = null
-              var bestShift = Double.NegativeInfinity
-              var i = 0
-              while (i < n - 1) {
-                cs += ds(i)._2
-                val iL = (i + 1).toLong
-                // the float RANKING key, exactly as the batch window
-                // computes it (top-2 gap ≥ 0.007 at every SF — argmax
-                // is float-stable); ties go to the LATER day, so >= on
-                // an ascending-day scan replays (shift desc, day desc)
-                val shift = math.abs(cs / 100.0 / iL - (tot - cs) / 100.0 / (n - iL))
-                if (shift >= bestShift) {
-                  bestShift = shift
-                  val numCents = math.abs(cs * (n - iL) - (tot - cs) * iL)
-                  best = ChangepointRow(user, ds(i)._1 * dayUs, iL, n.toLong,
-                    numCents / 100.0)
-                }
-                i += 1
-              }
-              Iterator.single(best)
-            }
-          } else {
-            if (lastUs != Long.MinValue) {
-              state.update(ChangepointState(days, lastUs))
-              state.setTimeoutTimestamp(math.max(
-                Math.floorDiv(lastUs + idleUs, 1000L) + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            } else state.remove()
-            Iterator.empty
-          }
-      }
-  }
-
-  /** Streaming funnel state for one user (epoch millis;
-    * `Long.MaxValue` = stage not reached). The pending pools hold the
-    * only events whose eligibility can still CHANGE: a stage-k event
-    * with ts ≤ the stage-(k−1) minimum becomes eligible if an
-    * admissible late event lowers that minimum — and admissible means
-    * ts ≥ watermark, so pools are pruned to (wm, min] each batch and
-    * state stays bounded by the watermark horizon, not the stream. */
-  case class FunnelState(minView: Long, pendingClicks: Seq[Long],
-      minClick: Long, pendingPurchases: Seq[Long], minPurchase: Long)
-
-  /** Current funnel progress for one user (Update-mode row). */
-  case class FunnelRow(user_id: Long, t_view: Option[Timestamp],
-      t_click: Option[Timestamp], t_purchase: Option[Timestamp])
-
-  /** Twin of Analytics.tsFunnel: per-user ordered view → click →
-    * purchase funnel as arbitrary stateful processing
-    * (mapGroupsWithState, Update mode — each batch re-emits a user's
-    * current stage timestamps; downstream keeps the latest row per
-    * user).
-    *
-    * Correctness under reordering: each stage minimum only ever
-    * DECREASES, and a decrease can only be caused by an event with
-    * ts ≥ watermark. So a stage-k candidate below the stage-(k−1)
-    * minimum is kept only while its ts > watermark (the pending pool);
-    * once the watermark passes it, no admissible earlier-stage event
-    * can slide beneath it and it is pruned. Per-user state is three
-    * longs plus pools bounded by the user's events inside the
-    * watermark horizon — the structure that lets this run forever. */
-  def statefulFunnel(events: DataFrame,
-      watermark: String = "1 day"): Dataset[FunnelRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val NoTs = Long.MaxValue
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("event_type"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, String)]
-      .groupByKey(_._1)
-      // EventTimeTimeout (no timeout is ever SET) solely so Spark drops
-      // rows older than the watermark before the function runs — under
-      // NoTimeout late rows are delivered, and a late view below an
-      // already-pruned pending click would lower minView without the
-      // click there to promote, breaking the pruning invariant
-      .mapGroupsWithState[FunnelState, FunnelRow](
-        GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, String)],
-            state: GroupState[FunnelState]) =>
-          val s0 = state.getOption.getOrElse(
-            FunnelState(NoTs, Nil, NoTs, Nil, NoTs))
-          var minView = s0.minView
-          var clicks = s0.pendingClicks
-          var minClick = s0.minClick
-          var purchases = s0.pendingPurchases
-          var minPurchase = s0.minPurchase
-          rows.foreach { case (_, ts, et) =>
-            val t = ts.getTime
-            et match {
-              case "view" => minView = math.min(minView, t)
-              case "click" => clicks = t +: clicks
-              case "purchase" => purchases = t +: purchases
-              case _ => ()
-            }
-          }
-          // promote candidates made eligible by the (possibly lowered)
-          // previous-stage minimum; minimums are monotone-decreasing so
-          // promotion never has to be undone
-          val (okC, pendC) = clicks.partition(_ > minView)
-          if (okC.nonEmpty) minClick = math.min(minClick, okC.min)
-          val (okP, pendP) = purchases.partition(_ > minClick)
-          if (okP.nonEmpty) minPurchase = math.min(minPurchase, okP.min)
-          // a pending candidate at or below the watermark can never be
-          // promoted (an enabling earlier-stage event would be late)
-          val wm = state.getCurrentWatermarkMs()
-          state.update(FunnelState(minView, pendC.filter(_ > wm), minClick,
-            pendP.filter(_ > wm), minPurchase))
-          def opt(t: Long): Option[Timestamp] =
-            if (t == NoTs) None else Some(new Timestamp(t))
-          FunnelRow(user, opt(minView), opt(minClick), opt(minPurchase))
-      }
-  }
-
-  /** Streaming EWMA state for one user: the smoothed value over every
-    * event already folded (NaN = none yet), the event time of the last
-    * folded event in exact MICROSECONDS (the events data carries µs
-    * timestamps — keying the fold on millis would silently drop the
-    * second of two same-millisecond events and truncate emitted ts),
-    * and the watermark-bounded buffer of not-yet-ripe (µs, value)
-    * events. */
-  case class EwmaState(s: Double, lastTs: Long, pending: Seq[(Long, Double)])
-
-  /** One smoothed sample (Append-mode row). */
-  case class EwmaPoint(user_id: Long, ts: Timestamp, value: Double, ewma: Double)
-
-  /** Streaming twin of the TimeSeries.tsEwma recurrence, per event: the
-    * order-sensitive s_i = α·x_i + (1−α)·s_{i−1} folded as arbitrary
-    * stateful processing. Order sensitivity is THE streaming hazard
-    * here — micro-batches deliver a group's rows unordered and late
-    * rows arrive across batches — so events buffer in state until the
-    * WATERMARK passes them, then fold in exact event-time order and
-    * emit (Append mode). An event-time timeout at the earliest pending
-    * timestamp guarantees ripe rows flush even if the user goes quiet.
-    * Per-user state is two scalars plus the pending buffer, bounded by
-    * the watermark horizon — never by stream length.
-    *
-    * Emitted values are bit-identical to folding the same events in
-    * batch with the same α: the recurrence runs in one deterministic
-    * order regardless of batch boundaries (StreamingOpsSpec proves
-    * equality under shuffled multi-batch delivery). */
-  def statefulEwma(events: DataFrame, alpha: Double = 1.0 / 3,
-      watermark: String = "1 day"): Dataset[EwmaPoint] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("value").cast("double").as("value"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[EwmaState, EwmaPoint](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Double)],
-            state: GroupState[EwmaState]) =>
-          val st = state.getOption.getOrElse(EwmaState(Double.NaN, Long.MinValue, Nil))
-          // exact µs: getTime gives ms and getNanos the FULL sub-second
-          // nanos, so the sub-ms remainder is (nanos/1000) % 1000
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          val pending = st.pending ++ rows.map(r => (micros(r._2), r._3))
-          val wm = state.getCurrentWatermarkMs()
-          // watermark has ms precision; an event is ripe when its exact
-          // µs instant is at or before the watermark instant
-          val (ripe, keep) = pending.partition(_._1 <= wm * 1000L)
-          var s = st.s
-          var last = st.lastTs
-          val out = ripe.sortBy(_._1).flatMap { case (us, x) =>
-            // duplicate-instant guard on the µs value; (user_id, ts) is
-            // unique upstream, and an in-horizon row older than the fold
-            // point cannot occur (it would have been ripe earlier)
-            if (us <= last) None
-            else {
-              s = if (s.isNaN) x else alpha * x + (1 - alpha) * s
-              last = us
-              // rebuild the timestamp from µs so the emitted ts is
-              // bit-identical to the batch path's, not ms-truncated
-              val ts = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-              ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-              Some(EwmaPoint(user, ts, x, s))
-            }
-          }
-          state.update(EwmaState(s, last, keep))
-          // pending rows are all > wm·1000 µs, so the ceiling-to-ms is
-          // admissible (> wm); it fires a flush when the watermark
-          // passes the buffer even if the user never produces again
-          if (keep.nonEmpty)
-            state.setTimeoutTimestamp(Math.floorDiv(keep.map(_._1).min + 999L, 1000L))
-          out.iterator
-      }
-  }
-
-  /** Streaming rolling-zscore state for one user: the last ≤ maxWindow
-    * folded values in fold order (the frame the next event's µ/σ read),
-    * the (µs, event_id) fold point — the guard against re-folding a
-    * boundary duplicate from an at-least-once source (same hazard
-    * statefulEwma guards with its `us <= last` check) — and the
-    * watermark-bounded pending buffer of not-yet-ripe
-    * (µs, event_id, value) rows. */
-  case class ZscoreState(win: Seq[Double], lastUs: Long, lastId: Long,
-      pending: Seq[(Long, Long, Double)])
-
-  /** One anomaly (Append-mode row) — the same shape the judged batch
-    * query emits. */
-  case class AnomalyRow(event_id: Long, user_id: Long, ts: Timestamp,
-      value: Double, z: Double)
-
-  /** Streaming twin of the judged `ts_anomaly_zscore` rolling-window
-    * anomaly detector: z = (x − µ)/σ over the PREVIOUS ≤ 20 events of
-    * the same user (≥ 10 required, σ > 1e-9), |z| > 2 emits. Like
-    * [[statefulEwma]], the frame fold is order-sensitive, so rows
-    * buffer in state until the watermark ripens them, then fold in
-    * exact (event-time µs, event_id) order — per-user state is the
-    * ≤ 20-value frame plus the watermark-bounded buffer, never the
-    * stream.
-    *
-    * Emitted anomalies are BIT-IDENTICAL to the batch window query on
-    * the same rows (StreamingOpsSpec proves it under shuffled
-    * multi-batch delivery): µ replays Spark's Sum/Count fold in frame
-    * order, σ replays CentralMomentAgg's Welford recurrence (delta/
-    * deltaN/m2) step for step, and the 2-dp rounding replays `round`'s
-    * HALF_UP-on-BigDecimal.valueOf semantics. */
-  def statefulAnomalyZscore(events: DataFrame, minWindow: Int = 10,
-      maxWindow: Int = 20, cutoff: Double = 2.0,
-      watermark: String = "1 day"): Dataset[AnomalyRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("event_id").cast("long").as("event_id"),
-        col("value").cast("double").as("value"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[ZscoreState, AnomalyRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Long, Double)],
-            state: GroupState[ZscoreState]) =>
-          val st = state.getOption.getOrElse(
-            ZscoreState(Vector.empty, Long.MinValue, Long.MinValue, Nil))
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          // .distinct collapses same-batch redeliveries of one event
-          // (at-least-once sources can emit a row twice INSIDE a batch,
-          // where the cross-batch fold-point guard cannot see it)
-          val pending =
-            (st.pending ++ rows.map(r => (micros(r._2), r._3, r._4))).distinct
-          val wm = state.getCurrentWatermarkMs()
-          // STRICTLY below the watermark instant: Spark's late filter
-          // drops `ts <= watermark`, so an instant is permanently
-          // SEALED — no further arrival possible — exactly when the
-          // watermark strictly passes it. Folding only sealed instants
-          // guarantees every admissible same-µs straggler (distinct
-          // smaller event_id, delivered batches later) is present
-          // before its instant folds, so the (ts, event_id) fold order
-          // is exact; the pre-fix `<=` folded the boundary instant one
-          // batch early, while its arrival set was still open.
-          val (ripe, keep) = pending.partition(_._1 < wm * 1000L)
-          var win = st.win.toVector
-          var lastUs = st.lastUs
-          var lastId = st.lastId
-          def round2(v: Double): Double =
-            java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue()
-          val out = ripe.sortBy(r => (r._1, r._2)).filter { case (us, id, _) =>
-            // fold-point guard against re-folding a cross-batch
-            // redelivery. With strict-< ripeness everything already
-            // folded sits strictly below the watermark, so Spark's own
-            // late filter drops redeliveries first — this is the
-            // belt-and-braces backstop, no longer load-bearing for
-            // distinct same-instant events (those ripen together above)
-            us > lastUs || (us == lastUs && id > lastId)
-          }.flatMap { case (us, id, x) =>
-            val emit = if (win.size >= minWindow) {
-              val n = win.size
-              val mu = win.sum / n
-              // Welford, exactly as Spark's CentralMomentAgg updates:
-              // delta = x − avg; avg += delta/n'; m2 += delta·(x − avg')
-              var avg = 0.0; var m2 = 0.0; var i = 0
-              win.foreach { v =>
-                i += 1; val d = v - avg; avg += d / i; m2 += d * (v - avg)
-              }
-              val sd = math.sqrt(m2 / (n - 1))
-              if (sd > 1e-9) {
-                val z = (x - mu) / sd
-                if (math.abs(z) > cutoff) {
-                  val ts = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-                  ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-                  Some(AnomalyRow(id, user, ts, round2(x), round2(z)))
-                } else None
-              } else None
-            } else None
-            win = (win :+ x).takeRight(maxWindow)
-            lastUs = us
-            lastId = id
-            emit
-          }
-          state.update(ZscoreState(win, lastUs, lastId, keep))
-          if (keep.nonEmpty)
-            // strict-< ripeness means a pending row can sit exactly AT
-            // the watermark instant, where its ceiling-to-ms equals wm —
-            // clamp to wm+1 (event-time timeouts must be beyond the
-            // watermark); the flush still fires as soon as wm moves
-            state.setTimeoutTimestamp(Math.max(
-              Math.floorDiv(keep.map(_._1).min + 999L, 1000L), wm + 1L))
-          out.iterator
-      }
-  }
-
-  /** Streaming rolling-RMSSD state for one user: the previous sample's
-    * cents (the next diff's left operand), the last ≤ window−1 diffs in
-    * fold order (the frame the next sample's RMSSD reads), the
-    * (µs, event_id) fold point, and the watermark-bounded pending
-    * buffer. All-frame arithmetic is exact integer — the only float
-    * step is the per-emission sqrt/divide, identical to the batch
-    * query's. */
-  case class RollingRmssdState(prevC: Long, hasPrev: Boolean,
-      dcs: Seq[Long], lastUs: Long, lastId: Long,
-      pending: Seq[(Long, Long, Double)])
-
-  /** One per-sample rolling-feature row — the judged batch query's
-    * shape (`hrv_rolling_rmssd`): None for rows whose frame holds no
-    * successive difference (each series' first sample). */
-  case class RollingRmssdRow(user_id: Long, event_id: Long,
-      rmssd_60: Option[Double])
-
-  /** Streaming twin of the judged `hrv_rolling_rmssd` sliding feature:
-    * per sealed sample, RMSSD over the trailing ≤ `window` successive
-    * cent differences of that user's series. Like [[statefulEwma]] /
-    * [[statefulAnomalyZscore]] the frame CONTENT is order-sensitive, so
-    * rows buffer until the watermark strictly passes their instant and
-    * fold in exact (event-time µs, event_id) order — but unlike those
-    * twins the frame ARITHMETIC is exact integer (cent diffs, integer
-    * square sums), so there is no float-replay hazard at all: the one
-    * float step per emission (sqrt(Σdc²/n)/100, then HALF_UP at 2 dp)
-    * is operand-identical to the batch window query by construction.
-    * Per-user state is ≤ window−1 longs plus the watermark-bounded
-    * buffer, never the stream. */
-  def statefulRollingRmssd(events: DataFrame, window: Int = 60,
-      watermark: String = "1 day"): Dataset[RollingRmssdRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("event_id").cast("long").as("event_id"),
-        col("value").cast("double").as("value"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[RollingRmssdState, RollingRmssdRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Long, Double)],
-            state: GroupState[RollingRmssdState]) =>
-          val st = state.getOption.getOrElse(
-            RollingRmssdState(0L, hasPrev = false, Vector.empty,
-              Long.MinValue, Long.MinValue, Nil))
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          val pending =
-            (st.pending ++ rows.map(r => (micros(r._2), r._3, r._4))).distinct
-          val wm = state.getCurrentWatermarkMs()
-          // strict-<: fold only SEALED instants (see statefulAnomalyZscore)
-          val (ripe, keep) = pending.partition(_._1 < wm * 1000L)
-          var prevC = st.prevC
-          var hasPrev = st.hasPrev
-          var dcs = st.dcs.toVector
-          var lastUs = st.lastUs
-          var lastId = st.lastId
-          def round2(v: Double): Double =
-            java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue()
-          val out = ripe.sortBy(r => (r._1, r._2)).filter { case (us, id, _) =>
-            us > lastUs || (us == lastUs && id > lastId)
-          }.map { case (us, id, v) =>
-            // the batch query's cent lattice: round(v·100) exact on 2-dp data
-            val c = math.round(v * 100)
-            val frame = if (hasPrev) (dcs :+ (c - prevC)).takeRight(window)
-                        else dcs.takeRight(window - 1) // first sample: no diff
-            val emit = if (frame.nonEmpty) {
-              val sq = frame.map(d => d * d).sum
-              Some(round2(math.sqrt(sq.toDouble / frame.size) / 100.0))
-            } else None
-            dcs = frame.takeRight(window - 1)
-            prevC = c
-            hasPrev = true
-            lastUs = us
-            lastId = id
-            RollingRmssdRow(user, id, emit)
-          }
-          state.update(RollingRmssdState(prevC, hasPrev, dcs, lastUs, lastId, keep))
-          if (keep.nonEmpty)
-            state.setTimeoutTimestamp(Math.max(
-              Math.floorDiv(keep.map(_._1).min + 999L, 1000L), wm + 1L))
-          out.iterator
-      }
-  }
-
-  /** Per-key windowed-SampEn fold state: the sealed beat index, the
-    * previous sealed cent (the next template's left operand), the
-    * CURRENT box's accumulated templates (≤ 31 (c, cn) pairs — boxes
-    * are tumbling, so at most one box is ever open), the (µs, id) fold
-    * point, and the watermark-bounded pending buffer. */
-  case class RollingSampenState(beatIdx: Long, prevC: Long,
-      hasPrev: Boolean, box: Seq[(Long, Long)],
-      lastUs: Long, lastId: Long, pending: Seq[(Long, Long, Double)])
-
-  /** One per-box SampEn row — the judged `hrv_rolling_sampen` shape. */
-  case class RollingSampenRow(user_id: Long, box: Long, b_pairs: Long,
-      a_pairs: Long, sampen: Option[Double])
-
-  /** Streaming twin of the judged `hrv_rolling_sampen` (round-13):
-    * SampEn(m=1, r=20.00 in cents) per user per tumbling 32-beat box,
-    * emitted as each box COMPLETES. The [[statefulRollingRmssd]]
-    * discipline — rows buffer until the watermark strictly passes
-    * their instant, then fold in exact (µs, event_id) order — applied
-    * to the box feature: template (cᵢ, cᵢ₊₁) joins box i div 32 iff
-    * i mod 32 ≤ 30 (templates never straddle a box edge, the batch
-    * rule), and when template j=30 lands the box's 465 integer pair
-    * compares run inside the state function and the row emits. Only
-    * COMPLETE boxes emit — identical to the batch query, which is what
-    * the spec pins bit-for-bit. Per-key state is ≤ 31 cent pairs (ONE
-    * open box — tumbling, not sliding) plus the watermark-bounded
-    * buffer; arithmetic is exact integer with the single −ln(A/B)
-    * float per emission, operand-identical to batch.
-    *
-    * State lifetime (round-13 advice): when a key's pending buffer
-    * drains, NO eviction timeout is set — the O(1) fold point and any
-    * partial open box live for the stream's lifetime. That is
-    * deliberate, not an oversight: evicting them would CHANGE results
-    * (a resuming key would restart box alignment at index 0 and lose
-    * its open box, diverging from the batch fold the spec pins
-    * bit-identical). So per-key state is bounded but the key SPACE is
-    * not: on an unbounded key domain total state grows with distinct
-    * keys ever seen. Deployments with unbounded churning key spaces
-    * need either a bounded-domain contract upstream or an external TTL
-    * that accepts the box-realignment semantics. */
-  def statefulRollingSampen(events: DataFrame, boxSize: Int = 32,
-      tolCents: Long = 2000L,
-      watermark: String = "1 day"): Dataset[RollingSampenRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("event_id").cast("long").as("event_id"),
-        col("value").cast("double").as("value"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[RollingSampenState, RollingSampenRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Long, Double)],
-            state: GroupState[RollingSampenState]) =>
-          val st = state.getOption.getOrElse(RollingSampenState(
-            0L, 0L, hasPrev = false, Nil, Long.MinValue, Long.MinValue, Nil))
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          val pending =
-            (st.pending ++ rows.map(r => (micros(r._2), r._3, r._4))).distinct
-          val wm = state.getCurrentWatermarkMs()
-          val (ripe, keep) = pending.partition(_._1 < wm * 1000L)
-          var i = st.beatIdx; var prevC = st.prevC; var hasPrev = st.hasPrev
-          var box = st.box.toVector
-          var lastUs = st.lastUs; var lastId = st.lastId
-          def round6(v: Double): Double =
-            java.math.BigDecimal.valueOf(v)
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          val out = ripe.sortBy(r => (r._1, r._2)).filter { case (us, id, _) =>
-            us > lastUs || (us == lastUs && id > lastId)
-          }.flatMap { case (us, id, v) =>
-            val c = math.round(v * 100)
-            // the arriving beat has index i; the template it completes is
-            // (c_{i-1}, c_i) at position i-1, box (i-1) div 32, in-box
-            // j = (i-1) mod 32 — kept iff j ≤ boxSize-2 (batch rule)
-            val emit: Option[RollingSampenRow] =
-              if (hasPrev && (i - 1) % boxSize <= boxSize - 2) {
-                box = box :+ ((prevC, c))
-                if (box.size == boxSize - 1) { // box complete: score it
-                  var bPairs = 0L; var aPairs = 0L
-                  var x = 0
-                  while (x < box.size) {
-                    var y = x + 1
-                    while (y < box.size) {
-                      if (math.abs(box(x)._1 - box(y)._1) <= tolCents) {
-                        bPairs += 1
-                        if (math.abs(box(x)._2 - box(y)._2) <= tolCents)
-                          aPairs += 1
-                      }
-                      y += 1
-                    }
-                    x += 1
-                  }
-                  val boxId = (i - 1) / boxSize
-                  box = Vector.empty
-                  Some(RollingSampenRow(user, boxId, bPairs, aPairs,
-                    if (aPairs > 0 && bPairs > 0)
-                      Some(round6(-math.log(aPairs.toDouble / bPairs)))
-                    else None))
-                } else None
-              } else None
-            prevC = c; hasPrev = true; i += 1
-            lastUs = us; lastId = id
-            emit
-          }
-          state.update(RollingSampenState(i, prevC, hasPrev, box,
-            lastUs, lastId, keep))
-          if (keep.nonEmpty)
-            state.setTimeoutTimestamp(Math.max(
-              Math.floorDiv(keep.map(_._1).min + 999L, 1000L), wm + 1L))
-          out.iterator
-      }
-  }
-
   /** Per-key as-of fold state: the latest SEALED reference row's
     * (instant, id) — O(1), never a history buffer — plus the
     * (µs, side-rank, event_id) fold point and the watermark-bounded
@@ -1101,8 +168,7 @@ object StreamingOps {
     * carrying both sides. Spark's built-in stream-stream joins cannot
     * express "latest at-or-before" (their state is a time-bounded
     * buffer of ALL candidates, and the ≤-latest pick needs a per-row
-    * aggregate the join operator doesn't run), so this is the
-    * [[statefulRollingRmssd]] discipline applied to the join: rows of
+    * aggregate the join operator doesn't run), so rows of
     * both sides buffer until the watermark STRICTLY passes their
     * instant, then fold in exact (event-time µs, side, event_id) order —
     * references before probes at the same instant, so a same-instant
@@ -1153,7 +219,7 @@ object StreamingOps {
             (st.pending ++ rows.map(r => (micros(r._2), r._3, r._4))).distinct
           val wm = state.getCurrentWatermarkMs()
           // strict-<: fold only SEALED instants (no row at this instant
-          // can still arrive), the statefulRollingRmssd seal rule
+          // can still arrive)
           val (ripe, keep) = pending.partition(_._1 < wm * 1000L)
           var refUs = st.refUs; var refId = st.refId; var hasRef = st.hasRef
           var lastUs = st.lastUs; var lastRank = st.lastRank
@@ -1176,369 +242,6 @@ object StreamingOps {
               Math.floorDiv(keep.map(_._1).min + 999L, 1000L), wm + 1L))
           out.iterator
       }
-  }
-
-  case class CaptureState(firstUs: Long, firstId: Long, hasFirst: Boolean,
-      lastUs: Long, lastId: Long, pending: Seq[(Long, Long)])
-
-  /** One capture decision — the judged `source_warc_revisit` WRITER
-    * shape: the first fetch of a content stores it (`response`), every
-    * later fetch references the stored copy (`revisit`). */
-  case class CaptureRow(fetch_id: Long, digest: String,
-      warc_type: String, source_id: Long)
-
-  /** Streaming CONTENT-ADDRESSED CAPTURE DEDUP (round 17) — the
-    * WRITER-side twin of the judged `source_warc_revisit`: that row
-    * READS an archive where refetches were stored as revisit records;
-    * this is the stateful stream that WRITES one — exactly what a
-    * crawl archiver (WARC 1.1 §6.7.2) runs at capture time. Fetches
-    * arrive keyed by payload digest; the FIRST fetch of a digest (by
-    * capture event time, not arrival order) becomes the stored
-    * `response`, every later fetch becomes a `revisit` referencing
-    * the first fetch's id. Out-of-order hazard: the first-by-time
-    * fetch can arrive AFTER a later one, so rows buffer until the
-    * watermark STRICTLY passes their instant and fold in exact
-    * (µs, fetch_id) order — the [[statefulAsofJoin]] seal discipline
-    * — making the response/revisit split a pure function of event
-    * time, bit-identical under any batch slicing (spec-pinned against
-    * both scrambled and time-sliced delivery). Per-digest state after
-    * sealing is ONE (instant, id) pair — the content store pointer —
-    * plus the watermark-bounded pending buffer; like the as-of twin,
-    * a sealed digest's pointer persists for the key's lifetime
-    * (evicting it would re-store a refetch as a duplicate response,
-    * silently growing the archive — the exact failure this stream
-    * exists to prevent). */
-  def statefulCaptureDedup(fetches: DataFrame,
-      watermark: String = "1 day"): Dataset[CaptureRow] = {
-    val spark = fetches.sparkSession
-    import spark.implicits._
-    fetches
-      .select(col("digest"), col("ts"), col("fetch_id").cast("long"))
-      .withWatermark("ts", watermark)
-      .as[(String, Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[CaptureState, CaptureRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (digest: String, rows: Iterator[(String, Timestamp, Long)],
-            state: GroupState[CaptureState]) =>
-          val st = state.getOption.getOrElse(CaptureState(
-            Long.MinValue, Long.MinValue, hasFirst = false,
-            Long.MinValue, Long.MinValue, Nil))
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          val pending =
-            (st.pending ++ rows.map(r => (micros(r._2), r._3))).distinct
-          val wm = state.getCurrentWatermarkMs()
-          val (ripe, keep) = pending.partition(_._1 < wm * 1000L)
-          var firstUs = st.firstUs; var firstId = st.firstId
-          var hasFirst = st.hasFirst
-          var lastUs = st.lastUs; var lastId = st.lastId
-          val out = ripe.sorted.filter { case (us, id) =>
-            us > lastUs || (us == lastUs && id > lastId) // replay guard
-          }.map { case (us, id) =>
-            lastUs = us; lastId = id
-            if (!hasFirst) {
-              firstUs = us; firstId = id; hasFirst = true
-              CaptureRow(id, digest, "response", id)
-            } else CaptureRow(id, digest, "revisit", firstId)
-          }
-          state.update(CaptureState(firstUs, firstId, hasFirst,
-            lastUs, lastId, keep))
-          if (keep.nonEmpty)
-            state.setTimeoutTimestamp(Math.max(
-              Math.floorDiv(keep.map(_._1).min + 999L, 1000L), wm + 1L))
-          out.iterator
-      }
-  }
-
-  /** Twin of TimeSeries.streamDedup: streaming-safe distinct on
-    * (user_id, event_type). State for a key can be dropped once the
-    * watermark passes — unbounded-state-free dedup. */
-  def dedup(events: DataFrame, watermark: String = "1 day"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-
-  /** Twin of TimeSeries.streamLateFilter: the watermark itself — rows
-    * older than watermark behind the max event time are dropped by any
-    * downstream stateful operator. Exposed as the watermarked stream. */
-  def withLateness(events: DataFrame, watermark: String = "1 day"): DataFrame =
-    events.withWatermark("ts", watermark)
-
-  /** Streaming twin of the PII hygiene stage (judged text_pii_redact):
-    * the SAME Redact chain as batch — a stateless codegen'd map, so no
-    * state store, no watermark, valid in append mode on any stream.
-    * `pii_hits` is counted on the pre-scrub text, exactly as the batch
-    * form does. */
-  def redactDocuments(docs: DataFrame): DataFrame =
-    docs.withColumn("pii_hits",
-        graft.functions.Redact.piiCount(col("text")).cast("long"))
-      .withColumn("text", graft.functions.Redact.scrub(col("text")))
-
-  /** Streaming benchmark decontamination: each micro-batch is checked
-    * against the STATIC benchmark set with the same shingle equi-join as
-    * batch (graft.operators.Decontaminate) and contaminated rows are
-    * dropped before the sink sees them. foreachBatch, not a streaming
-    * aggregate: per-doc containment needs a per-doc-id aggregation,
-    * which as a direct stream agg would keep every doc's state forever —
-    * per micro-batch it is bounded by the batch. A document's containment
-    * depends only on its OWN shingles and the static benchmark, so
-    * batch-at-a-time evaluation equals whole-corpus evaluation (asserted
-    * in StreamingOpsSpec), unlike dedup, which needs cross-batch state
-    * (incrementalDedupStream). */
-  def decontaminateStream(docs: DataFrame, benchmark: DataFrame,
-      minContainment: Double = 0.8, n: Int = 3)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      // the batch feeds both the shingle join and the anti-join probe —
-      // persist so the micro-batch source is read once, not twice
-      val b = batch.persist()
-      try {
-        val quarantined = graft.operators.Decontaminate
-          .contaminated(b, benchmark, "doc_id", "text", n, minContainment)
-          .select(col("doc_id"))
-        sink(b.join(quarantined, Seq("doc_id"), "left_anti"), id)
-      } finally { b.unpersist(); () }
-    }
-
-  /** Streaming twin of the time-bounded join family (batch
-    * `join_range_theta` / `join_interval_bucketed`): a WATERMARKED
-    * stream-stream inner join — each purchase pairs with the same
-    * user's clicks in the preceding `window`. This is the one join
-    * Structured Streaming runs with bounded state natively: the
-    * watermark on both sides plus the two-sided time constraint lets
-    * the state store evict rows older than `watermark`, so state is
-    * O(traffic within the watermark horizon), not O(stream). The
-    * equi key (user_id) hash-partitions both sides — the same
-    * cluster-parallel shape as the batch form; without it Spark would
-    * have to broadcast-retain one whole side. */
-  def intervalJoinStream(purchases: DataFrame, clicks: DataFrame,
-      window: String = "30 minutes", watermark: String = "1 hour"): DataFrame = {
-    val p = purchases.withWatermark("ts", watermark)
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("p_ts"))
-    val c = clicks.withWatermark("ts", watermark)
-      .select(col("event_id").as("click_id"), col("user_id").as("c_uid"),
-        col("ts").as("c_ts"))
-    p.join(c,
-        col("user_id") === col("c_uid")
-          && col("c_ts") <= col("p_ts")
-          && col("c_ts") >= col("p_ts") - expr(s"interval $window"))
-      .select(col("purchase_id"), col("click_id"), col("user_id"),
-        col("p_ts"), col("c_ts"))
-  }
-
-  /** Streaming twin of the batch INTERVAL-OVERLAP join
-    * ([[graft.operators.IntervalJoin.overlapSelfJoin]] / judged
-    * `join_interval_bucketed`) — the no-equi-key join shape, made
-    * streamable by the SAME temporal-bucketing trick that makes it
-    * batch-scalable: replicating each interval into every
-    * `bucketSeconds` bucket it touches (explode is stream-legal)
-    * GIVES the stream-stream join its equi key. The join carries all
-    * four batch clauses — bucket-id equality (hash-partitions state
-    * exactly like the batch shuffle), the closed-interval overlap
-    * predicate, `a_id < b_id`, and the emit-in-overlap-start-bucket
-    * rule (exactly-once without a distinct) — PLUS the two-sided
-    * event-time constraint |b_st − a_st| ≤ `maxLenSeconds` (implied by
-    * overlap of ≤maxLen intervals, but stated explicitly so the state
-    * store can evict rows past the watermark horizon). State is
-    * O(traffic within watermark + maxLen), never O(stream).
-    *
-    * Inner stream-stream joins emit on match, so results appear
-    * without waiting for watermark advance; rows later than the
-    * watermark are dropped per streaming semantics (the twin equality
-    * holds for deliveries within the horizon, scrambled or not —
-    * StreamingOpsSpec pins batch equality under shuffled multi-batch
-    * delivery). */
-  def overlapSelfJoinStream(intervals: DataFrame, idCol: String,
-      startCol: String, endCol: String, bucketSeconds: Long,
-      maxLenSeconds: Long, watermark: String = "1 hour"): DataFrame = {
-    require(bucketSeconds > 0, s"bucketSeconds must be positive: $bucketSeconds")
-    require(maxLenSeconds > 0, s"maxLenSeconds must be positive: $maxLenSeconds")
-    val bucketMicros = bucketSeconds * 1000000L
-    def bkt(cName: String): Column = expr(s"unix_micros($cName) div $bucketMicros")
-    // the |b_st − a_st| ≤ maxLen eviction constraint is only CORRECT for
-    // intervals no longer than maxLen — a longer interval's genuine
-    // overlaps would be SILENTLY dropped by the range clause, so an
-    // over-long row must fail the query loudly instead (in-plan guard,
-    // evaluated per row before the explode)
-    val guarded = intervals.withColumn("_len_guard",
-      when(expr(s"unix_micros($endCol) - unix_micros($startCol)") >
-          maxLenSeconds * 1000000L,
-        raise_error(concat(
-          lit(s"overlapSelfJoinStream: interval longer than maxLenSeconds=" +
-            s"$maxLenSeconds at "), col(startCol).cast("string"),
-          lit(" — the state-eviction range would drop its genuine " +
-            "overlaps; raise maxLenSeconds"))))
-        .otherwise(lit(true)))
-    val exploded = guarded.withWatermark(startCol, watermark)
-      .withColumn("gbkt", explode(sequence(bkt(startCol), bkt(endCol))))
-      .filter(col("_len_guard")) // forces the guard's evaluation
-      .drop("_len_guard")
-    val a = exploded.select(col(idCol).as("a_id"), col(startCol).as("a_st"),
-      col(endCol).as("a_en"), col("gbkt"))
-    val b = exploded.select(col(idCol).as("b_id"), col(startCol).as("b_st"),
-      col(endCol).as("b_en"), col("gbkt").as("b_gbkt"))
-    a.join(b,
-        col("gbkt") === col("b_gbkt")
-          && col("a_id") < col("b_id")
-          && col("a_st") <= col("b_en") && col("b_st") <= col("a_en")
-          && col("gbkt") === expr(
-            s"unix_micros(greatest(a_st, b_st)) div $bucketMicros")
-          // explicit event-time range between the two watermarked sides:
-          // what lets the state store evict, not a semantic narrowing
-          && col("b_st") >= col("a_st") - expr(s"interval $maxLenSeconds seconds")
-          && col("b_st") <= col("a_st") + expr(s"interval $maxLenSeconds seconds"))
-      .select(col("a_id"), col("b_id"))
-  }
-
-  /** Streaming as-of enrichment: each micro-batch of probes is joined
-    * against a static history with the native sorted-merge as-of
-    * (graft.plans.AsofJoin) inside foreachBatch — the standard shape for
-    * "attach the latest reference state at event time" enrichment where
-    * the history side is a slowly-changing table re-read per batch.
-    * Stream-stream as-of would need event-time-bounded state Spark does
-    * not expose to custom execs; foreachBatch + batch as-of is the
-    * supported, replay-idempotent form (batch id keys the sink).
-    */
-  def asofEnrichStream(probes: DataFrame, history: () => DataFrame,
-      on: Seq[String], probeTime: String, historyTime: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    probes.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(graft.plans.AsofJoin(batch, history(), on, probeTime, historyTime), id)
-      }
-
-  /** Streaming SCD-2 dimension maintenance — the INGESTION-side twin of
-    * the judged `source_scd2` (round-13 advice #7; the as-of twin
-    * closed the read side, this closes the write side): each
-    * micro-batch of attribute rows is applied to the dimension with the
-    * SAME incremental close-and-append fold the batch query judges
-    * ([[graft.operators.Relational.scd2Apply]], `checkUnique` ON — a
-    * poisoned batch fails loudly instead of corrupting history), under
-    * the generation-per-batch sink discipline of
-    * [[incrementalDedupStream]]: generation `id` holds the full dim
-    * AFTER batch `id`, derived from the latest COMPLETE generation
-    * strictly below `id`, and committed with a marker file AFTER the
-    * write. A replayed micro-batch therefore overwrites its own
-    * generation from the same parent and produces byte-identical state
-    * (the version stamp is `initVersion + 1 + id` — a pure function of
-    * the batch id, never wall-clock), which is exactly the
-    * exactly-once contract foreachBatch asks the sink to provide.
-    *
-    * Scale shape: per batch, one join of the dim against the delta's
-    * distinct keys (broadcast when the delta is small — the streaming
-    * case by construction) plus a union and a rewrite of the dim files.
-    * The rewrite is the classic compaction trade of file-based SCD-2;
-    * at 100 TB the dim would live partitioned on `is_current`/range
-    * (the `source_scd2_pruned` layout) so the rewrite touches the
-    * current partition, not closed history. */
-  def scd2DimStream(deltas: DataFrame, key: String, stateDir: String,
-      init: () => DataFrame, initVersion: Long = 1L)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltas.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      scd2ApplyGeneration(batch, id, key, stateDir, init, initVersion)
-    }
-
-  /** One micro-batch of [[scd2DimStream]], factored out so the spec can
-    * drive replays directly. Deterministic in (batch, id, parent
-    * generation) — a replay recomputes the identical generation. */
-  def scd2ApplyGeneration(batch: DataFrame, id: Long, key: String,
-      stateDir: String, init: () => DataFrame, initVersion: Long): Unit = {
-    val spark = batch.sparkSession
-    graft.PathGuard.requireDisjoint(spark, batch.inputFiles.toSeq, stateDir,
-      "scd2 dim store")
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val parent = scd2Generations(fs, stateDir).filter(_ < id).sorted.lastOption
-    val prior = parent match {
-      case Some(g) => spark.read.parquet(s"$stateDir/gen=$g/dim")
-      case None => graft.operators.Relational.scd2Init(init(), initVersion)
-    }
-    val next = graft.operators.Relational.scd2Apply(
-      prior, batch, key, version = initVersion + 1 + id, checkUnique = true)
-    commitGeneration(fs, stateDir, id)(
-      next.write.mode("overwrite").parquet(s"$stateDir/gen=$id/dim"))
-  }
-
-  /** The generation commit protocol, shared by both dim-maintenance
-    * twins: UN-commit first (delete any stale `_graft_done` from a
-    * previous successful run of this id — a replay's overwrite deletes
-    * the old data files before writing, so a crash mid-rewrite must
-    * leave the generation UNCOMMITTED, not committed-but-partial),
-    * write the data, then commit the marker (layoutOnce rule). */
-  private def commitGeneration(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String, id: Long)(write: => Unit): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$stateDir/gen=$id/_graft_done")
-    if (fs.exists(marker)) fs.delete(marker, false)
-    write
-    fs.create(marker, true).close()
-  }
-
-  /** Streaming LATEST-WINS dimension maintenance — the [[scd2DimStream]]
-    * discipline applied to the judged `source_upsert` fold (#195): each
-    * micro-batch of corrected rows OVERRIDES the dim's same-key rows via
-    * the same anti-join + union MERGE the batch query judges
-    * ([[graft.operators.Relational.upsert]]), written generation-per-
-    * batch with the commit-marker protocol, so a replayed micro-batch
-    * rebuilds byte-identical state from the same parent. The delta side
-    * carries the duplicate-key guard (a batch naming one key twice
-    * fails loudly — MERGE's multi-match error — instead of silently
-    * keeping an arbitrary row); the base side is unique by the fold's
-    * own invariant and skips the guard's window pass. Together with the
-    * SCD-2 twin this covers both ingestion-maintenance shapes: keep
-    * history (SCD-2) and latest-wins (upsert). */
-  def upsertDimStream(deltas: DataFrame, key: String, stateDir: String,
-      init: () => DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltas.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      upsertApplyGeneration(batch, id, key, stateDir, init)
-    }
-
-  /** One micro-batch of [[upsertDimStream]], factored out for direct
-    * replay testing (same contract as [[scd2ApplyGeneration]]). */
-  def upsertApplyGeneration(batch: DataFrame, id: Long, key: String,
-      stateDir: String, init: () => DataFrame): Unit = {
-    val spark = batch.sparkSession
-    graft.PathGuard.requireDisjoint(spark, batch.inputFiles.toSeq, stateDir,
-      "upsert dim store")
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val parent = scd2Generations(fs, stateDir).filter(_ < id).sorted.lastOption
-    val prior = parent match {
-      case Some(g) => spark.read.parquet(s"$stateDir/gen=$g/dim")
-      case None => init()
-    }
-    // delta-only duplicate-key guard: the base is unique by the fold's
-    // invariant, so the full upsert(checkUnique = true) would pay a
-    // pointless window pass over the whole dim every batch. ONE guard
-    // definition (Relational.uniqueKeyGuard) serves upsert, scd2Apply
-    // and this — a guard fix cannot silently miss a copy.
-    val guarded = graft.operators.Relational.uniqueKeyGuard(batch, key,
-      "upsertDimStream: duplicate delta key ",
-      s" in batch $id violates the MERGE one-row-per-key contract")
-    val next = graft.operators.Relational.upsert(prior, guarded, key)
-    commitGeneration(fs, stateDir, id)(
-      next.write.mode("overwrite").parquet(s"$stateDir/gen=$id/dim"))
-  }
-
-  /** The current SCD-2 dimension: the latest COMMITTED generation, or
-    * None before the first batch lands. */
-  def readScd2Dim(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    scd2Generations(fs, stateDir).sorted.lastOption
-      .map(g => spark.read.parquet(s"$stateDir/gen=$g/dim"))
-  }
-
-  private def scd2Generations(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("gen=") => s.stripPrefix("gen=").toLong }
-      .filter(g => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$stateDir/gen=$g/_graft_done")))
   }
 
   /** Streaming incremental corpus dedup: each micro-batch of documents is
@@ -1578,9 +281,16 @@ object StreamingOps {
     * `id` under `stateDir` (None when there are none) — the shared
     * reader for the generation-per-batch store layout (see
     * [[incrementalDedupStream]]'s scaladoc): a replayed batch re-reads
-    * only generations before its own, compacted-away deltas are
-    * skipped, and generations from a FUTURE batch id fail fast (the
-    * signature of a checkpoint reset while the store survived). */
+    * only generations before its own, and compacted-away deltas are
+    * skipped.
+    *
+    * Generations from a FUTURE batch id fail fast: they mean the
+    * checkpoint was deleted while the store survived. KNOWN BLIND SPOT:
+    * when the surviving store holds ONLY generations the current batch
+    * may touch (e.g. a one-batch run's store seen by a fresh stream's
+    * batch 0), a reset is indistinguishable from a legitimate replay and
+    * the old rows are overwritten — lineage detection needs at least one
+    * generation beyond the legal window. Keep checkpoints durable. */
   private def readGenerationStore(spark: SparkSession, stateDir: String,
       id: Long): Option[DataFrame] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1590,8 +300,13 @@ object StreamingOps {
     // validated parser names a stray gen=N.bak instead of dying as a
     // raw NumberFormatException
     val gens = graft.PathGuard.generationDirs(spark, stateDir)
-    requireNoFutureGenerations(gens, maxLegal = id, what = s"stateDir $stateDir",
-      recovery = "restore the checkpoint or start a fresh stateDir.")
+    val beyond = gens.filter(_ > id)
+    require(beyond.isEmpty,
+      s"stateDir $stateDir contains generations ${beyond.sorted.mkString(",")} " +
+        s"from a batch id beyond the current one (max legal gen $id): the " +
+        "streaming checkpoint was reset while the generation store " +
+        "survived. Refusing to mix lineages — restore the checkpoint or " +
+        "start a fresh stateDir.")
     // skip generations whose signature deltas were folded into a lower
     // baseline by CorpusPipeline.compactSignatures (their dirs survive
     // because they still hold `accepted`)
@@ -1599,25 +314,6 @@ object StreamingOps {
       fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/gen=$g/signatures")))
     if (prev.isEmpty) None
     else Some(spark.read.parquet(prev.map(g => s"$stateDir/gen=$g/signatures"): _*))
-  }
-
-  /** The checkpoint-reset lineage guard shared by every
-    * generation-per-batch sink: generations beyond the highest one the
-    * current batch may legally touch mean the checkpoint was deleted
-    * while the store survived. KNOWN BLIND SPOT: when the surviving
-    * store holds ONLY generations the current batch may touch (e.g. a
-    * one-batch run's store seen by a fresh stream's batch 0), a reset
-    * is indistinguishable from a legitimate replay and the old rows are
-    * overwritten — lineage detection needs at least one generation
-    * beyond the legal window. Keep checkpoints durable. */
-  private def requireNoFutureGenerations(gens: Seq[Long], maxLegal: Long,
-      what: String, recovery: String): Unit = {
-    val beyond = gens.filter(_ > maxLegal)
-    require(beyond.isEmpty,
-      s"$what contains generations ${beyond.sorted.mkString(",")} from a " +
-        s"batch id beyond the current one (max legal gen $maxLegal): the " +
-        "streaming checkpoint was reset while the generation store " +
-        s"survived. Refusing to mix lineages — $recovery")
   }
 
   /** Streaming incremental MEDIA dedup — the multimodal twin of
@@ -1640,219 +336,6 @@ object StreamingOps {
         org.apache.spark.sql.Encoders.product[graft.multimodal.Multimodal.MediaRow])
       graft.multimodal.MediaPipeline.appendBatch(spark, store, rows,
         s"$stateDir/gen=$id", maxSide, maxHamming, deltaSignatures = true)
-      ()
-    }
-
-  /** One open multi-resolution bucket: exact integer count + cent sum —
-    * both COMMUTATIVE folds, so shuffled delivery needs no fold-order
-    * buffer (the order-insensitive class per the round-11 twin
-    * program). */
-  case class GrainBucket(n: Long, sumCents: Long)
-
-  /** Per-user multires state: open buckets per grain keyed by the
-    * bucket's start EPOCH DAY (all three grains are calendar-aligned
-    * day multiples in UTC). Bounded by the watermark's open-calendar
-    * horizon × 3 grains, never by event volume. */
-  case class MultiresState(day: Map[Long, GrainBucket],
-      week: Map[Long, GrainBucket], month: Map[Long, GrainBucket])
-
-  /** One sealed rollup row — the judged `ts_multires` shape (`bucket`
-    * = the grain period's UTC midnight start). */
-  case class MultiresRow(user_id: Long, grain: String, bucket: Timestamp,
-      n: Long, sum_cents: Long)
-
-  /** Streaming twin of the judged `ts_multires` day/week/month rollup:
-    * every event folds into its three calendar buckets (count + exact
-    * integer cents — Math.round(v·100) is the exact lattice snap on
-    * 2-dp data, the shared twin convention), and a bucket's row EMITS
-    * (append mode) once the watermark seals its last admissible
-    * instant (nextBucketStart·86400e6 − 1 µs ≤ wm). Week buckets are
-    * ISO Monday-start and month buckets first-of-month via
-    * java.time.LocalDate in UTC — the same truncation date_trunc
-    * applies under the pinned UTC session. All folds are commutative,
-    * so emitted rows are bit-identical to the batch GROUPING SETS
-    * aggregate under shuffled multi-batch delivery
-    * (StreamingOpsSpec); the batch Expand-based one-pass form and this
-    * three-map state are two physical plans for one semantics. */
-  def statefulMultires(events: DataFrame,
-      watermark: String = "1 day"): Dataset[MultiresRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val DayUs = 86400000000L
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("value").cast("double").as("value"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MultiresState, MultiresRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Double)],
-            state: GroupState[MultiresState]) =>
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          def fold(m: Map[Long, GrainBucket], startDay: Long,
-              c: Long): Map[Long, GrainBucket] = {
-            val b = m.getOrElse(startDay, GrainBucket(0L, 0L))
-            m.updated(startDay, GrainBucket(b.n + 1L, b.sumCents + c))
-          }
-          // next bucket start for the SEAL check, derived from the
-          // start day (cheap: week = +7; month via LocalDate)
-          def nextStart(grain: String, startDay: Long): Long = grain match {
-            case "day" => startDay + 1L
-            case "week" => startDay + 7L
-            case _ => java.time.LocalDate.ofEpochDay(startDay)
-              .plusMonths(1).toEpochDay
-          }
-          var st = state.getOption.getOrElse(
-            MultiresState(Map.empty, Map.empty, Map.empty))
-          rows.foreach { case (_, ts, v) =>
-            val epochDay = Math.floorDiv(micros(ts), DayUs)
-            val date = java.time.LocalDate.ofEpochDay(epochDay)
-            val weekStart = date.minusDays(date.getDayOfWeek.getValue - 1L)
-            val monthStart = date.withDayOfMonth(1)
-            val c = Math.round(v * 100.0)
-            st = MultiresState(
-              fold(st.day, epochDay, c),
-              fold(st.week, weekStart.toEpochDay, c),
-              fold(st.month, monthStart.toEpochDay, c))
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          def sealed_(grain: String)(e: (Long, GrainBucket)): Boolean =
-            nextStart(grain, e._1) * DayUs - 1L <= wmUs
-          val (ripeD, openD) = st.day.partition(sealed_("day"))
-          val (ripeW, openW) = st.week.partition(sealed_("week"))
-          val (ripeM, openM) = st.month.partition(sealed_("month"))
-          if (openD.isEmpty && openW.isEmpty && openM.isEmpty) state.remove()
-          else {
-            state.update(MultiresState(openD, openW, openM))
-            // fire when the earliest open bucket can seal
-            val nextSealMs = Seq(
-              openD.keys.map(nextStart("day", _)),
-              openW.keys.map(nextStart("week", _)),
-              openM.keys.map(nextStart("month", _)))
-              .flatten.reduceOption(_ min _).map(_ * 86400000L)
-            nextSealMs.foreach(ms => state.setTimeoutTimestamp(
-              math.max(ms, state.getCurrentWatermarkMs() + 1L)))
-          }
-          (ripeD.toSeq.map(("day", _)) ++ ripeW.toSeq.map(("week", _)) ++
-            ripeM.toSeq.map(("month", _)))
-            .sortBy { case (g, (s, _)) => (g, s) }
-            .iterator.map { case (g, (startDay, b)) =>
-              MultiresRow(user, g, new Timestamp(startDay * 86400000L),
-                b.n, b.sumCents)
-            }
-      }
-  }
-
-  /** Per-user retention state: the user's earliest event time seen so
-    * far (the COHORT anchor — kept for the key's lifetime: one long per
-    * user, the price of cohort semantics on an unbounded stream) plus
-    * the not-yet-sealed active week starts. Open weeks are bounded by
-    * the watermark horizon; the anchor is O(1). */
-  case class RetentionState(t0Us: Long, openWeeks: Set[Long])
-
-  /** One sealed retention CELL: user u, whose cohort is `cohort`
-    * (ISO-Monday week of their first event), was active in cohort week
-    * + `week_n`. Emitted exactly once per (user, week) — so the judged
-    * rollup's countDistinct(user) collapses to a stateless count(*)
-    * over these cells. */
-  case class RetentionCellRow(cohort: Timestamp, week_n: Int, user_id: Long)
-
-  /** Streaming twin of the judged `ts_retention_cohort`, the twin
-    * program's first COHORT shape — hard because a late (but
-    * admissible) earlier event RE-ASSIGNS the user's cohort, which
-    * retroactively moves every one of their cells. The watermark
-    * resolves it without any retraction machinery, by an ordering
-    * argument instead of a commutativity one:
-    *
-    *  - a cell (u, week w) may emit once w SEALS (last admissible
-    *    instant of w ≤ watermark — the shared twin convention);
-    *  - at that moment u's cohort is FINAL: t0 (u's earliest seen
-    *    event) lies inside some week ≤ w, so t0 < end(w) ≤ wm + 1µs,
-    *    and any event that could lower t0 has ts < t0 ≤ wm — dropped
-    *    by Spark's late filter before reaching the function.
-    *
-    * So cells emit in sealed-week order with their final cohort,
-    * exactly once (an admissible event can never land in an already-
-    * sealed week, by the same inequality). The judged rollup —
-    * countDistinct users per (cohort, week_n) — is then the stateless
-    * count(*) of these cells; StreamingOpsSpec proves the rolled-up
-    * cells equal the batch query bit for bit under shuffled
-    * multi-batch delivery, and that no cell ever emits twice. */
-  def statefulRetentionCells(events: DataFrame,
-      watermark: String = "1 day"): Dataset[RetentionCellRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val DayUs = 86400000000L
-    events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[RetentionState, RetentionCellRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp)],
-            state: GroupState[RetentionState]) =>
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          def weekStart(epochDay: Long): Long = {
-            val d = java.time.LocalDate.ofEpochDay(epochDay)
-            d.minusDays(d.getDayOfWeek.getValue - 1L).toEpochDay
-          }
-          var st = state.getOption.getOrElse(
-            RetentionState(Long.MaxValue, Set.empty))
-          rows.foreach { case (_, ts) =>
-            val us = micros(ts)
-            val wk = weekStart(Math.floorDiv(us, DayUs))
-            st = RetentionState(math.min(st.t0Us, us), st.openWeeks + wk)
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, open) = st.openWeeks.partition(w =>
-            (w + 7L) * DayUs - 1L <= wmUs)
-          // the cohort anchor must OUTLIVE quiet periods: a user who
-          // returns months later still belongs to their original
-          // cohort, so the state persists even with no open weeks
-          state.update(RetentionState(st.t0Us, open))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(math.max(
-              (open.min + 7L) * 86400000L,
-              state.getCurrentWatermarkMs() + 1L))
-          val cohortDay = weekStart(Math.floorDiv(st.t0Us, DayUs))
-          ripe.toSeq.sorted.iterator.map { w =>
-            RetentionCellRow(new Timestamp(cohortDay * 86400000L),
-              ((w - cohortDay) / 7L).toInt, user)
-          }
-      }
-  }
-
-  /** Streaming embedding ingest into a persisted IVF index
-    * ([[graft.operators.Ann.buildIvfIndex]] wrote the base as gen=0):
-    * each micro-batch is centroid-assigned map-only and written as
-    * generation `batchId + 1` (Ann.appendToIvfIndex inside
-    * foreachBatch) — a replayed batch OVERWRITES its own generation,
-    * so the sink is replay-idempotent, the same contract as
-    * [[incrementalDedupStream]]'s signature store, enforced by the
-    * shared [[requireNoFutureGenerations]] guard (see its scaladoc for
-    * the one-generation blind spot — keep the checkpoint durable;
-    * batch ids must continue across restarts). Rebuilding the index
-    * while the stream's checkpoint survives strands already-committed
-    * batches (see buildIvfIndex's rebuild note). Centroids never move:
-    * rebuild — with base PLUS streamed data — when the streamed mass
-    * rivals the fitted mass. */
-  def annIndexIngestStream(vectors: DataFrame, idCol: String, vecCol: String,
-      indexDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val spark = batch.sparkSession
-      // one listing per batch: the guard and the append's layout check
-      // share it via knownGenerations
-      val gens = graft.operators.Ann.indexGenerations(spark, indexDir)
-      requireNoFutureGenerations(gens, maxLegal = id + 1,
-        what = s"index at $indexDir",
-        recovery = "restore the checkpoint or rebuild the index.")
-      graft.operators.Ann.appendToIvfIndex(spark, batch,
-        idCol, vecCol, indexDir, generation = id + 1,
-        knownGenerations = Some(gens))
       ()
     }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.functions.Bloom
 
@@ -33,7 +34,8 @@ class BloomSpec extends SparkSpecBase {
       .agg(Bloom.bloomSketch($"user_id").as("b"))
       .write.parquet(dir)
     val merged = spark.read.parquet(dir)
-      .agg(Bloom.bloomMerge($"b").as("b")).collect().head.getAs[Array[Byte]](0)
+      .agg(GraftBridge.column(Bloom.BloomMergeAgg(GraftBridge.expression($"b"))
+        .toAggregateExpression()).as("b")).collect().head.getAs[Array[Byte]](0)
     val direct = e.agg(Bloom.bloomSketch($"user_id").as("b"))
       .collect().head.getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(merged, direct),

@@ -135,60 +135,12 @@ class BpeSpec extends SparkSpecBase {
     assert(withNull.toSet == Set(Some(1), None))
   }
 
-  test("loaded-table kernel equals the compiled kernel on the pinned rules") {
-    import org.apache.spark.unsafe.types.UTF8String
-    val tab = new graft.functions.BpeTable(Bpe.Merges)
-    val rnd = new scala.util.Random(7)
-    val alphabet = "theinganodrsucx "
-    for (trial <- 0 until 500) {
-      val len = rnd.nextInt(60)
-      val s = (0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
-      val u = UTF8String.fromString(s)
-      assert(Bpe.tokenCountTable(u, tab) == Bpe.tokenCount(u), s"count '$s'")
-      assert(Bpe.sequenceHashTable(u, tab) == Bpe.sequenceHash(u), s"hash '$s'")
-    }
-  }
-
-  test("loaded-table expressions through a real plan equal the compiled forms") {
-    import spark.implicits._
-    val docs = Seq("the thing stands", "", "a", "chest out resting").toDF("text")
-    val rows = docs.select(
-      Bpe.bpeTokenCount($"text").as("n0"),
-      Bpe.bpeTokenCountTable($"text", Bpe.Merges).as("n1"),
-      Bpe.bpeSequenceHash($"text").as("h0"),
-      Bpe.bpeSequenceHashTable($"text", Bpe.Merges).as("h1")).collect()
-    rows.foreach { r =>
-      assert(r.getInt(0) == r.getInt(1), s"count mismatch: $r")
-      assert(r.getLong(2) == r.getLong(3), s"hash mismatch: $r")
-    }
-  }
-
-  test("a large synthetic table compiles once and the rank probe is exact") {
-    // 16 pinned rules + 2000 disjoint CJK-range rules: well-formed and
-    // unambiguous by construction; ASCII text must encode EXACTLY as
-    // under the pinned 16 (the extra rules never fire), and the probe
-    // must resolve every one of the 2016 pairs to its own rank
-    val big = Bpe.Merges ++ (0 until 2000).map(i =>
-      (0x3400 + i).toChar.toString -> (0x4E00 + i).toChar.toString)
-    val tab = new graft.functions.BpeTable(big)
-    assert(tab.nRules == 2016)
-    for (i <- 0 until 2016)
-      assert(tab.rank(tab.left(i), tab.right(i)) == i, s"rank $i")
-    assert(tab.rank('q', 'q') == Int.MaxValue)
-    import org.apache.spark.unsafe.types.UTF8String
-    val u = UTF8String.fromString("the thing standing on the hill chose rest")
-    assert(Bpe.tokenCountTable(u, tab) == Bpe.tokenCount(u))
-    // a rule from the synthetic tail fires when its pair is present
-    val cjk = UTF8String.fromString("" + (0x3400 + 5).toChar + (0x4E00 + 5).toChar)
-    assert(Bpe.tokenCountTable(cjk, tab) == 1)
-  }
-
   test("ambiguous and ill-formed tables are rejected at build") {
     intercept[IllegalArgumentException] { // both spell "ab"
-      new graft.functions.BpeTable(Seq("a" -> "b", "a" -> "b")).rank(0, 0)
+      Bpe.compile(Seq("a" -> "b", "a" -> "b"))
     }
     intercept[IllegalArgumentException] {
-      new graft.functions.BpeTable(Seq("th" -> "e")).rank(0, 0)
+      Bpe.compile(Seq("th" -> "e"))
     }
   }
 }

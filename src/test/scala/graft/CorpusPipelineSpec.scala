@@ -35,28 +35,6 @@ class CorpusPipelineSpec extends SparkSpecBase {
     assert(stats.columns.toSeq == Seq("lang_pred", "docs", "avg_quality", "avg_chars"))
   }
 
-  test("curate then toTrainingChunks yields the tokenizer-ready chunk table") {
-    val out = java.nio.file.Files.createTempDirectory("corpus_pack").toString
-    CorpusPipeline.curate(spark, docs, out, minQuality = 0.2)
-    val (nChunks, nDocs) = CorpusPipeline.toTrainingChunks(spark, out, budget = 20)
-    val kept = spark.read.parquet(s"$out/corpus").count()
-    assert(nDocs == kept, "every curated doc must land in exactly one chunk")
-    val chunks = spark.read.parquet(s"$out/chunks").collect()
-    assert(chunks.length.toLong == nChunks && nChunks >= 1)
-    chunks.foreach { r =>
-      assert(r.getAs[String]("text").split(" ").length.toLong ==
-        r.getAs[Long]("tokens"))
-    }
-  }
-
-  test("toTrainingChunks over an empty curated corpus returns (0, 0)") {
-    val out = java.nio.file.Files.createTempDirectory("corpus_empty").toString
-    // a batch where nothing survives the quality gate
-    val junk = Seq((1L, "!!! ;;; ??? 123")).toDF("doc_id", "text")
-    CorpusPipeline.curate(spark, junk, out, minQuality = 0.2)
-    assert(CorpusPipeline.toTrainingChunks(spark, out, budget = 64) == ((0L, 0L)))
-  }
-
   test("curate with a benchmark quarantines contaminated docs and scrubs PII") {
     val piiDoc = long2 + " reach me at owner@example.net thanks"
     val docsPii = Seq((1L, long1), (4L, piiDoc)).toDF("doc_id", "text")

@@ -31,16 +31,4 @@ class FeatureExtrasSpec extends SparkSpecBase {
     val f = feats.agg(sum($"n")).collect().head.getLong(0)
     assert(f == Tables.events(spark, sf()).count()) // conservation
   }
-
-  test("n-gram jaccard is stricter than token-set jaccard on reordered text") {
-    val df = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "alpha beta gamma delta epsilon zeta"),  // identical
-      (3L, "zeta epsilon delta gamma beta alpha")). // same tokens, reversed
-      toDF("doc_id", "text")
-    val pairs = ScalableDedup.ngramJaccardPairs(df, "doc_id", "text", n = 3,
-      minJaccard = 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 2L))) // the reversal shares tokens but no trigrams
-  }
 }

@@ -33,16 +33,6 @@ class FeaturesSpec extends SparkSpecBase {
     assert(math.abs(got(2).getDouble(0) - math.sqrt((9.0 + 4.0) / 2)) < 1e-12)
   }
 
-  test("time-frame features agree with the judged 10-minute range count") {
-    val got = Features.rollingByTime(ev, $"user_id", $"ts", $"value", seconds = 600)
-      .select($"event_id", $"t_cnt".as("c10m"))
-    val want = SparkEntry.queries("win_range_time")(spark, sf())
-      .select($"event_id", $"c10m")
-    // judged query limits to 500 ordered rows; compare on that subset
-    assert(want.join(got, Seq("event_id"))
-      .filter(want("c10m") =!= got("c10m")).count() == 0)
-  }
-
   test("bucketed features equal the tumbling aggregate") {
     val got = Features.bucketed(ev, $"event_type", $"ts", $"value", "hour")
     val want = SparkEntry.queries("stream_tumbling")(spark, sf())

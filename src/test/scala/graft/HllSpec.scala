@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.functions.Hll
 
@@ -11,6 +13,10 @@ import graft.functions.Hll
   */
 class HllSpec extends SparkSpecBase {
   import spark.implicits._
+
+  /** The graft_hll_estimate expression over a sketch column. */
+  private def estimate(c: Column): Column =
+    GraftBridge.column(Hll.HllEstimate(GraftBridge.expression(c)))
 
   private def relErr(approx: Long, exact: Long): Double =
     math.abs(approx.toDouble - exact) / math.max(exact, 1L)
@@ -83,9 +89,9 @@ class HllSpec extends SparkSpecBase {
       s"hll=${row.getLong(0)} exact=${row.getLong(1)}")
     // estimate of a persisted null sketch is null, wrong width fails loudly
     val withNull = Seq(Tuple1(Option.empty[Array[Byte]])).toDF("sk")
-    assert(withNull.select(Hll.hllEstimate($"sk")).collect().head.isNullAt(0))
+    assert(withNull.select(estimate($"sk")).collect().head.isNullAt(0))
     val bad = Seq(Tuple1(Array[Byte](1, 2, 3))).toDF("sk")
-    val e = intercept[Exception](bad.select(Hll.hllEstimate($"sk")).collect())
+    val e = intercept[Exception](bad.select(estimate($"sk")).collect())
     assert(e.getMessage != null)
   }
 
@@ -104,7 +110,7 @@ class HllSpec extends SparkSpecBase {
     // the decode path is a native expression, never a UDF
     val plan = Tables.events(spark, sf())
       .groupBy($"event_type").agg(Hll.hllSketch($"user_id").as("sk"))
-      .select(Hll.hllEstimate($"sk"))
+      .select(estimate($"sk"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BatchEvalPython") && !plan.toLowerCase.contains("scalaudf"),
       plan.take(2000))

@@ -119,7 +119,7 @@ class IngestSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("graft_orc").toFile.getAbsolutePath + "/out"
     val df = Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0)).toDF("id", "day", "v")
     Ingest.writeOrcPartitioned(df, dir, Seq("day"))
-    val back = Ingest.readOrc(spark, dir)
+    val back = spark.read.orc(dir)
     assert(back.count() == 2)
     assert(back.filter($"day" === "2024-01-02").select($"v").collect().map(_.getDouble(0)).toSeq == Seq(2.0))
     assert(new java.io.File(dir, "day=2024-01-01").exists())

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.functions.Kmv
 
@@ -11,6 +13,11 @@ import graft.functions.Kmv
   * hashes of a set are a pure function of the set. */
 class KmvSpec extends SparkSpecBase {
   import spark.implicits._
+
+  /** The graft_kmv_jaccard expression over two sketch columns. */
+  private def jaccard(a: Column, b: Column): Column =
+    GraftBridge.column(Kmv.KmvJaccard(GraftBridge.expression(a),
+      GraftBridge.expression(b)))
 
   test("exact below k; within ~3x standard error above") {
     val small = (1L to 500L).toDF("v")
@@ -32,7 +39,8 @@ class KmvSpec extends SparkSpecBase {
       .agg(Kmv.kmvSketch($"user_id").as("sk"))
       .write.parquet(dir)
     val merged = spark.read.parquet(dir)
-      .agg(Kmv.kmvMerge($"sk").as("sk")).collect().head.getAs[Array[Byte]](0)
+      .agg(GraftBridge.column(Kmv.KmvMergeAgg(GraftBridge.expression($"sk"))
+        .toAggregateExpression()).as("sk")).collect().head.getAs[Array[Byte]](0)
     val direct = e.agg(Kmv.kmvSketch($"user_id").as("sk"))
       .collect().head.getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(merged, direct),
@@ -44,7 +52,7 @@ class KmvSpec extends SparkSpecBase {
     val a = (1L to 600L).toDF("v").agg(Kmv.kmvSketch($"v").as("a"))
     val b = (301L to 900L).toDF("v").agg(Kmv.kmvSketch($"v").as("b"))
     val exact = a.crossJoin(b)
-      .select(Kmv.kmvJaccard($"a", $"b")).as[Double].head
+      .select(jaccard($"a", $"b")).as[Double].head
     // |A∩B| = 300, |A∪B| = 900 → 1/3, computed over full samples
     assert(math.abs(exact - 300.0 / 900.0) < 1e-12,
       s"subsketch-regime jaccard must be exact, got $exact")
@@ -52,14 +60,14 @@ class KmvSpec extends SparkSpecBase {
     val bigA = (1L to 100000L).toDF("v").agg(Kmv.kmvSketch($"v").as("a"))
     val bigB = (50001L to 150000L).toDF("v").agg(Kmv.kmvSketch($"v").as("b"))
     val est = bigA.crossJoin(bigB)
-      .select(Kmv.kmvJaccard($"a", $"b")).as[Double].head
+      .select(jaccard($"a", $"b")).as[Double].head
     val trueJ = 1.0 / 3.0
     assert(math.abs(est - trueJ) <= 3.0 / math.sqrt(Kmv.K) + 0.02,
       s"full-regime jaccard $est vs true $trueJ")
     // disjoint sets → 0
     val disjoint = a.crossJoin(
       (10000L to 10500L).toDF("v").agg(Kmv.kmvSketch($"v").as("b")))
-      .select(Kmv.kmvJaccard($"a", $"b")).as[Double].head
+      .select(jaccard($"a", $"b")).as[Double].head
     assert(disjoint == 0.0)
   }
 

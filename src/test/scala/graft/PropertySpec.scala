@@ -466,7 +466,7 @@ class PropertySpec extends SparkSpecBase {
         w
       }
       val merged = Bloom.mergeInPlace(filt(xs), filt(ys))
-      (xs ++ ys).foreach(k => assert(Bloom.containsBits(merged, k),
+      (xs ++ ys).foreach(k => assert(Bloom.containsBytes(Bloom.toBytes(merged), k),
         s"inserted key $k rejected after merge"))
       assert(java.util.Arrays.equals(Bloom.toBytes(merged),
         Bloom.toBytes(filt(xs ++ ys))),

@@ -16,13 +16,6 @@ class ScalableDedupSpec extends SparkSpecBase {
   ).toDF("doc_id", "text")
     .withColumn("toks", TextFunctions.tokens($"text"))
 
-  test("exact dedup keep-first keeps min id and counts dups") {
-    val df = Seq((1L, "x"), (2L, "x"), (3L, "y")).toDF("id", "k")
-    val got = ScalableDedup.exactDedupKeepFirst(df, Seq("k"), "id")
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(got == Map("x" -> ((1L, 2L)), "y" -> ((3L, 1L))))
-  }
-
   test("simhash: identical docs identical, near-dups close, unrelated far") {
     val sig = docs.select($"doc_id", ScalableDedup.simhash("toks").as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -73,30 +66,6 @@ class ScalableDedupSpec extends SparkSpecBase {
       .withColumn("toks", TextFunctions.tokenSet($"text"))
     val pairs = ScalableDedup.minhashCandidates(d, "doc_id", "toks").collect()
     assert(pairs.forall(r => r.getLong(0) < r.getLong(1)))
-  }
-
-  test("blocked levenshtein near-dup is sound and agrees with the probe form") {
-    // LSH blocking is probabilistic in RECALL (the documented trade) but
-    // must be SOUND: every blocked pair is a true bounded-distance pair
-    // with the exact same distance the all-pairs probe computes, and
-    // under the fixed seed the blocking is deterministic
-    val docs = Tables.documents(spark, sf()).filter($"doc_id" < 40)
-      .select($"doc_id", $"text")
-    def run() = ScalableDedup
-      .levenshteinNearDup(docs, "doc_id", "text", maxDist = 100,
-        maxJaccardDistance = 0.9, numHashTables = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val blocked = run()
-    val allPairs = graft.operators.TrainingData
-      .dedupLevenshtein(spark, sf()).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(blocked.subsetOf(allPairs), s"unsound: ${blocked -- allPairs}")
-    // the 40-doc window's near-dups overlap heavily in token sets, so
-    // blocking at 0.9 distance must recover a real share of them
-    assert(blocked.nonEmpty && blocked.size * 2 >= allPairs.size,
-      s"recall collapsed: ${blocked.size}/${allPairs.size}")
-    assert(blocked.forall { case (a, b, dd) => a < b && dd >= 0 && dd <= 100 })
-    assert(run() == blocked, "seeded blocking must be deterministic")
   }
 
   test("minhashBandedCandidates: empty hash sets drop out instead of sharing a bucket") {

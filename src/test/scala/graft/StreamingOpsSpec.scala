@@ -48,140 +48,6 @@ class StreamingOpsSpec extends SparkSpecBase {
     assert(got == batch)
   }
 
-  test("streaming HLL distinct-per-window equals the batch estimate exactly") {
-    // the register-max union is deterministic, so the streaming estimate
-    // must EQUAL the batch aggregate over the same rows, window for window
-    val got = runStream(StreamingOps.approxDistinctPerWindow(stream()),
-        "t_hll", "complete")
-      .collect().map(r => r.getTimestamp(0).getTime / 1000 -> r.getLong(1)).toMap
-    val batch = eventsDF(rows.toDF())
-      .groupBy(date_trunc("hour", $"ts").as("wstart"))
-      .agg(graft.functions.Hll.hll($"user_id").as("a"))
-      .collect().map(r => r.getTimestamp(0).getTime / 1000 -> r.getLong(1)).toMap
-    assert(got == batch)
-    // and at this tiny cardinality the estimate is exact
-    val exact = eventsDF(rows.toDF())
-      .groupBy(date_trunc("hour", $"ts").as("wstart"))
-      .agg(countDistinct($"user_id").as("e"))
-      .collect().map(r => r.getTimestamp(0).getTime / 1000 -> r.getLong(1)).toMap
-    assert(got == exact)
-  }
-
-  test("streaming CMS per-window sketches are bit-identical to batch") {
-    // counter-add is deterministic and order-free, so the streamed
-    // sketch bytes must EQUAL the batch aggregate's, window for window,
-    // and probing them gives the exact per-window user counts here
-    val got = runStream(
-        StreamingOps.keyFrequencySketchPerWindow(stream()), "t_cms", "complete")
-      .collect()
-      .map(r => r.getTimestamp(0).getTime / 1000 -> r.getAs[Array[Byte]](1)).toMap
-    val batch = eventsDF(rows.toDF())
-      .groupBy(date_trunc("hour", $"ts").as("wstart"))
-      .agg(graft.functions.CountMin.cmsSketch($"user_id").as("sk"))
-      .collect()
-      .map(r => r.getTimestamp(0).getTime / 1000 -> r.getAs[Array[Byte]](1)).toMap
-    assert(got.keySet == batch.keySet)
-    got.foreach { case (w, sk) =>
-      assert(java.util.Arrays.equals(sk, batch(w)), s"window $w sketch differs") }
-    // probe the persisted-shape sketches: user 1 has 2 events in hour 0
-    val h0 = got(0L)
-    val est = Seq(h0).toDF("sk")
-      .select(graft.functions.CountMin.cmsEstimate($"sk", lit(1L)))
-      .collect().head.getLong(0)
-    assert(est == 2L)
-  }
-
-  test("streaming Misra-Gries per-window sketches are bit-identical to batch") {
-    // event_type cardinality is far below K = 64, the exact regime: no
-    // truncation fires at any stage, so the streamed sketch bytes must
-    // EQUAL the batch aggregate's whatever the batch boundaries, and
-    // probing them gives exact per-window type counts with err = 0
-    val got = runStream(
-        StreamingOps.heavyHitterSketchPerWindow(stream()), "t_mg", "complete")
-      .collect()
-      .map(r => r.getTimestamp(0).getTime / 1000 -> r.getAs[Array[Byte]](1)).toMap
-    val batch = eventsDF(rows.toDF())
-      .groupBy(date_trunc("hour", $"ts").as("wstart"))
-      .agg(graft.functions.MisraGries.mgSketch($"event_type").as("sk"))
-      .collect()
-      .map(r => r.getTimestamp(0).getTime / 1000 -> r.getAs[Array[Byte]](1)).toMap
-    assert(got.keySet == batch.keySet)
-    got.foreach { case (w, sk) =>
-      assert(java.util.Arrays.equals(sk, batch(w)), s"window $w sketch differs") }
-    // hour 0 holds two clicks; the persisted sketch answers exactly
-    val h0 = got(0L)
-    val probed = Seq(h0).toDF("sk").select(
-      graft.functions.MisraGries.mgEstimate($"sk", lit("click")),
-      graft.functions.MisraGries.mgError($"sk"))
-      .collect().head
-    assert(probed.getLong(0) == 2L && probed.getLong(1) == 0L)
-  }
-
-  test("streaming quantile per-window sketches are bit-identical to batch") {
-    // the bucket index is a pure function of the value, so the streamed
-    // sketch bytes must EQUAL the batch aggregate's, window for window,
-    // and probing them recovers the per-window extremes within alpha
-    val got = runStream(
-        StreamingOps.valueDistributionSketchPerWindow(stream()), "t_qsk", "complete")
-      .collect()
-      .map(r => r.getTimestamp(0).getTime / 1000 -> r.getAs[Array[Byte]](1)).toMap
-    val batch = eventsDF(rows.toDF())
-      .groupBy(date_trunc("hour", $"ts").as("wstart"))
-      .agg(graft.functions.QuantileSketch.quantileSketch($"value").as("sk"))
-      .collect()
-      .map(r => r.getTimestamp(0).getTime / 1000 -> r.getAs[Array[Byte]](1)).toMap
-    assert(got.keySet == batch.keySet)
-    got.foreach { case (w, sk) =>
-      assert(java.util.Arrays.equals(sk, batch(w)), s"window $w sketch differs") }
-    // probe the persisted-shape sketches: hour 0 holds values {1.0, 2.0}
-    val h0 = got(0L)
-    val r = Seq(h0).toDF("sk").select(
-      graft.functions.QuantileSketch.quantileEstimate($"sk", lit(0.0)).as("lo"),
-      graft.functions.QuantileSketch.quantileEstimate($"sk", lit(1.0)).as("hi"))
-      .collect().head
-    assert(math.abs(r.getDouble(0) - 1.0) <= 0.01 + 1e-12)
-    assert(math.abs(r.getDouble(1) - 2.0) <= 0.02 + 1e-12)
-  }
-
-  test("streaming KMV per-window sketches are bit-identical to batch; overlap probes work") {
-    val got = runStream(
-        StreamingOps.keySampleSketchPerWindow(stream()), "t_kmv", "complete")
-      .collect()
-      .map(r => r.getTimestamp(0).getTime / 1000 -> r.getAs[Array[Byte]](1)).toMap
-    val batch = eventsDF(rows.toDF())
-      .groupBy(date_trunc("hour", $"ts").as("wstart"))
-      .agg(graft.functions.Kmv.kmvSketch($"user_id").as("sk"))
-      .collect()
-      .map(r => r.getTimestamp(0).getTime / 1000 -> r.getAs[Array[Byte]](1)).toMap
-    assert(got.keySet == batch.keySet)
-    got.foreach { case (w, sk) =>
-      assert(java.util.Arrays.equals(sk, batch(w)), s"window $w sketch differs") }
-    // cross-window overlap from the stored rows: hour 0 = {user 1},
-    // hour 1 (3600s) = {users 1, 2} → Jaccard 1/2; both below k → exact
-    val j = Seq((got(0L), got(3600L))).toDF("a", "b")
-      .select(graft.functions.Kmv.kmvJaccard($"a", $"b")).collect().head.getDouble(0)
-    assert(j == 0.5, s"hour0 {1} vs hour1 {1,2} must overlap exactly 1/2, got $j")
-  }
-
-  test("streaming sliding assigns each event to two windows") {
-    val got = runStream(StreamingOps.sliding(stream()), "t_slide", "complete")
-    assert(got.agg(sum($"c")).collect().head.getLong(0) == rows.size * 2)
-  }
-
-  test("streaming sessions split on the 30-minute gap") {
-    val got = runStream(StreamingOps.sessions(stream()), "t_sess", "complete")
-      .select($"user_id", $"n").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    // user 1: sessions {1,2}, {3}, {5} → n = 2,1,1 ; user 2: {4} → 1
-    assert(got == Seq((1L, 1L), (1L, 1L), (1L, 2L), (2L, 1L)))
-  }
-
-  test("streaming dedup drops the duplicate (user, event_type) rows") {
-    val got = runStream(StreamingOps.dedup(stream()), "t_dedup", "append")
-    // distinct (user_id, event_type): (1,click), (1,view), (2,click)
-    assert(got.count() == 3)
-  }
-
   test("readStream over the real events parquet matches the batch tumbling counts") {
     val stream = StreamingOps.readEventsStream(spark, sf())
     val got = runStream(StreamingOps.tumbling(stream), "t_file", "complete")
@@ -259,134 +125,6 @@ class StreamingOpsSpec extends SparkSpecBase {
     assert(counts == 1) // only event 1's window emitted; the late row never counted
   }
 
-  test("watermarked stream-stream interval join matches the batch join") {
-    implicit val ctx = spark.sqlContext
-    // times start at 1000s — a row AT the initial watermark 0 is late,
-    // as in the stateful-sessions fixture. Pairs form only within the
-    // preceding 30 min for the same user.
-    val pRows = Seq((10L, 2000L, 1L, "purchase", 0.0), (11L, 5000L, 1L, "purchase", 0.0),
-      (12L, 2500L, 2L, "purchase", 0.0))
-    val cRows = Seq((1L, 1000L, 1L, "click", 0.0), (2L, 1900L, 1L, "click", 0.0),
-      (3L, 4900L, 1L, "click", 0.0), (4L, 2400L, 2L, "click", 0.0),
-      (5L, 2400L, 3L, "click", 0.0))
-    val pm = MemoryStream[(Long, Long, Long, String, Double)]
-    val cm = MemoryStream[(Long, Long, Long, String, Double)]
-    pm.addData(pRows: _*); cm.addData(cRows: _*)
-    val got = runStream(
-        StreamingOps.intervalJoinStream(eventsDF(pm.toDF()), eventsDF(cm.toDF())),
-        "t_ivj", "append")
-      .select($"purchase_id", $"click_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // batch reference over the same rows, same predicate
-    val p = eventsDF(pRows.toDF()).select($"event_id".as("purchase_id"), $"user_id", $"ts".as("p_ts"))
-    val c = eventsDF(cRows.toDF()).select($"event_id".as("click_id"), $"user_id".as("c_uid"), $"ts".as("c_ts"))
-    val batch = p.join(c, $"user_id" === $"c_uid"
-        && $"c_ts" <= $"p_ts" && $"c_ts" >= $"p_ts" - expr("interval 30 minutes"))
-      .select($"purchase_id", $"click_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == batch)
-    // the fixture exercises both bounds: click 1 (1000s) is inside
-    // purchase 10's (2000s) window, click 3 (4900s) is AFTER purchase 10
-    // and inside purchase 11's; user 3's click pairs with nothing
-    assert(got == Set((10L, 1L), (10L, 2L), (11L, 3L), (12L, 4L)))
-  }
-
-  test("streaming interval-overlap self-join equals the batch bucketed join " +
-      "under scrambled multi-batch delivery") {
-    implicit val ctx = spark.sqlContext
-    // 60-min activity windows per event (the join_interval_bucketed
-    // shape): ids 1..12, starts chosen so overlaps cross bucket
-    // boundaries both ways and some pairs share several buckets
-    val ivRows: Seq[(Long, Long)] = Seq(
-      1L -> 0L, 2L -> 1700L, 3L -> 3500L, 4L -> 3650L, 5L -> 7300L,
-      6L -> 7310L, 7L -> 10000L, 8L -> 13900L, 9L -> 14100L,
-      10L -> 100L, 11L -> 3599L, 12L -> 7200L)
-    // shift well past the epoch: the global watermark clamps at 0, and a
-    // row AT the clamp would be late-dropped when delivered out of order
-    def ivDF(df: DataFrame): DataFrame =
-      df.select($"_1".as("event_id"),
-        timestamp_seconds($"_2" + 864000L).as("st"),
-        timestamp_seconds($"_2" + 864000L + 3600L).as("en"))
-    val ms = MemoryStream[(Long, Long)]
-    // SCRAMBLED delivery across three micro-batches: later intervals
-    // arrive first, each batch internally shuffled (seeded) — the
-    // result must not depend on arrival order within the horizon
-    val shuffled = new scala.util.Random(7).shuffle(ivRows)
-    val (b1, rest) = shuffled.splitAt(4)
-    val (b2, b3) = rest.splitAt(4)
-    ms.addData(b1: _*)
-    val out = StreamingOps.overlapSelfJoinStream(ivDF(ms.toDF()),
-      "event_id", "st", "en", bucketSeconds = 3600L,
-      maxLenSeconds = 3600L, watermark = "2 days")
-    val q = out.writeStream.format("memory").queryName("t_ivself")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-      ms.addData(b3: _*); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_ivself")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // batch reference 1: the judged bucketed operator on the same rows
-    val batchBucketed = graft.operators.IntervalJoin.overlapSelfJoin(
-        ivDF(ivRows.toDF()), "event_id", "st", "en", bucketSeconds = 3600L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // batch reference 2: the naive theta join (semantics ground truth)
-    val t = ivDF(ivRows.toDF())
-    val naive = t.as("a").join(t.as("b"),
-        $"a.event_id" < $"b.event_id"
-          && $"a.st" <= $"b.en" && $"b.st" <= $"a.en")
-      .select($"a.event_id", $"b.event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(batchBucketed == naive, "batch bucketed vs theta ground truth")
-    assert(got == naive, s"stream vs batch: missing=${naive -- got} extra=${got -- naive}")
-    assert(got.nonEmpty && got.contains((1L, 2L)) && got.contains((5L, 6L)))
-  }
-
-  test("streaming interval-overlap rejects intervals longer than maxLen loudly") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[(Long, Long)]
-    // a 2-hour interval under maxLenSeconds=3600: its genuine overlaps
-    // would be SILENTLY dropped by the eviction range, so the guard
-    // must fail the query instead
-    ms.addData((1L, 1000L))
-    val out = StreamingOps.overlapSelfJoinStream(
-      ms.toDF().select($"_1".as("event_id"),
-        timestamp_seconds($"_2" + 864000L).as("st"),
-        timestamp_seconds($"_2" + 864000L + 7200L).as("en")),
-      "event_id", "st", "en", bucketSeconds = 3600L,
-      maxLenSeconds = 3600L, watermark = "2 days")
-    val q = out.writeStream.format("memory").queryName("t_ivguard")
-      .outputMode("append").start()
-    val err = intercept[Exception] {
-      try q.processAllAvailable() finally q.stop()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(err).exists(_.contains("longer than maxLenSeconds")),
-      s"got ${messages(err)}")
-  }
-
-  test("streaming as-of enrichment attaches the latest history row per probe") {
-    val history = Seq((1L, 100L, "stateA"), (1L, 500L, "stateB"), (2L, 50L, "stateX"))
-      .toDF("user_id", "hsec", "state")
-      .select($"user_id", timestamp_seconds($"hsec").as("hts"), $"state")
-    val got = scala.collection.mutable.Map.empty[Long, Array[(Long, String)]]
-    val q = StreamingOps.asofEnrichStream(
-      stream().select($"user_id", $"ts", $"event_id"), () => history,
-      Seq("user_id"), "ts", "hts") { (batch, id) =>
-      got(id) = batch.select($"event_id", $"state")
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    val all = got.values.flatten.toMap
-    // events at sec 0/600/3700/90000 for user 1: before 100s → null;
-    // stateB took effect at 500s, so every later event carries it;
-    // user 2 at 3800s → stateX
-    assert(all == Map(1L -> null, 2L -> "stateB", 3L -> "stateB",
-      5L -> "stateB", 4L -> "stateX"))
-  }
-
   test("readDocumentsStream reads the real corpus file and annotates it") {
     val streamed = StreamingOps.annotateDocuments(
       StreamingOps.readDocumentsStream(spark, sf()))
@@ -420,110 +158,6 @@ class StreamingOpsSpec extends SparkSpecBase {
       .select($"doc_id", $"quality", $"lang_pred", $"fp")
     assert(got.count() == 3)
     assert(got.except(want).count() == 0 && want.except(got).count() == 0)
-  }
-
-  test("streaming PII redaction equals the batch Redact chain row-for-row") {
-    val docs = Seq(
-      (1L, "mail me at a.b@example.com or 555-123-4567"),
-      (2L, "ssn 123-45-6789 card 1111-2222-3333-4444 ip 10.0.0.1"),
-      (3L, "nothing sensitive here"))
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    val streamed = StreamingOps.redactDocuments(ms.toDF().toDF("doc_id", "text"))
-    val q = streamed.writeStream.format("memory").queryName("t_redact")
-      .outputMode("append").start()
-    try { ms.addData(docs: _*); q.processAllAvailable() } finally q.stop()
-    val got = spark.table("t_redact")
-    val want = StreamingOps.redactDocuments(docs.toDF("doc_id", "text"))
-    assert(got.count() == 3)
-    assert(got.except(want).count() == 0 && want.except(got).count() == 0)
-    val r1 = got.filter($"doc_id" === 1L).select($"text").as[String].head()
-    assert(r1.contains("[EMAIL]") && r1.contains("[PHONE]"), r1)
-    assert(got.filter($"doc_id" === 2L).select($"pii_hits").as[Long].head() == 3L)
-  }
-
-  test("streaming decontamination equals batch over the union of micro-batches") {
-    val bench = Seq((100L, "the quick brown fox jumps over the lazy dog"))
-      .toDF("doc_id", "text")
-    val batch1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"), // contained → drop
-      (2L, "completely unrelated words about query engines"))
-    val batch2 = Seq(
-      (3L, "quick brown fox jumps"), // substring of a bench doc → drop
-      (4L, "yet another clean document holding different text"))
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    val acc = scala.collection.mutable.ArrayBuffer[Long]()
-    val q = StreamingOps.decontaminateStream(
-        ms.toDF().toDF("doc_id", "text"), bench)(
-        (clean, _) => acc.synchronized {
-          acc ++= clean.select($"doc_id").as[Long].collect(); () })
-      .start()
-    try {
-      ms.addData(batch1: _*); q.processAllAvailable()
-      ms.addData(batch2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val corpus = (batch1 ++ batch2).toDF("doc_id", "text")
-    val wantIds = corpus.join(
-        graft.operators.Decontaminate
-          .contaminated(corpus, bench, "doc_id", "text", 3, 0.8)
-          .select($"doc_id"),
-        Seq("doc_id"), "left_anti")
-      .select($"doc_id").as[Long].collect().toSet
-    assert(acc.toSet == wantIds)
-    assert(wantIds == Set(2L, 4L)) // the fixture must actually drop 1 and 3
-  }
-
-  test("streaming ANN ingest grows the index; full probe stays exact") {
-    import graft.operators.Ann
-    val emb = Tables.embeddings(spark, sf())
-    val dir = java.nio.file.Files.createTempDirectory("annstream").toString + "/idx"
-    Ann.buildIvfIndex(spark, emb.filter($"vec_id" < 250), "vec_id",
-      "embedding", dir, nlist = 8)
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[(Long, Seq[Double])]
-    val q = StreamingOps.annIndexIngestStream(
-      ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", dir).start()
-    def rows(lo: Long, hi: Long) = emb
-      .filter($"vec_id" >= lo && $"vec_id" < hi)
-      .collect().map(r => (r.getLong(0),
-        r.getSeq[Float](1).map(_.toDouble)))
-    try {
-      ms.addData(rows(250, 375).toSeq)
-      q.processAllAvailable()
-      ms.addData(rows(375, 500).toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    // two generations landed beside the base build
-    assert(new java.io.File(s"$dir/lists").listFiles()
-      .map(_.getName).count(_.startsWith("gen=")) == 3)
-    // probing every list over the grown index is exhaustive: it must
-    // equal brute force over the full corpus, streamed vectors included
-    val probes = emb.filter($"vec_id" < 5)
-    def topkMap(df: DataFrame) = df.select($"probe_id", $"nb", $"sim")
-      .collect().groupBy(_.getLong(0))
-      .map { case (p, rs) =>
-        p -> rs.sortBy(r => (-r.getDouble(2), r.getLong(1))).map(_.getLong(1)).toSeq
-      }
-    val exact = topkMap(Ann.bruteForceTopK(emb, probes, "vec_id", "embedding", k = 5))
-    val served = topkMap(Ann.ivfTopKIndexed(spark, dir, probes, "vec_id",
-      "embedding", k = 5, nprobe = 8))
-    assert(served == exact, "streamed index at nprobe=nlist must equal brute force")
-
-    // a reset checkpoint over a surviving index fails fast instead of
-    // silently overwriting gen=1 and mixing lineages (same contract as
-    // the dedup streams): a fresh stream restarts batch ids at 0 while
-    // gens 1..2 from the run above survive in the index
-    val ms2 = MemoryStream[(Long, Seq[Double])]
-    val q2 = StreamingOps.annIndexIngestStream(
-      ms2.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", dir).start()
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      try { ms2.addData(rows(0, 1).toSeq); q2.processAllAvailable() }
-      finally q2.stop()
-    }
-    def chain(t: Throwable): String =
-      if (t == null) "" else t.getMessage + "\n" + chain(t.getCause)
-    assert(chain(e).contains("Refusing to mix lineages"), chain(e))
   }
 
   test("incremental MEDIA dedup stream drops cross-batch near-duplicates") {
@@ -645,494 +279,6 @@ class StreamingOpsSpec extends SparkSpecBase {
       || Option(e.getCause).exists(_.getMessage.contains("Refusing to mix lineages")))
   }
 
-  test("stateful funnel promotes pending stages on an out-of-order view") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[(Long, Long, Long, String, Double)]
-    val out = StreamingOps.statefulFunnel(eventsDF(ms.toDF()),
-      watermark = "1 day")
-    val q = out.writeStream.format("memory").queryName("t_funnel")
-      .outputMode("update").start()
-    try {
-      // batch 1: user 1's click (2000s) PRECEDES its first view (2500s)
-      // and the purchase (3000s) precedes any eligible click — neither
-      // later stage may fire yet; user 2 has a click but no view ever
-      ms.addData((1L, 2000L, 1L, "click", 1.0),
-        (2L, 2500L, 1L, "view", 1.0),
-        (3L, 3000L, 1L, "purchase", 1.0),
-        (4L, 100L, 2L, "click", 1.0))
-      q.processAllAvailable()
-      // batch 2: an out-of-order but admissible view at 1000s lowers
-      // min-view below the pending 2000s click → click promotes, which
-      // makes the 3000s pending purchase eligible in the same pass
-      ms.addData((5L, 1000L, 1L, "view", 1.0),
-        (6L, 4000L, 1L, "click", 1.0))
-      q.processAllAvailable()
-      // batch 3 advances the watermark past 1 day (wm → 113600s); batch
-      // 4's view for user 1 at 500s is BELOW it and must be dropped
-      // before the function runs (EventTimeTimeout late-row semantics —
-      // the invariant the pending-pool pruning rests on), so user 1
-      // re-emits an UNCHANGED snapshot, not one with t_view=500
-      ms.addData((7L, 200000L, 3L, "view", 1.0))
-      q.processAllAvailable()
-      ms.addData((8L, 500L, 1L, "view", 1.0),
-        (9L, 200500L, 1L, "click", 1.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    def sec(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
-      if (r.isNullAt(i)) None else Some(r.getTimestamp(i).getTime / 1000)
-    val got = spark.table("t_funnel").collect()
-      .map(r => (r.getLong(0), sec(r, 1), sec(r, 2), sec(r, 3))).toSet
-    assert(got == Set(
-      (1L, Some(2500L), None, None),          // batch-1 snapshot
-      (2L, None, None, None),                 // no view: funnel not entered
-      (1L, Some(1000L), Some(2000L), Some(3000L)), // batch-2, matches batch
-      (3L, Some(200000L), None, None),        // batch-3 watermark driver
-      // batch-4: the 500s view was dropped as late; only the admissible
-      // click arrived (no change to the established mins)
-      (1L, Some(1000L), Some(2000L), Some(3000L))))
-  }
-
-  test("stateful EWMA folds in event-time order regardless of batch boundaries") {
-    implicit val ctx = spark.sqlContext
-    // events for user 1 delivered SHUFFLED across three batches; the
-    // emitted smoothed values must equal the batch recurrence over the
-    // time-ordered series, bit for bit
-    val series = Seq(1000L -> 9.0, 2000L -> 3.0, 3000L -> 6.0, 4000L -> 12.0)
-    val alpha = 1.0 / 3
-    val expected = series.scanLeft(Double.NaN) { case (s, (_, x)) =>
-      if (s.isNaN) x else alpha * x + (1 - alpha) * s
-    }.drop(1)
-    val ms = MemoryStream[(Long, Long, Long, String, Double)]
-    // the watermark must exceed the reorder span (timestamps run 1000 to
-    // 4000 SECONDS): an hour keeps batch-2's out-of-order 1000s sample
-    // admissible while batch-1's samples stay unripe
-    val out = StreamingOps.statefulEwma(eventsDF(ms.toDF()),
-      alpha = alpha, watermark = "1 hour")
-    val q = out.writeStream.format("memory").queryName("t_ewma")
-      .outputMode("append").start()
-    try {
-      // batch 1: the two MIDDLE samples arrive first — nothing is ripe
-      // (watermark still behind), nothing may fold yet
-      ms.addData((2L, 2000L, 1L, "click", 3.0), (3L, 3000L, 1L, "click", 6.0))
-      q.processAllAvailable()
-      assert(spark.table("t_ewma").count() == 0)
-      // batch 2: the FIRST sample arrives out of order, plus the fourth;
-      // watermark (4000s − 1h = 400s) still ripens nothing
-      ms.addData((1L, 1000L, 1L, "click", 9.0), (4L, 4000L, 1L, "click", 12.0))
-      q.processAllAvailable()
-      assert(spark.table("t_ewma").count() == 0)
-      // batch 3: a far-future event pushes the watermark past all four →
-      // they fold in ts order in ONE flush
-      ms.addData((9L, 1000000L, 2L, "click", 1.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_ewma").filter($"user_id" === 1L)
-      .orderBy($"ts").select($"ewma").collect().map(_.getDouble(0)).toSeq
-    assert(got == expected,
-      s"streamed $got vs batch recurrence $expected")
-  }
-
-  test("stateful EWMA keys on exact microseconds — same-millisecond events both fold") {
-    implicit val ctx = spark.sqlContext
-    // two events for one user INSIDE one millisecond (µs 200 and 800 of
-    // ms 7e9) — a ms-keyed fold would silently drop the second under the
-    // duplicate-instant guard and truncate the emitted ts; the events
-    // data carries µs timestamps, so this is the real resolution
-    val us = Seq(7000000000200L -> 9.0, 7000000000800L -> 3.0,
-      7000003000000L -> 6.0)
-    val alpha = 1.0 / 3
-    val expected = us.scanLeft(Double.NaN) { case (s, (_, x)) =>
-      if (s.isNaN) x else alpha * x + (1 - alpha) * s
-    }.drop(1)
-    val ms = MemoryStream[(Long, Long, Double)]
-    val in = ms.toDF().select(timestamp_micros($"_2").as("ts"),
-      $"_1".as("user_id"), $"_3".as("value"))
-    val out = StreamingOps.statefulEwma(in, alpha = alpha, watermark = "1 minute")
-    val q = out.writeStream.format("memory").queryName("t_ewma_us")
-      .outputMode("append").start()
-    try {
-      ms.addData((1L, us(0)._1, us(0)._2), (1L, us(1)._1, us(1)._2),
-        (1L, us(2)._1, us(2)._2))
-      q.processAllAvailable()
-      // watermark driver far in the future ripens all three
-      ms.addData((2L, 8000000000000L, 1.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("t_ewma_us").filter($"user_id" === 1L)
-      .orderBy($"ts")
-      .select(unix_micros($"ts"), $"ewma").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // all three fold (nothing dropped), emitted ts carries the exact µs,
-    // and the smoothed values equal the batch recurrence bit for bit
-    assert(rows.map(_._1) == us.map(_._1),
-      s"µs timestamps not preserved: ${rows.map(_._1)}")
-    assert(rows.map(_._2) == expected)
-  }
-
-  test("stateful anomaly zscore equals the batch window query bit for bit") {
-    implicit val ctx = spark.sqlContext
-    // the REAL sf0.001 events, delivered shuffled across three batches —
-    // the twin must reproduce the judged batch query's anomaly set
-    // exactly (same event ids, same 2-dp z values)
-    val ev = Tables.events(spark, sf())
-      .select($"user_id", unix_micros($"ts").as("us"), $"event_id", $"value")
-      .as[(Long, Long, Long, Double)].collect().toSeq
-    // deterministic pseudo-shuffle: batch assignment by event_id mod 3
-    // interleaves every user's series across all three batches
-    val shuffled = ev.sortBy(r => (r._3 % 3, r._3 / 7 % 5, r._3))
-    val ms = MemoryStream[(Long, Long, Long, Double)]
-    val in = ms.toDF().select($"_1".as("user_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("event_id"),
-      $"_4".as("value"))
-    // the shuffled delivery reorders rows across the WHOLE month-long
-    // span, so the watermark must exceed that span — anything smaller
-    // and Spark drops later batches' earlier rows as late before the
-    // function ever sees them
-    val out = StreamingOps.statefulAnomalyZscore(in, watermark = "60 days")
-    val q = out.writeStream.format("memory").queryName("t_zscore")
-      .outputMode("append").start()
-    try {
-      shuffled.grouped((shuffled.size + 2) / 3).foreach { b =>
-        ms.addData(b: _*); q.processAllAvailable()
-      }
-      // far-future driver pushes the watermark past every buffered row
-      ms.addData((999999L, ev.map(_._2).max + 120L * 86400 * 1000000, 0L, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_zscore")
-      .select($"event_id", $"user_id", unix_micros($"ts").as("us"),
-        $"value", $"z")
-      .as[(Long, Long, Long, Double, Double)].collect().toSet
-    val want = graft.operators.TimeSeries
-      .anomalyZscore(Tables.events(spark, sf()))
-      .select($"event_id", $"user_id",
-        unix_micros($"ts".cast("timestamp")).as("us"), $"value", $"z")
-      .as[(Long, Long, Long, Double, Double)].collect().toSet
-    assert(want.nonEmpty)
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
-  test("stateful multires equals the batch ts_multires rollup bit for bit") {
-    implicit val ctx = spark.sqlContext
-    // the REAL sf0.001 events (the judged query's user_id < 5 slice),
-    // delivered shuffled across three batches — all three grains fold
-    // commutatively, so the sealed day/week/month rows must equal the
-    // batch GROUPING SETS aggregate exactly
-    val ev = Tables.events(spark, sf())
-      .filter($"user_id" < 5)
-      .select($"user_id", unix_micros($"ts").as("us"), $"value")
-      .as[(Long, Long, Double)].collect().toSeq
-    val shuffled = ev.sortBy(r => (r._2 % 3, r._2 / 7 % 5, r._2, r._3))
-    val ms = MemoryStream[(Long, Long, Double)]
-    val in = ms.toDF().select($"_1".as("user_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("value"))
-    val out = StreamingOps.statefulMultires(in, watermark = "60 days")
-    val q = out.writeStream.format("memory").queryName("t_multires")
-      .outputMode("append").start()
-    try {
-      shuffled.grouped((shuffled.size + 2) / 3).foreach { b =>
-        ms.addData(b: _*); q.processAllAvailable()
-      }
-      // far-future driver seals every open bucket (months included)
-      ms.addData((999999L, ev.map(_._2).max + 120L * 86400 * 1000000, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_multires")
-      .filter($"user_id" =!= 999999L)
-      .select($"user_id", $"grain", unix_micros($"bucket").as("us"),
-        $"n", $"sum_cents")
-      .as[(Long, String, Long, Long, Long)].collect().toSet
-    val want = graft.operators.TimeSeries.tsMultires(spark, sf())
-      .select($"user_id", $"grain",
-        unix_micros($"bucket".cast("timestamp")).as("us"),
-        $"n", $"sum_cents")
-      .as[(Long, String, Long, Long, Long)].collect().toSet
-    assert(want.nonEmpty && want.exists(_._2 == "month"))
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
-  test("stateful retention cells roll up to the batch ts_retention_cohort") {
-    implicit val ctx = spark.sqlContext
-    // the REAL sf0.001 events shuffled across three batches — the hard
-    // part is cohort finality: a late earlier event reassigns a user's
-    // cohort, so cells must only emit once the watermark freezes t0
-    val ev = Tables.events(spark, sf())
-      .select($"user_id", unix_micros($"ts").as("us"))
-      .as[(Long, Long)].collect().toSeq
-    val shuffled = ev.sortBy(r => (r._2 % 3, r._2 / 7 % 5, r._2, r._1))
-    val ms = MemoryStream[(Long, Long)]
-    val in = ms.toDF().select($"_1".as("user_id"),
-      timestamp_micros($"_2").as("ts"))
-    val out = StreamingOps.statefulRetentionCells(in, watermark = "60 days")
-    val q = out.writeStream.format("memory").queryName("t_retention")
-      .outputMode("append").start()
-    try {
-      shuffled.grouped((shuffled.size + 2) / 3).foreach { b =>
-        ms.addData(b: _*); q.processAllAvailable()
-      }
-      ms.addData((999999L, ev.map(_._2).max + 120L * 86400 * 1000000))
-      q.processAllAvailable()
-    } finally q.stop()
-    val cells = spark.table("t_retention").filter($"user_id" =!= 999999L)
-    // exactly-once witness: no (user, cohort, week_n) cell may repeat —
-    // this is what makes count(*) below equal countDistinct(user)
-    assert(cells.groupBy($"user_id", $"cohort", $"week_n").count()
-      .filter($"count" > 1).count() == 0, "a cell emitted twice")
-    val got = cells
-      .groupBy($"cohort", $"week_n")
-      .agg(count(lit(1)).as("n_users"))
-      .select(unix_micros($"cohort").as("us"), $"week_n", $"n_users")
-      .as[(Long, Int, Long)].collect().toSet
-    val want = graft.operators.Analytics.tsRetentionCohort(spark, sf())
-      .select(unix_micros($"cohort".cast("timestamp")).as("us"),
-        $"week_n", $"n_users")
-      .as[(Long, Int, Long)].collect().toSet
-    assert(want.nonEmpty)
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
-  test("stateful rolling rmssd equals the batch hrv_rolling_rmssd bit for bit") {
-    implicit val ctx = spark.sqlContext
-    // the REAL sf0.001 events, delivered shuffled across three batches —
-    // the twin must reproduce the judged sliding-feature query exactly
-    // (same per-sample 2-dp RMSSD values, same None rows)
-    val ev = Tables.events(spark, sf())
-      .select($"user_id", unix_micros($"ts").as("us"), $"event_id", $"value")
-      .as[(Long, Long, Long, Double)].collect().toSeq
-    val shuffled = ev.sortBy(r => (r._3 % 3, r._3 / 7 % 5, r._3))
-    val ms = MemoryStream[(Long, Long, Long, Double)]
-    val in = ms.toDF().select($"_1".as("user_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("event_id"),
-      $"_4".as("value"))
-    val out = StreamingOps.statefulRollingRmssd(in, watermark = "60 days")
-    val q = out.writeStream.format("memory").queryName("t_rollrmssd")
-      .outputMode("append").start()
-    try {
-      shuffled.grouped((shuffled.size + 2) / 3).foreach { b =>
-        ms.addData(b: _*); q.processAllAvailable()
-      }
-      ms.addData((999999L, ev.map(_._2).max + 120L * 86400 * 1000000, 0L, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_rollrmssd")
-      .filter($"user_id" =!= 999999L)
-      .select($"user_id", $"event_id", $"rmssd_60")
-      .as[(Long, Long, Option[Double])].collect().toSet
-    val want = graft.operators.TrainingData.hrvRollingRmssd(spark, sf())
-      .select($"series_key", $"event_id", $"rmssd_60")
-      .as[(Long, Long, Option[Double])].collect().toSet
-    assert(want.nonEmpty)
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
-  test("stateful session stats equals the batch ts_session_stats rollup bit for bit") {
-    implicit val ctx = spark.sqlContext
-    // the REAL sf0.001 events, shuffled across three batches — interval
-    // merge is order-insensitive, so the rollup must come out identical
-    // to the batch window query whatever the delivery order
-    val ev = Tables.events(spark, sf())
-      .select($"user_id", unix_micros($"ts").as("us"), $"event_id")
-      .as[(Long, Long, Long)].collect().toSeq
-    val shuffled = ev.sortBy(r => (r._3 % 3, r._3 / 7 % 5, r._3))
-    val ms = MemoryStream[(Long, Long, Long)]
-    val in = ms.toDF().select($"_1".as("user_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("event_id"))
-    val out = StreamingOps.statefulSessionStats(in, watermark = "60 days")
-    val q = out.writeStream.format("memory").queryName("t_sess_stats")
-      .outputMode("append").start()
-    try {
-      shuffled.grouped((shuffled.size + 2) / 3).foreach { b =>
-        ms.addData(b: _*); q.processAllAvailable()
-      }
-      // far-future driver seals every user's last session
-      ms.addData((999999L, ev.map(_._2).max + 120L * 86400 * 1000000, 0L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_sess_stats")
-      .filter($"user_id" =!= 999999L)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    val want = graft.operators.TimeSeries.tsSessionStats(spark, sf())
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    assert(want.nonEmpty)
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
-  test("stateful OHLC equals the batch ts_ohlc_resample bit for bit") {
-    implicit val ctx = spark.sqlContext
-    // the REAL sf0.001 events (the judged query's user_id < 10 slice),
-    // shuffled across three batches — every accumulator update is
-    // commutative (endpoint picks with timestamps, extrema, count), so
-    // out-of-order delivery must reproduce the batch groupBy exactly
-    val ev = Tables.events(spark, sf())
-      .filter($"user_id" < 10)
-      .select($"user_id", unix_micros($"ts").as("us"), $"value")
-      .as[(Long, Long, Double)].collect().toSeq
-    val shuffled = ev.sortBy(r => (r._2 % 3, r._2 / 7 % 5, r._2, r._3))
-    val ms = MemoryStream[(Long, Long, Double)]
-    val in = ms.toDF().select($"_1".as("user_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("value"))
-    val out = StreamingOps.statefulOhlc(in, watermark = "60 days")
-    val q = out.writeStream.format("memory").queryName("t_ohlc")
-      .outputMode("append").start()
-    try {
-      shuffled.grouped((shuffled.size + 2) / 3).foreach { b =>
-        ms.addData(b: _*); q.processAllAvailable()
-      }
-      // far-future driver seals every open day
-      ms.addData((999999L, ev.map(_._2).max + 120L * 86400 * 1000000, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_ohlc")
-      .filter($"user_id" =!= 999999L)
-      .select($"user_id", unix_micros($"day").as("day_us"), $"open_v",
-        $"high_v", $"low_v", $"close_v", $"n")
-      .as[(Long, Long, Double, Double, Double, Double, Long)]
-      .collect().toSet
-    val want = graft.operators.Analytics.tsOhlcResample(spark, sf())
-      .select($"user_id", unix_micros($"day".cast("timestamp")).as("day_us"),
-        $"open_v", $"high_v", $"low_v", $"close_v", $"n")
-      .as[(Long, Long, Double, Double, Double, Double, Long)]
-      .collect().toSet
-    assert(want.nonEmpty)
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
-  test("stateful gap fill equals the batch ts_gap_fill spine bit for bit") {
-    implicit val ctx = spark.sqlContext
-    // the REAL sf0.001 events (the judged query's user_id < 10 slice),
-    // shuffled across three batches — cent folds are commutative and
-    // the spine must grow in sealed-day order with gap 0-rows exactly
-    // where the batch LEFT JOIN leaves nulls
-    val ev = Tables.events(spark, sf())
-      .filter($"user_id" < 10)
-      .select($"user_id", unix_micros($"ts").as("us"), $"value")
-      .as[(Long, Long, Double)].collect().toSeq
-    val shuffled = ev.sortBy(r => (r._2 % 3, r._2 / 7 % 5, r._2, r._3))
-    val ms = MemoryStream[(Long, Long, Double)]
-    val in = ms.toDF().select($"_1".as("user_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("value"))
-    val out = StreamingOps.statefulGapFill(in, watermark = "60 days")
-    val q = out.writeStream.format("memory").queryName("t_gapfill")
-      .outputMode("append").start()
-    try {
-      shuffled.grouped((shuffled.size + 2) / 3).foreach { b =>
-        ms.addData(b: _*); q.processAllAvailable()
-      }
-      ms.addData((999999L, ev.map(_._2).max + 120L * 86400 * 1000000, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_gapfill")
-      .filter($"user_id" =!= 999999L)
-      .select($"user_id", unix_micros($"day").as("day_us"), $"v", $"filled")
-      .as[(Long, Long, Double, Boolean)].collect().toSet
-    val want = graft.operators.Analytics.tsGapFill(spark, sf())
-      .select($"user_id", unix_micros($"day".cast("timestamp")).as("day_us"),
-        $"v", $"filled")
-      .as[(Long, Long, Double, Boolean)].collect().toSet
-    assert(want.nonEmpty && want.exists(_._4),
-      "fixture must contain at least one gap row")
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
-  test("stateful changepoint equals the batch ts_changepoint bit for bit") {
-    implicit val ctx = spark.sqlContext
-    // the REAL sf0.001 events, shuffled across three batches — the
-    // cent-lattice daily fold is order-insensitive, so the close-time
-    // split search must replay the batch argmax exactly
-    val ev = Tables.events(spark, sf())
-      .select($"user_id", unix_micros($"ts").as("us"), $"value")
-      .as[(Long, Long, Double)].collect().toSeq
-    val shuffled = ev.sortBy(r => (r._2 % 3, r._2 / 7 % 5, r._2, r._3))
-    val ms = MemoryStream[(Long, Long, Double)]
-    val in = ms.toDF().select($"_1".as("user_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("value"))
-    val out = StreamingOps.statefulChangepoint(in, watermark = "60 days")
-    val q = out.writeStream.format("memory").queryName("t_changepoint")
-      .outputMode("append").start()
-    try {
-      shuffled.grouped((shuffled.size + 2) / 3).foreach { b =>
-        ms.addData(b: _*); q.processAllAvailable()
-      }
-      // far-future driver seals every real user's series (90-day idle
-      // + 60-day watermark both far inside the 200-day jump)
-      ms.addData((999999L, ev.map(_._2).max + 200L * 86400 * 1000000, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_changepoint")
-      .filter($"user_id" =!= 999999L)
-      .as[(Long, Long, Long, Long, Double)].collect().toSet
-    val want = graft.operators.TimeSeries.tsChangepoint(spark, sf())
-      .select($"user_id", unix_micros($"split_day".cast("timestamp")).as("split_day_us"),
-        $"i_days", $"n_days", $"shift_num")
-      .as[(Long, Long, Long, Long, Double)].collect().toSet
-    assert(want.nonEmpty)
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
-  test("stateful anomaly zscore admits a distinct same-instant straggler at the watermark boundary") {
-    implicit val ctx = spark.sqlContext
-    // Spark's late filter drops `ts <= watermark` (µs-exact), so an
-    // instant is permanently SEALED the moment the watermark reaches
-    // it. Strict-< ripeness folds an instant only once sealed — which
-    // guarantees a DISTINCT same-µs straggler (smaller event_id,
-    // delivered batches later while the instant is still open) lands in
-    // its exact (µs, event_id) fold position instead of being guarded
-    // away as a redelivery or folded out of order.
-    val base = 1700000000000000L // µs, ms-aligned
-    def t(i: Long): Long = base + i * 1000000L
-    // 11 warm-up values with real variance, then the contested instant
-    // t(12): id 99 value 20.0 (an anomaly itself once folded) delivered
-    // two batches LATE, id 100 value 10.0 delivered on time; then a
-    // spike at t(13) whose window must contain BOTH t(12) values.
-    val warm = (1 to 11).map(i => (i.toLong, t(i), 1L, 10.0 + 0.3 * (i % 3)))
-    val onTime = (100L, t(12), 1L, 10.0)
-    val straggler = (99L, t(12), 1L, 20.0)
-    val spike = (200L, t(13), 1L, 50.0)
-    val all = warm ++ Seq(onTime, straggler, spike)
-    val ms = MemoryStream[(Long, Long, Long, Double)]
-    val in = ms.toDF().select($"_1".as("event_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("user_id"),
-      $"_4".as("value"))
-    val out = StreamingOps.statefulAnomalyZscore(in, watermark = "2 seconds")
-    val q = out.writeStream.format("memory").queryName("t_zscore_boundary")
-      .outputMode("append").start()
-    try {
-      // after batch 1 the watermark is t(10) — t(12) is open
-      ms.addData(warm :+ onTime: _*); q.processAllAvailable()
-      // the straggler arrives a batch later, still admissible
-      // (t(12) > watermark) — its instant has already seen id 100
-      ms.addData(straggler); q.processAllAvailable()
-      ms.addData(spike); q.processAllAvailable()
-      // far-future driver seals and flushes every buffered instant
-      ms.addData((999L, t(100000), 42L, 0.0)); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_zscore_boundary")
-      .select($"event_id", $"user_id", unix_micros($"ts").as("us"),
-        $"value", $"z")
-      .as[(Long, Long, Long, Double, Double)].collect().toSet
-    val batchIn = (all :+ (999L, t(100000), 42L, 0.0))
-      .toDF("event_id", "us", "user_id", "value")
-      .select($"event_id", timestamp_micros($"us").as("ts"), $"user_id",
-        lit("click").as("event_type"), $"value")
-    val want = graft.operators.TimeSeries.anomalyZscore(batchIn)
-      .select($"event_id", $"user_id",
-        unix_micros($"ts".cast("timestamp")).as("us"), $"value", $"z")
-      .as[(Long, Long, Long, Double, Double)].collect().toSet
-    // the straggler must itself be one of the judged anomalies — the
-    // scenario is only discriminating if dropping it loses a row
-    assert(want.exists(_._1 == 99L), s"fixture lost its teeth: $want")
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-  }
-
   test("stateful as-of join is bit-identical to join_asof_native under " +
       "shuffled multi-batch delivery") {
     implicit val ctx = spark.sqlContext
@@ -1212,213 +358,6 @@ class StreamingOpsSpec extends SparkSpecBase {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
-    assert(got2 == want,
-      s"stream-only: ${got2 -- want}; batch-only: ${want -- got2}")
-  }
-
-  test("stateful windowed SampEn is bit-identical to hrv_rolling_sampen " +
-      "under shuffled multi-batch delivery") {
-    implicit val ctx = spark.sqlContext
-    val all = Tables.events(spark, sf())
-      .select($"event_id", unix_micros($"ts").as("us"), $"user_id", $"value")
-      .as[(Long, Long, Long, Double)].collect().toSeq
-    val ms = MemoryStream[(Long, Long, Long, Double)]
-    val in = ms.toDF().select($"_1".as("event_id"),
-      timestamp_micros($"_2").as("ts"), $"_3".as("user_id"),
-      $"_4".as("value"))
-    val out = StreamingOps.statefulRollingSampen(in, watermark = "90 days")
-    val q = out.writeStream.format("memory").queryName("t_rsampen")
-      .outputMode("append").start()
-    try {
-      for (k <- 0 until 3) {
-        ms.addData(all.filter(_._1 % 3 == k): _*)
-        q.processAllAvailable()
-      }
-      ms.addData((999999999L, all.map(_._2).max + 100L * 86400000000L,
-        999999L, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_rsampen").filter($"user_id" =!= 999999L)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        if (r.isNullAt(4)) Double.NaN else r.getDouble(4))).toSet
-    val want = graft.operators.TrainingData.hrvRollingSampen(spark, sf())
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        if (r.isNullAt(4)) Double.NaN else r.getDouble(4))).toSet
-    assert(want.nonEmpty)
-    assert(got == want,
-      s"stream-only: ${(got -- want).take(3)}; batch-only: ${(want -- got).take(3)}")
-  }
-
-  private def scd2RowSet(df: DataFrame): Set[(Long, String, Long, Option[Long], Boolean)] =
-    df.select($"o_orderkey", $"o_orderpriority", $"effective_from",
-        $"effective_to", $"is_current")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
-      .toSet
-
-  test("streaming SCD-2 dim maintenance equals the batch scd2Apply fold " +
-      "across micro-batches, and replays are byte-stable") {
-    implicit val ctx = spark.sqlContext
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_scd2_stream").toString
-    val base = Tables.orders(spark, sf())
-      .filter($"o_orderkey" <= 300)
-      .select($"o_orderkey", $"o_orderpriority")
-    // the judged source_scd2 deltas, delivered as two micro-batches —
-    // within-batch row order shuffled by the hash partitioning anyway
-    val d2 = base.filter($"o_orderkey" % 7 === 0)
-      .withColumn("o_orderpriority", lit("9-RECLASSIFIED"))
-      .as[(Long, String)].collect().toSeq
-    val d3 = base.filter($"o_orderkey" % 21 === 0)
-      .withColumn("o_orderpriority", lit("0-ESCALATED"))
-      .as[(Long, String)].collect().toSeq
-    assert(d2.nonEmpty && d3.nonEmpty)
-    val ms = MemoryStream[(Long, String)]
-    val in = ms.toDF().select($"_1".as("o_orderkey"), $"_2".as("o_orderpriority"))
-    val q = StreamingOps.scd2DimStream(in, "o_orderkey", stateDir, () => base)
-      .start()
-    try {
-      ms.addData(d2: _*); q.processAllAvailable()
-      ms.addData(d3: _*); q.processAllAvailable()
-    } finally q.stop()
-    val got = StreamingOps.readScd2Dim(spark, stateDir).get
-    import graft.operators.Relational
-    val want = Relational.scd2Apply(
-      Relational.scd2Apply(Relational.scd2Init(base, 1L),
-        d2.toDF("o_orderkey", "o_orderpriority"), "o_orderkey", 2L),
-      d3.toDF("o_orderkey", "o_orderpriority"), "o_orderkey", 3L)
-    assert(scd2RowSet(got) == scd2RowSet(want))
-    // one key must carry the full 3-version history for this to test closes
-    assert(scd2RowSet(want).count(_._1 == 21L) == 3)
-    // replay idempotence: re-apply batch 1 directly — same parent (gen 0),
-    // same version stamp, identical resulting state
-    StreamingOps.scd2ApplyGeneration(
-      d3.toDF("o_orderkey", "o_orderpriority"), 1L, "o_orderkey", stateDir,
-      () => base, 1L)
-    val replayed = StreamingOps.readScd2Dim(spark, stateDir).get
-    assert(scd2RowSet(replayed) == scd2RowSet(want))
-  }
-
-  test("streaming latest-wins dim maintenance equals the batch upsert fold; " +
-      "duplicate delta keys fail loudly") {
-    implicit val ctx = spark.sqlContext
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_upsert_stream").toString
-    val base = Tables.orders(spark, sf())
-      .filter($"o_orderkey" <= 300)
-      .select($"o_orderkey", $"o_totalprice")
-    val d1 = base.filter($"o_orderkey" % 7 === 0)
-      .withColumn("o_totalprice", $"o_totalprice" + lit(100.0))
-      .as[(Long, Double)].collect().toSeq
-    val d2 = base.filter($"o_orderkey" % 5 === 0)
-      .withColumn("o_totalprice", $"o_totalprice" + lit(500.0))
-      .as[(Long, Double)].collect().toSeq
-    assert(d1.nonEmpty && d2.nonEmpty)
-    val ms = MemoryStream[(Long, Double)]
-    val in = ms.toDF().select($"_1".as("o_orderkey"), $"_2".as("o_totalprice"))
-    val q = StreamingOps.upsertDimStream(in, "o_orderkey", stateDir, () => base)
-      .start()
-    try {
-      ms.addData(d1: _*); q.processAllAvailable()
-      ms.addData(d2: _*); q.processAllAvailable()
-    } finally q.stop()
-    def rowSet(df: DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val got = StreamingOps.readScd2Dim(spark, stateDir).get
-    import graft.operators.Relational
-    val want = Relational.upsert(
-      Relational.upsert(base, d1.toDF("o_orderkey", "o_totalprice"), "o_orderkey"),
-      d2.toDF("o_orderkey", "o_totalprice"), "o_orderkey")
-    assert(rowSet(got) == rowSet(want))
-    // a key hit by BOTH batches must carry batch 2's value (35 ≡ 0 mod 5 and 7)
-    assert(rowSet(got).exists { case (k, v) =>
-      k == 35L && rowSet(want).contains((k, v)) })
-    // replay idempotence: re-apply batch 1 — same parent gen 0, same state
-    StreamingOps.upsertApplyGeneration(
-      d2.toDF("o_orderkey", "o_totalprice"), 1L, "o_orderkey", stateDir,
-      () => base)
-    assert(rowSet(StreamingOps.readScd2Dim(spark, stateDir).get) == rowSet(want))
-    // duplicate delta key: loud failure, not silent arbitrary-keep
-    val dupDir = java.nio.file.Files
-      .createTempDirectory("graft_upsert_dup").toString
-    val ex = intercept[Exception] {
-      StreamingOps.upsertApplyGeneration(
-        Seq((7L, 1.0), (7L, 2.0)).toDF("o_orderkey", "o_totalprice"),
-        0L, "o_orderkey", dupDir, () => base)
-    }
-    assert((Option(ex.getMessage).getOrElse("") +
-      Option(ex.getCause).flatMap(c => Option(c.getMessage)).getOrElse(""))
-      .contains("duplicate delta key"))
-  }
-
-  test("streaming capture dedup: first-by-time stores, later fetches " +
-      "revisit — bit-identical under scrambled and sliced delivery") {
-    implicit val ctx = spark.sqlContext
-    // the source_warc_revisit fixture's write side: fetch k of content
-    // c = k % 40 at instant base + k minutes; first-by-time of each
-    // content is k = c, every later fetch must come out a revisit
-    // referencing it — whatever order batches deliver
-    val baseUs = 1700000000000000L
-    val all = (0L until 250L).map { k =>
-      (k, s"d${k % 40}", baseUs + k * 60000000L)
-    }
-    val want = all.map { case (k, d, _) =>
-      if (k < 40) (k, d, "response", k) else (k, d, "revisit", k % 40)
-    }.toSet
-
-    def run(name: String, batches: Seq[Seq[(Long, String, Long)]],
-        watermark: String): Set[(Long, String, String, Long)] = {
-      val ms = MemoryStream[(Long, String, Long)]
-      val in = ms.toDF().select($"_1".as("fetch_id"), $"_2".as("digest"),
-        timestamp_micros($"_3").as("ts"))
-      val out = StreamingOps.statefulCaptureDedup(in, watermark)
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
-        // far-future sentinel seals every real instant (excluded below)
-        ms.addData((999999L, "sentinel", baseUs + 10000L * 86400000000L))
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table(name).filter($"digest" =!= "sentinel")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-          r.getLong(3))).toSet
-    }
-
-    // fully scrambled: batch i gets fetch_id % 3 == i, so a content's
-    // first-by-time fetch routinely arrives AFTER later ones
-    val scrambled = (0 until 3).map(i => all.filter(_._1 % 3 == i))
-    val got = run("t_capture", scrambled, "400 days")
-    assert(got == want,
-      s"stream-only: ${got -- want}; batch-only: ${want -- got}")
-
-    // time-sliced with a tight watermark: rows must seal and emit
-    // PROGRESSIVELY (not only at the sentinel) and still agree
-    val sorted = all.sortBy(_._3)
-    val slices = sorted.grouped((sorted.size + 2) / 3).toSeq
-      .map(_.sortBy(_._1)) // scrambled within the slice
-    val ms2 = MemoryStream[(Long, String, Long)]
-    val in2 = ms2.toDF().select($"_1".as("fetch_id"), $"_2".as("digest"),
-      timestamp_micros($"_3").as("ts"))
-    val out2 = StreamingOps.statefulCaptureDedup(in2, "30 minutes")
-    val q2 = out2.writeStream.format("memory").queryName("t_capture2")
-      .outputMode("append").start()
-    var afterSlices = 0L
-    try {
-      slices.foreach { b => ms2.addData(b: _*); q2.processAllAvailable() }
-      afterSlices = spark.table("t_capture2").count()
-      ms2.addData((999999L, "sentinel", baseUs + 10000L * 86400000000L))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(afterSlices > 0, "nothing sealed before the sentinel")
-    val got2 = spark.table("t_capture2").filter($"digest" =!= "sentinel")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3))).toSet
     assert(got2 == want,
       s"stream-only: ${got2 -- want}; batch-only: ${want -- got2}")
   }
