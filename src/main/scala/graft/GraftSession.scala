@@ -27,13 +27,16 @@ object GraftSession {
     * partitions as cores (the partition count fixes float summation
     * order, so it must never differ from the gate's), UTC session time,
     * µs parquet timestamps (the oracle materializes µs; INT96 would
-    * hash-mismatch every timestamp column) and no UI. */
+    * hash-mismatch every timestamp column), parquet TIMESTAMP(NANOS)
+    * read as raw longs (Spark's reader rejects that type otherwise;
+    * `Tables.events` converts them) and no UI. */
   def builder(cores: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
   /** Register the engine's session-level extensions on an existing session

@@ -65,7 +65,8 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   /** `events.ts` has drifted across testdata generations — parquet
     * TIMESTAMP(NANOS) originally (which Spark's reader rejects outright,
-    * PARQUET_TYPE_ILLEGAL, hence the legacy nanos-as-long flag), then
+    * PARQUET_TYPE_ILLEGAL, unless the session carries the legacy
+    * nanos-as-long flag that [[GraftSession.builder]] sets), then
     * TIMESTAMP(MICROS) without tz (read as TIMESTAMP_NTZ) after the
     * 2026-08-13 regen. Branch on the schema the reader actually resolves so
     * one upstream writer change can't break every downstream query again:
@@ -77,7 +78,6 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = apply(s, d, "events")
     df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

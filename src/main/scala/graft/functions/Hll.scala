@@ -189,7 +189,7 @@ object Hll {
     * value and count as a distinct element. count(DISTINCT) semantics —
     * which graft_hll mirrors — exclude nulls, so nulls must yield a null
     * hash that update() then skips. */
-  private def hash64(e: Expression): Expression =
+  private[graft] def hash64(e: Expression): Expression =
     If(IsNull(e), Literal.create(null, org.apache.spark.sql.types.LongType),
       XxHash64(Seq(e), 42L))
 
@@ -198,10 +198,6 @@ object Hll {
   /** Column API. */
   def hll(c: Column): Column =
     GraftBridge.column(HllCountDistinct(hash64(GraftBridge.expression(c))).toAggregateExpression())
-  def hllSketch(c: Column): Column =
-    GraftBridge.column(HllSketchAgg(hash64(GraftBridge.expression(c))).toAggregateExpression())
-  def hllMerge(c: Column): Column =
-    GraftBridge.column(HllMergeAgg(GraftBridge.expression(c)).toAggregateExpression())
 
   /** Exactly-one-argument guard for the SQL builders: these functions
     * hash ONE column; silently dropping extra arguments would hand back

@@ -233,8 +233,6 @@ object QuantileSketch {
   def quantileSketch(c: Column): Column =
     GraftBridge.column(
       QSketchAgg(toDouble(GraftBridge.expression(c))).toAggregateExpression())
-  def quantileMerge(c: Column): Column =
-    GraftBridge.column(QMergeAgg(GraftBridge.expression(c)).toAggregateExpression())
   def quantileEstimate(sketch: Column, q: Column): Column =
     GraftBridge.column(QuantileEstimate(GraftBridge.expression(sketch),
       toDouble(GraftBridge.expression(q))))

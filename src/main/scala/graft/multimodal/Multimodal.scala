@@ -6,27 +6,22 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media (image/audio/video) as opaque binary
-  * columns with typed metadata, plus batch decode / feature-extract /
-  * resize / frame-sample operators, per-frame audio features, and
+  * columns with typed metadata, plus resize / frame-sample operators and
   * perceptual near-dup signatures (image aHash, audio energy
-  * fingerprint) feeding the same banded-hamming join as text dedup.
+  * fingerprint, video frame-hash vote) feeding the same banded-hamming
+  * join as text dedup.
   *
-  * The Spark-side contract — schema, partitioning, batch shape — is real
-  * and tested, and so are the decoders for every modality: pure-JVM
-  * parses ship REAL decode paths ([[decodeWav]] for PCM-16 RIFF WAV,
-  * [[decodeBmp]] for uncompressed 24-bit BMP, [[decodePng]] for 8-bit
-  * non-interlaced truecolor PNG — zlib via `java.util.zip.Inflater`,
-  * all five scanline filters, CRC-verified chunks — and [[decodeAvi]]
-  * for AVI video: uncompressed DIB, or Motion-JPEG whose frames decode
-  * per-frame through [[Jpeg]]; baseline JPEG via [[Jpeg]], ISO-BMFF
-  * MP4 container metadata via [[Mp4]]), with matching encoders so
-  * round-trips are testable without codec jars. Only codec-bound FRAME
-  * data (H.264/AAC inside mp4) still goes through the clearly-marked
-  * [[stubDecode]]; swapping in a real codec changes only
-  * that dispatch arm — the distributed plumbing (binary columns travel
-  * with their partition, the decoder runs once per row inside
-  * mapPartitions with per-partition library setup, output schema is
-  * fixed) is production-shaped either way.
+  * The container parses are pure JVM and strict: PCM-16 RIFF WAV
+  * ([[wavLayout]]), uncompressed 24-bit BMP ([[bmpLayout]]), 8-bit
+  * non-interlaced truecolor PNG ([[pngLayout]] — zlib via
+  * `java.util.zip.Inflater`, all five scanline filters, CRC-verified
+  * chunks), AVI video with uncompressed DIB or Motion-JPEG frames
+  * ([[aviLayout]], JPEG frames through [[Jpeg]]), and ISO-BMFF MP4
+  * container metadata via [[Mp4]]. Malformed or unsupported input fails
+  * LOUDLY — a decoder that silently fakes features for bytes it cannot
+  * read would poison every downstream similarity/dedup signal. Matching
+  * encoders make round-trips testable without codec jars; codec-bound
+  * payloads (H.264/AAC inside mp4) are skipped by the signature jobs.
   */
 object Multimodal {
 
@@ -34,30 +29,16 @@ object Multimodal {
   case class MediaRow(media_id: Long, kind: String, media: Array[Byte],
       format: String, width: Int, height: Int, sample_rate: Int)
 
-  case class MediaFeatures(media_id: Long, kind: String, n_bytes: Long,
-      features: Array[Float])
-
-  /** Real decode of a PCM-16 WAV payload: header fields plus sample-space
-    * statistics (the audio analogue of docstats). */
-  case class WavInfo(sampleRate: Int, channels: Int, nSamples: Int,
-      mean: Double, rms: Double, zeroCrossRate: Double, peak: Double)
-
   /** Real decode of a 24-bit BMP payload: dimensions plus channel means
     * (the image analogue of docstats). */
   case class BmpInfo(width: Int, height: Int,
       meanR: Double, meanG: Double, meanB: Double, meanLuma: Double)
 
-  /** Real decode of an uncompressed-DIB AVI payload: dimensions, frame
-    * count, frame interval, and mean luma across frames (the video
-    * analogue of docstats). */
-  case class AviInfo(width: Int, height: Int, frames: Int,
-      microsPerFrame: Int, meanLuma: Double)
-
   // ---- WAV (RIFF / fmt / data, PCM 16-bit little-endian) ----
 
   /** Encode interleaved PCM-16 samples as a standard WAV container —
-    * the inverse of [[decodeWav]], used by tests/demos to synthesize
-    * decodable audio without codec jars. */
+    * the inverse of [[wavSamples]], used to synthesize decodable audio
+    * without codec jars. */
   def encodeWavPcm16(samples: Array[Short], sampleRate: Int,
       channels: Int = 1): Array[Byte] = {
     require(channels > 0 && samples.length % channels == 0,
@@ -80,7 +61,9 @@ object Multimodal {
 
   /** Validated PCM-16 WAV container layout: (sampleRate, channels,
     * byte offset of the sample data, number of 16-bit samples). Shared
-    * by [[decodeWav]] and [[wavFrameFeatures]]. */
+    * by [[wavSamples]] and [[wavEnergyHash]]. Walks the RIFF chunk list
+    * (even-padded, as the spec requires) to `fmt ` and `data`;
+    * malformed or non-PCM-16 input fails loudly. */
   private[multimodal] def wavLayout(bytes: Array[Byte]): (Int, Int, Int, Int) = {
     def fail(msg: String): Nothing =
       throw new IllegalArgumentException(s"invalid WAV: $msg")
@@ -117,37 +100,9 @@ object Multimodal {
     (sampleRate, channels, dOff, dLen / 2)
   }
 
-  /** Strict PCM-16 WAV parse: walks the RIFF chunk list (even-padded, as
-    * the spec requires) to `fmt ` and `data`, then computes sample stats
-    * in one pass. Malformed or non-PCM-16 input fails LOUDLY — a decoder
-    * that silently fakes features for bytes it cannot read would poison
-    * every downstream similarity/dedup signal. */
-  def decodeWav(bytes: Array[Byte]): WavInfo = {
-    val (sampleRate, channels, dOff, n) = wavLayout(bytes)
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    var sum = 0.0; var sumSq = 0.0; var peak = 0.0; var crossings = 0
-    var prevNonNeg = true
-    while (i < n) {
-      val s = buf.getShort(dOff + 2 * i).toDouble
-      sum += s; sumSq += s * s
-      if (math.abs(s) > peak) peak = math.abs(s)
-      val nonNeg = s >= 0
-      if (i > 0 && nonNeg != prevNonNeg) crossings += 1
-      prevNonNeg = nonNeg
-      i += 1
-    }
-    WavInfo(sampleRate, channels, n,
-      mean = if (n == 0) 0.0 else sum / n,
-      rms = if (n == 0) 0.0 else math.sqrt(sumSq / n),
-      zeroCrossRate = if (n < 2) 0.0 else crossings.toDouble / (n - 1),
-      peak = peak)
-  }
-
   /** Exact integer sample readback: all PCM-16 samples in file order
     * (interleaved if multichannel), as longs so downstream Spark
-    * arithmetic is BIGINT end to end. The lossless complement of
-    * [[decodeWav]]'s float summary — judged roundtrip queries hash
+    * arithmetic is BIGINT end to end — judged roundtrip queries hash
     * exact integers, so the decode must surface the raw lattice. */
   def wavSamples(bytes: Array[Byte]): Array[Long] = {
     val (_, _, dOff, n) = wavLayout(bytes)
@@ -225,8 +180,7 @@ object Multimodal {
 
   /** Strict 24-bit uncompressed BMP parse: header fields plus per-channel
     * means over the pixel rectangle (row padding skipped, bottom-up or
-    * top-down both handled). Fails loudly on anything else — see
-    * [[decodeWav]] for why. */
+    * top-down both handled). Fails loudly on anything else. */
   def decodeBmp(bytes: Array[Byte]): BmpInfo = {
     val (width, height, pixelOff, rowSize, _) = bmpLayout(bytes)
     var sumR = 0.0; var sumG = 0.0; var sumB = 0.0
@@ -450,7 +404,7 @@ object Multimodal {
     * decoder supports: bit depth 8, color type 2 (RGB) or 6 (RGBA),
     * no interlace. Ancillary chunks (tEXt, pHYs, ...) are skipped.
     * Returns (width, height, channels, concatenated IDAT bytes). Fails
-    * loudly on anything else — see [[decodeWav]] for why. */
+    * loudly on anything else. */
   private[multimodal] def pngLayout(bytes: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
     def fail(msg: String): Nothing =
       throw new IllegalArgumentException(s"invalid PNG: $msg")
@@ -763,163 +717,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** ======== STUB ========
-    * Deterministic fake decode for codec-bound payloads with no pure-JVM
-    * decode here (mp4 FRAME data — the container itself parses for real
-    * via [[Mp4]] — and unknown formats): derives `dim` floats from a
-    * rolling 64-bit hash of the payload so tests are reproducible
-    * without codecs. Replace this body (only) for production. */
-  private[multimodal] def stubDecode(bytes: Array[Byte], dim: Int): Array[Float] = {
-    var h = 1125899906842597L // FNV-ish rolling hash of the payload
-    bytes.foreach(b => h = h * 31 + (b & 0xff))
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < dim) {
-      h = h * 6364136223846793005L + 1442695040888963407L
-      out(i) = ((h >>> 11).toDouble / (1L << 53).toDouble).toFloat
-      i += 1
-    }
-    out
-  }
-
-  private def pad(xs: Array[Double], dim: Int): Array[Float] = {
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < math.min(dim, xs.length)) { out(i) = xs(i).toFloat; i += 1 }
-    out
-  }
-
-  /** Batch feature extraction over the media column, dispatched on the
-    * format tag: `wav`, `bmp`, `png` and `avi` run the REAL decoders
-    * above (leading features = the decoded stats, zero-padded to `dim`;
-    * corrupt payloads under those tags fail loudly — curate first for
-    * quarantine semantics); anything else
-    * takes the stub path. mapPartitions so a real native decoder
-    * initializes its (expensive) context once per partition, not once per
-    * row — the Scala analogue of a batched pandas UDF. The operation is a
-    * pure map: no shuffle, scales with partitions. */
-  def decodeFeatures(media: Dataset[MediaRow], dim: Int = 16): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      // per-partition decoder setup would go here (native lib handle, model)
-      rows.map { r =>
-        // null-safe: a missing format tag takes the stub path, as the
-        // pre-dispatch implementation did for every row
-        val feats = Option(r.format).map(_.toLowerCase).getOrElse("") match {
-          case "wav" =>
-            val w = decodeWav(r.media)
-            pad(Array(w.sampleRate.toDouble, w.channels.toDouble,
-              w.nSamples.toDouble, w.mean, w.rms, w.zeroCrossRate, w.peak), dim)
-          case "bmp" =>
-            val b = decodeBmp(r.media)
-            pad(Array(b.width.toDouble, b.height.toDouble,
-              b.meanR, b.meanG, b.meanB, b.meanLuma), dim)
-          case "avi" =>
-            val a = decodeAvi(r.media)
-            pad(Array(a.width.toDouble, a.height.toDouble, a.frames.toDouble,
-              a.microsPerFrame.toDouble, a.meanLuma), dim)
-          case "png" =>
-            val p = decodePng(r.media)
-            pad(Array(p.width.toDouble, p.height.toDouble, p.channels.toDouble,
-              p.meanR, p.meanG, p.meanB, p.meanLuma), dim)
-          case "jpg" | "jpeg" if Jpeg.looksDecodable(r.media) =>
-            // spec-valid JPEGs OUTSIDE the baseline-Huffman subset
-            // (progressive, arithmetic, 12-bit — common in web crawls)
-            // and payloads whose marker stream doesn't parse route to
-            // the stub instead of killing the job. looksDecodable only
-            // sniffs markers up to the first SOF, so a payload with
-            // corrupt entropy data or DHT/SOS segments can pass it and
-            // still throw inside the decoder — catch and stub, keeping
-            // Jpeg.decodeJpeg itself the loud path for direct callers.
-            try {
-              val j = Jpeg.decodeJpeg(r.media)
-              pad(Array(j.width.toDouble, j.height.toDouble, j.components.toDouble,
-                j.meanR, j.meanG, j.meanB, j.meanLuma), dim)
-            } catch {
-              case _: IllegalArgumentException => stubDecode(r.media, dim)
-            }
-          case "mp4" if Mp4.looksLikeMp4(r.media) =>
-            // real ISO-BMFF container parse (dimensions, duration, sample
-            // counts — the curation metadata); FRAME decode stays stubbed,
-            // codec-bound. Payloads without a leading ftyp box (opaque
-            // synthetic bytes) keep the legacy stub path below, and —
-            // since looksLikeMp4 validates only the leading ftyp — a
-            // payload with malformed INNER boxes falls back to the stub
-            // too instead of killing a 100 TB curation job.
-            try {
-              val m = Mp4.parseMp4(r.media)
-              val v = m.tracks.find(_.kind == "video")
-              pad(Array(v.map(_.width.toDouble).getOrElse(0.0),
-                v.map(_.height.toDouble).getOrElse(0.0),
-                m.durationSeconds, m.tracks.size.toDouble,
-                v.map(_.nSamples.toDouble).getOrElse(0.0)), dim)
-            } catch {
-              case _: IllegalArgumentException => stubDecode(r.media, dim)
-            }
-          case _ => stubDecode(r.media, dim)
-        }
-        MediaFeatures(r.media_id, r.kind, r.media.length.toLong, feats)
-      }
-    }
-  }
-
-  /** One audio analysis frame: per-frame energy and zero-cross rate —
-    * the features voice-activity detection / segmentation build on. */
-  case class FrameFeatures(media_id: Long, frame_idx: Int,
-      start_sample: Long, rms: Double, zero_cross_rate: Double)
-
-  /** Frame-level features over PCM-16 WAV rows: parse the container once
-    * per row, then slide a window of `frameSize` sample-FRAMES (one
-    * frame = one sample per channel, so positions are real time for any
-    * channel count) every `stride` sample-frames, computing RMS over
-    * all channels and zero-cross rate PER CHANNEL (averaged) directly
-    * from the payload bytes — interleaved neighbors are different
-    * channels, and counting sign flips across them would read constant
-    * stereo DC as maximum-frequency activity. Non-WAV rows are skipped.
-    * A pure flatMap: no shuffle, output ≈ nFrames/stride rows per doc,
-    * scales with partitions — downstream windows/aggregations (e.g.
-    * "longest silence run per file") then partition by media_id. */
-  def wavFrameFeatures(media: Dataset[MediaRow], frameSize: Int,
-      stride: Int): Dataset[FrameFeatures] = {
-    require(frameSize > 0 && stride > 0,
-      s"frameSize and stride must be positive (got $frameSize, $stride)")
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      if (!Option(r.format).exists(_.equalsIgnoreCase("wav"))) Iterator.empty
-      else {
-        val (_, channels, dOff, n) = wavLayout(r.media)
-        val buf = ByteBuffer.wrap(r.media).order(ByteOrder.LITTLE_ENDIAN)
-        val totalFrames = n / channels
-        val frames =
-          if (totalFrames < frameSize) 0 else (totalFrames - frameSize) / stride + 1
-        (0 until frames).iterator.map { f =>
-          val base = dOff + 2 * f * stride * channels
-          var sumSq = 0.0
-          var crossings = 0
-          val prevNonNeg = new Array[Boolean](channels)
-          var i = 0
-          while (i < frameSize) {
-            var c = 0
-            while (c < channels) {
-              val s = buf.getShort(base + 2 * (i * channels + c)).toDouble
-              sumSq += s * s
-              val nonNeg = s >= 0
-              if (i > 0 && nonNeg != prevNonNeg(c)) crossings += 1
-              prevNonNeg(c) = nonNeg
-              c += 1
-            }
-            i += 1
-          }
-          FrameFeatures(r.media_id, f, f.toLong * stride,
-            rms = math.sqrt(sumSq / (frameSize.toLong * channels)),
-            zero_cross_rate =
-              if (frameSize < 2) 0.0
-              else crossings.toDouble / (channels.toLong * (frameSize - 1)))
-        }
-      }
-    }
-  }
-
   /** 64-bit audio fingerprint of a PCM-16 WAV, three fields:
     *
     *  - bits 0-27: RISING indicators — RMS energy over 29 equal time
@@ -1010,7 +807,7 @@ object Multimodal {
   //      or Motion-JPEG, whose frames decode through Jpeg) ----
 
   /** Encode frames as a standard uncompressed-DIB AVI — the inverse of
-    * [[decodeAvi]]. Each frame is `rgb(frameIdx)(x, y) = (r, g, b)` with
+    * [[aviGrayPixels]]. Each frame is `rgb(frameIdx)(x, y) = (r, g, b)` with
     * y = 0 the TOP row; frames share `width`×`height`. The container is
     * the same RIFF chunk grammar as WAV and each frame the same
     * bottom-up padded BGR pixel array as BMP, which is what makes a
@@ -1126,7 +923,7 @@ object Multimodal {
     * per-chunk for mjpg. Walks the RIFF lists (hdrl → avih + strl/strf
     * for the format, movi → frame chunks) with the same loud-failure +
     * overflow-guard discipline as [[wavLayout]]/[[bmpLayout]]; avih and
-    * strf dimensions must agree. Shared by [[decodeAvi]] and the
+    * strf dimensions must agree. Shared by [[aviGrayPixels]] and the
     * per-frame hashes. */
   private[multimodal] case class AviLayout(width: Int, height: Int,
       microsPerFrame: Int, codec: String, rowSize: Int, bottomUp: Boolean,
@@ -1307,28 +1104,6 @@ object Multimodal {
     else ahashOfGrid(boxGrid(bytes, l.width, l.height, l.frames(i)._1,
       l.rowSize, l.bottomUp, 8, 8))
 
-  /** Mean luma of one AVI frame (decode path of [[decodeAvi]]). */
-  private def aviFrameLuma(bytes: Array[Byte], l: AviLayout, i: Int): Double =
-    if (l.codec == "mjpg") Jpeg.decodeJpeg(frameSlice(bytes, l.frames(i))).meanLuma
-    else {
-      val (mr, mg, mb) = boxGrid(bytes, l.width, l.height, l.frames(i)._1,
-        l.rowSize, l.bottomUp, 1, 1)
-      0.299 * mr(0) + 0.587 * mg(0) + 0.114 * mb(0)
-    }
-
-  /** Strict AVI parse (uncompressed DIB or MJPEG): container fields plus
-    * mean luma across ALL frames — MJPEG frames really decode through
-    * [[Jpeg]]. Fails loudly on anything else — see [[decodeWav]] for
-    * why. */
-  def decodeAvi(bytes: Array[Byte]): AviInfo = {
-    val l = aviLayout(bytes)
-    var lumaSum = 0.0
-    var i = 0
-    while (i < l.frames.length) { lumaSum += aviFrameLuma(bytes, l, i); i += 1 }
-    AviInfo(l.width, l.height, l.frames.length, l.microsPerFrame,
-      lumaSum / l.frames.length)
-  }
-
   /** 64-bit perceptual video fingerprint: per-frame 8×8 aHash over up to
     * nine evenly-sampled frames, folded by strict per-bit MAJORITY vote —
     * robust to a corrupted/edited frame or two (the frame outvoted), while
@@ -1394,38 +1169,6 @@ object Multimodal {
     majorityVote(sampleNine(samples.length).map(i => mp4FrameHash(bytes, samples(i))))
   }
 
-  /** Per-frame aHashes of the decodable video rows, every `step`-th
-    * frame: (media_id, frame_idx, sig) — frame-granular near-dup /
-    * content search, and the REAL frame-sampling path for video (the
-    * byte-slicing [[frameSample]] Column form stays for fixed-layout
-    * payloads). AVI rows (DIB or MJPEG) decode via [[aviLayout]]; MP4
-    * rows whose video codec is Motion-JPEG decode via the sample table
-    * ([[Mp4.videoSampleTable]]) — all frames land in the shared image
-    * signature space. Other rows (incl. codec-bound H.264 MP4s) are
-    * skipped. A pure flatMap. */
-  def videoFrameHashes(media: Dataset[MediaRow], step: Int = 1): DataFrame = {
-    require(step > 0, s"step must be positive, got $step")
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      Option(r.format).map(_.toLowerCase) match {
-        case Some("avi") =>
-          val l = aviLayout(r.media)
-          (0 until l.frames.length by step).iterator.map { i =>
-            (r.media_id, i, aviFrameHash(r.media, l, i))
-          }
-        case Some("mp4") =>
-          mp4MjpegFrames(r.media) match {
-            case Some(samples) =>
-              (0 until samples.length by step).iterator.map { i =>
-                (r.media_id, i, mp4FrameHash(r.media, samples(i)))
-              }
-            case None => Iterator.empty
-          }
-        case _ => Iterator.empty
-      }
-    }.toDF("media_id", "frame_idx", "sig")
-  }
-
   /** Per-video fingerprints for the decodable video rows of a media
     * table: (media_id, sig) — the video signature store, exactly like
     * [[imageAHashes]] and [[audioHashes]]. AVI rows always fingerprint;
@@ -1468,8 +1211,8 @@ object Multimodal {
     * Target dimensions follow the same cap rule as [[resizeMeta]]
     * (`ceil(dim * maxSide / maxDim)`, aspect preserved); payloads
     * already within `maxSide` return unchanged. A pure byte→byte
-    * function, so it runs inside the same mapPartitions batch shape as
-    * [[decodeFeatures]] — no shuffle, scales with partitions. */
+    * function, so it runs inside a per-row map — no shuffle, scales with
+    * partitions. */
   def bmpResize(bytes: Array[Byte], maxSide: Int): Array[Byte] = {
     require(maxSide > 0, s"maxSide must be positive, got $maxSide")
     val (w, h, off, rowSize, bottomUp) = bmpLayout(bytes)
@@ -1493,47 +1236,5 @@ object Multimodal {
       lit(maxSide.toDouble) / greatest(col("width"), col("height")))
     df.withColumn("out_width", ceil(col("width") * scale).cast("int"))
       .withColumn("out_height", ceil(col("height") * scale).cast("int"))
-  }
-
-  /** Deterministic synthetic media table for tests/demos (seeded). Audio
-    * rows are REAL decodable WAVs, image rows REAL decodable BMPs, and
-    * half the video rows REAL decodable uncompressed-DIB AVIs (via the
-    * encoders above); the other video rows stay opaque mp4 bytes so the
-    * stub dispatch path keeps coverage too. */
-  def syntheticMedia(spark: SparkSession, n: Int, seed: Long = 42L): Dataset[MediaRow] = {
-    import spark.implicits._
-    val rnd = new scala.util.Random(seed)
-    val rows = (0 until n).map { i =>
-      i % 3 match {
-        case 0 => // image: small real BMP
-          val w = 2 + rnd.nextInt(14)
-          val h = 2 + rnd.nextInt(14)
-          val px = Array.fill(h, w)((rnd.nextInt(256), rnd.nextInt(256), rnd.nextInt(256)))
-          MediaRow(i.toLong, "image", encodeBmp24(w, h, (x, y) => px(y)(x)),
-            "bmp", w, h, 0)
-        case 1 => // audio: real PCM-16 WAV
-          val rate = 8000 + 100 * rnd.nextInt(80)
-          val samples = Array.fill(64 + rnd.nextInt(192))(
-            (rnd.nextInt(65536) - 32768).toShort)
-          MediaRow(i.toLong, "audio", encodeWavPcm16(samples, rate),
-            "wav", 0, 0, rate)
-        case _ if (i / 3) % 2 == 0 => // video: real uncompressed-DIB AVI
-          val w = 2 + rnd.nextInt(14)
-          val h = 2 + rnd.nextInt(14)
-          val nf = 2 + rnd.nextInt(6)
-          val frames = Seq.fill(nf) {
-            val px = Array.fill(h, w)((rnd.nextInt(256), rnd.nextInt(256), rnd.nextInt(256)))
-            (x: Int, y: Int) => px(y)(x)
-          }
-          MediaRow(i.toLong, "video", encodeAviDib(w, h, frames), "avi", w, h, 0)
-        case _ => // video: opaque container bytes (stub decode path)
-          val bytes = new Array[Byte](64 + rnd.nextInt(192))
-          rnd.nextBytes(bytes)
-          MediaRow(i.toLong, "video", bytes, "mp4",
-            width = 2 + rnd.nextInt(1024), height = 2 + rnd.nextInt(1024),
-            sample_rate = 0)
-      }
-    }
-    spark.createDataset(rows)
   }
 }

@@ -40,40 +40,6 @@ object Features {
         sqrt(avg(col(s"${prefix}_delta") * col(s"${prefix}_delta")).over(frame)))
   }
 
-  /** Rolling z-score anomaly flag: |value − rolling mean| > k · rolling
-    * stddev over the previous `n` rows (the current row is EXCLUDED from
-    * the reference window so an extreme sample can't mask itself). Adds
-    * `<prefix>_z` and boolean `<prefix>_anomaly`. */
-  def anomalyByZScore(df: DataFrame, key: Column, ts: Column, tiebreak: Column,
-      value: Column, n: Int, k: Double = 3.0, prefix: String = "a"): DataFrame = {
-    val frame = ordered(Window.partitionBy(key), ts, tiebreak).rowsBetween(-n, -1)
-    val mu = avg(value).over(frame)
-    val sd = stddev_samp(value).over(frame)
-    // zero-variance window → undefined z (ANSI division would throw)
-    val z = when(sd.isNotNull && sd =!= 0.0, (value - mu) / sd)
-    df.withColumn(s"${prefix}_z", z)
-      .withColumn(s"${prefix}_anomaly",
-        coalesce(abs(z) > k, lit(false))) // first rows / zero-variance → false
-  }
-
-  /** Per-session feature block: sessionize on an inactivity gap, then
-    * aggregate per (key, session) — the session-level twin of `bucketed`.
-    * Same shape as the judged stream_session query with feature columns. */
-  def sessionized(df: DataFrame, key: Column, ts: Column, tiebreak: Column,
-      value: Column, gapSeconds: Long): DataFrame = {
-    val base = df.select(key.as("series_key"), ts.as("_ts"), tiebreak.as("_tb"),
-      value.as("_v"))
-    Sessionize.withSessionIds(base, col("series_key"), col("_ts"), col("_tb"),
-        gapSeconds)
-      .groupBy(col("series_key"), col("session_id"))
-      .agg(
-        count(lit(1)).as("n"),
-        min(col("_ts")).cast("timestamp_ntz").as("session_start"),
-        max(col("_ts")).cast("timestamp_ntz").as("session_end"),
-        avg(col("_v")).as("mean"),
-        stddev_samp(col("_v")).as("std"))
-  }
-
   /** Per-(key, fixed time bucket) feature table: the batch form of a
     * tumbling-window feature job, one partial+final aggregate. `bucket`
     * is a date_trunc unit ("hour", "day", ...). */

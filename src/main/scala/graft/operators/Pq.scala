@@ -168,8 +168,8 @@ object Pq {
     val normV = l2normalize(VectorFunctions.toDoubleVec(col(vecCol)))
     // assign every corpus code row to its nearest coarse centroid with a
     // per-row argmin over the coarse table collapsed to a one-row
-    // sorted struct array (broadcast cross join, no driver action) — the
-    // appendToIvfIndex assignment shape. This replaces a crossJoin that
+    // sorted struct array (broadcast cross join, no driver action).
+    // This replaces a crossJoin that
     // multiplied the corpus nlist× and a row_number window over it (a
     // full-corpus exchange + sort, the only data-scale shuffle in this
     // operator's front half) with a map-only projection. sort_array

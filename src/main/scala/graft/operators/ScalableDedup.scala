@@ -1,27 +1,19 @@
 package graft.operators
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
-
-/** Scale-path deduplication: the all-pairs Jaccard/cosine scans in
+/** Scale-path deduplication: the all-pairs Jaccard scans in
   * graft.operators.LlmOps are exact and judged, but O(n²) — these are the
   * operators that replace them at 100 TB. Each turns "compare everything
   * with everything" into "shuffle on a bucket key, compare within buckets":
   *
-  *  - MinHash LSH        → banded minhash signatures, candidate pairs via
-  *                         equi-join on (band, signature) buckets
+  *  - MinHash LSH        → banded minhash signatures with pinned hash
+  *                         functions, candidate pairs via equi-join on
+  *                         (band, signature) buckets
   *  - SimHash            → 64-bit near-dup signature, hamming-ball match
-  *  - embedding LSH      → random-hyperplane signatures, bucket equi-join,
-  *                         exact cosine only within buckets
   *
-  * All bucketing math is Column expressions (codegen'd); only MinHashLSH
-  * uses spark.ml (seeded — deterministic for a fixed seed, but still
-  * randomized across seeds, which is why these are unjudged while their
-  * exact twins in LlmOps carry the oracle).
+  * All bucketing math is Column expressions (codegen'd).
   */
 object ScalableDedup {
 
@@ -83,26 +75,6 @@ object ScalableDedup {
       df.select(col(idCol).as("id"), simhash(tokensCol).as("sig")),
       "id", "sig", maxHamming)
 
-  /** MinHash-LSH near-duplicate candidate pairs on token sets: tokens →
-    * binary term-frequency vectors (HashingTF) → banded minhash →
-    * approxSimilarityJoin, i.e. an equi-join on LSH buckets with the exact
-    * Jaccard distance re-checked inside. Seeded for determinism. */
-  def minhashCandidates(df: DataFrame, idCol: String, tokensCol: String,
-      maxJaccardDistance: Double = 0.4, numHashTables: Int = 8,
-      seed: Long = 42L): DataFrame = {
-    val tf = new HashingTF().setInputCol(tokensCol).setOutputCol("tf")
-      .setBinary(true).setNumFeatures(1 << 18)
-    val feats = tf.transform(df.select(col(idCol).as("id"), col(tokensCol)))
-      .filter(size(col(tokensCol)) > 0)
-    val mh = new MinHashLSH().setInputCol("tf").setOutputCol("mh")
-      .setNumHashTables(numHashTables).setSeed(seed)
-    val model = mh.fit(feats)
-    model.approxSimilarityJoin(feats, feats, maxJaccardDistance, "dist")
-      .select(col("datasetA.id").as("a_id"), col("datasetB.id").as("b_id"),
-        round(lit(1.0) - col("dist"), 6).as("jaccard"))
-      .filter(col("a_id") < col("b_id"))
-  }
-
   /** 2^31−1, the Mersenne prime every pinned minhash reduces by. */
   val MinhashP = 2147483647L
 
@@ -137,36 +109,18 @@ object ScalableDedup {
     graft.functions.MinhashMinsExpr.minhash_mins(hashCol,
       (0 until k).map(minhashA), (0 until k).map(minhashB), MinhashP)
 
-  /** Banded MinHash with PINNED universal hash functions — the
-    * judged-capable twin of [[minhashCandidates]]: minhash i of a
-    * hashed-shingle set H is min over h∈H of (a_i·h + b_i) mod
-    * (2^31−1), bands are `rowsPerBand` consecutive minhashes joined
-    * into one signature string. One row per (id, band). Fully
-    * deterministic with NO seed parameter at all, so an oracle can
-    * replay it exactly — the property spark.ml's seeded-random
-    * MinHashLSH cannot offer. Docs with an EMPTY hash set are filtered
-    * out up front: a minhash over an empty array is null, and
-    * concat_ws would collapse an all-null band to the shared signature
-    * "" — putting every empty doc in one bucket of every band (O(k²)
-    * candidate blowup), the opposite of "drops out". An empty set has
-    * no shingles, hence Jaccard 0 against everything; excluding it is
-    * the correct semantics, not a shortcut. */
-  def minhashBandSignatures(df: DataFrame, idCol: String, hashCol: String,
-      bands: Int, rowsPerBand: Int): DataFrame =
-    // ONE array pass computes all k minima (MinhashMinsExpr) — the
-    // composed array_min(transform(…)) × k form re-read the hash array
-    // k times and allocated k intermediate arrays per doc, the dominant
-    // cost of candidate generation (ScalableDedupSpec pins signature
-    // equality between the two forms; the arithmetic is identical)
-    minhashBandSignaturesFromMins(
-      df.withColumn("_mh", minhashMins(col(hashCol), bands * rowsPerBand)),
-      idCol, hashCol, "_mh", bands, rowsPerBand)
-
-  /** [[minhashBandSignatures]] over PRECOMPUTED minima (`minsCol` =
-    * [[minhashMins]](hashCol, bands·rowsPerBand)): band assembly only —
-    * per-band struct + explode, no hashing. `hashCol` still gates the
-    * empty-set exclusion (identical row set to the one-shot form; the
-    * signature arithmetic happened when `minsCol` was computed).
+  /** Banded MinHash signatures with PINNED universal hash functions,
+    * over PRECOMPUTED minima (`minsCol` = [[minhashMins]](hashCol,
+    * bands·rowsPerBand)): minhash i of a hashed-shingle set H is min
+    * over h∈H of (a_i·h + b_i) mod (2^31−1), and each band joins
+    * `rowsPerBand` consecutive minima into one signature string. One row
+    * per (id, band), by per-band struct + explode, no hashing. Fully
+    * deterministic with no seed, so an oracle can replay it exactly.
+    * `hashCol` gates the empty-set exclusion: a minhash over an empty
+    * array is null, and concat_ws would collapse an all-null band to the
+    * shared signature "" — putting every empty doc in one bucket of
+    * every band (O(k²) candidate blowup). An empty set has Jaccard 0
+    * against everything, so excluding it is the correct semantics.
     * `keep` columns ride along unchanged. */
   def minhashBandSignaturesFromMins(df: DataFrame, idCol: String,
       hashCol: String, minsCol: String, bands: Int, rowsPerBand: Int,
@@ -183,36 +137,22 @@ object ScalableDedup {
       .select(head :+ col("_bs.band").as("band") :+ col("_bs.sig").as("sig"): _*)
   }
 
-  /** Candidate pairs from [[minhashBandSignatures]]: ids sharing any
-    * band bucket, deduplicated. The equi-join on (band, sig) is the
-    * whole point — sub-linear bucketed comparison, never all-pairs;
-    * collision probability per band is J^rowsPerBand, so (bands,
-    * rowsPerBand) positions the S-curve over the target threshold.
+  /** Candidate pairs from an (id, band, sig) signature table
+    * ([[minhashBandSignaturesFromMins]] output): ids sharing any band
+    * bucket, deduplicated. The equi-join on (band, sig) is sub-linear
+    * bucketed comparison, never all-pairs; collision probability per
+    * band is J^rowsPerBand, so (bands, rowsPerBand) positions the
+    * S-curve over the target threshold.
     *
-    * `maxBucketSize` is the quadratic-blowup guard the sf1 campaign
-    * measured the need for (BASELINE.md Round-11: bucket occupancy
-    * that scales with the corpus — boilerplate text, shared
-    * templates — makes that bucket's pair count quadratic): buckets
-    * holding more than the cap are DROPPED before the self-join, the
-    * same hub-cap move as `Graph.commonNeighborPairs(degreeCap)` and
-    * `dedup_winnow`'s stop-fingerprint filter. An over-occupied
-    * bucket carries boilerplate signal, not near-dup signal, and each
-    * of the `bands` bands gives an independent chance to re-find a
-    * true pair through a non-degenerate bucket — the standard
-    * recall-for-boundedness trade, deterministic (the cap is an exact
-    * count, so an oracle can replay it). Default off: the judged
-    * queries run cap-off. */
-  def minhashBandedCandidates(df: DataFrame, idCol: String,
-      hashCol: String, bands: Int, rowsPerBand: Int,
-      maxBucketSize: Option[Int] = None): DataFrame =
-    minhashBandedCandidatesFromSigs(
-      minhashBandSignatures(df, idCol, hashCol, bands, rowsPerBand),
-      idCol, maxBucketSize)
-
-  /** [[minhashBandedCandidates]] from a PRECOMPUTED (id, band, sig)
-    * signature table ([[minhashBandSignatures]] output) — same bucket
-    * join, cap rule and dedup; use when the signatures are derived from
-    * materialized minima so they are not re-hashed per join side. */
+    * `maxBucketSize` is the quadratic-blowup guard (BASELINE.md
+    * Round-11: bucket occupancy that scales with the corpus —
+    * boilerplate text, shared templates — makes that bucket's pair
+    * count quadratic): buckets holding more than the cap are DROPPED
+    * before the self-join, the same hub-cap move as
+    * `Graph.commonNeighborPairs(degreeCap)`. Each band gives an
+    * independent chance to re-find a true pair through a
+    * non-degenerate bucket; the cap is an exact count, so an oracle can
+    * replay it. Default off: the judged queries run cap-off. */
   def minhashBandedCandidatesFromSigs(s0: DataFrame, idCol: String,
       maxBucketSize: Option[Int] = None): DataFrame = {
     val s = maxBucketSize match {
@@ -230,51 +170,5 @@ object ScalableDedup {
     val r = s.select(col("band"), col("sig"), col(idCol).as("b_id"))
     l.join(r, Seq("band", "sig")).filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id")).distinct()
-  }
-
-  /** Deterministic random hyperplanes for cosine LSH (seeded). */
-  private[graft] def hyperplanes(dim: Int, bits: Int, seed: Long): Seq[Seq[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(bits)(Seq.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** Random-hyperplane signature for an embedding column: bit i = sign of
-    * the projection on hyperplane i. Vectors at small cosine distance agree
-    * on most bits, so bucketing on the signature pre-filters candidates. */
-  def hyperplaneSignature(vec: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(VectorFunctions.dot(vec, typedLit(p)) > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  /** Embedding near-duplicate pairs: bucket equi-join on the hyperplane
-    * signature, exact cosine recheck within buckets. Trades recall
-    * (controlled by `bits`) for turning O(n²) into a shuffle join. */
-  def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
-      minCosine: Double = 0.95, bits: Int = 16, seed: Long = 42L): DataFrame = {
-    val spark = df.sparkSession
-    // dim inference needs one row; short-circuit empty input to an empty
-    // result (same schema as the non-empty path: ids in the source
-    // idCol's type) instead of throwing from first() on no rows
-    val probe = df.select(size(col(vecCol)).as("d")).head(1)
-    if (probe.isEmpty) {
-      val idType = df.schema(idCol).dataType
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("a_id", idType),
-          org.apache.spark.sql.types.StructField("b_id", idType),
-          org.apache.spark.sql.types.StructField("cosine", org.apache.spark.sql.types.DoubleType))))
-    }
-    val dim = probe.head.getInt(0)
-    val planes = hyperplanes(dim, bits, seed)
-    val sig = df.select(col(idCol).as("id"),
-      VectorFunctions.toDoubleVec(col(vecCol)).as("v"))
-      .withColumn("bucket", hyperplaneSignature(col("v"), planes))
-    val a = sig.select(col("bucket"), col("id").as("a_id"), col("v").as("va"))
-    val b = sig.select(col("bucket"), col("id").as("b_id"), col("v").as("vb"))
-    a.join(b, Seq("bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(graft.functions.CosineSimilarityExpr.cosine_sim(col("va"), col("vb")), 6).as("cosine"))
-      .filter(col("cosine") >= minCosine)
   }
 }

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** The single source of truth for inactivity-gap sessionization: a break
   * flag per row (gap from the previous row exceeds the threshold) turned
-  * into a per-key running session id. Both the judged batch query
-  * (TimeSeries.streamSession) and the feature block (Features.sessionized)
-  * call this, so the gap rule — strict `>`, microsecond precision,
-  * (ts, tiebreak) ordering — cannot silently diverge between them.
+  * into a per-key running session id. The judged session queries
+  * (TimeSeries.streamSession and tsSessionStats) both call this, so the
+  * gap rule — strict `>`, microsecond precision, (ts, tiebreak) ordering
+  * — cannot silently diverge between them.
   */
 object Sessionize {
 

@@ -10,8 +10,7 @@ import graft.Tables
   * (SURVEY.md §2.9): tumbling and sliding windows, sessionization,
   * dedup, and watermark-style late-row filtering — the batch forms of
   * what a stream computes over a bounded input, and what the oracle
-  * judges. The hourly tumbling count has a Structured Streaming twin,
-  * `graft.streaming.StreamingOps.tumbling`.
+  * judges.
   */
 object TimeSeries {
 
@@ -54,8 +53,8 @@ object TimeSeries {
   }
 
   /** #46 30-minute-gap sessionization per user: gap flag via lag, session
-    * id via running sum (graft.operators.Sessionize — shared with the
-    * feature-table block), then per-session aggregates. All steps are
+    * id via running sum (graft.operators.Sessionize — shared with
+    * [[tsSessionStats]]), then per-session aggregates. All steps are
     * partitioned by user_id — a single shuffle, then purely local work,
     * exactly the batch shape of `session_window(ts, "30 minutes")`. */
   def streamSession(s: SparkSession, d: String): DataFrame =

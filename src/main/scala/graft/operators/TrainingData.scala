@@ -370,8 +370,8 @@ object TrainingData {
   /** #63 character-trigram Jaccard near-dup pairs over a bounded probe
     * window — shingle granularity below the word level, catching
     * near-dups that token-set Jaccard (#55) misses when words are edited
-    * in place. All-pairs on the 40-doc probe set; the scale path hashes
-    * the same shingles through ScalableDedup.minhashCandidates. */
+    * in place. All-pairs on the 40-doc probe set; the scale path bands
+    * the same shingle hashes (ScalableDedup.minhashBandSignaturesFromMins). */
   def dedupNgramJaccard(s: SparkSession, d: String): DataFrame = {
     // the ONE cross-engine char-3-gram recipe (shared with Decontaminate)
     val sh = Decontaminate.shingleSet("text", 3)
@@ -395,7 +395,7 @@ object TrainingData {
     * kept at ≥ 0.8. The containment ratio is a single division of exact
     * integer set sizes — identical doubles both engines, 6-dp round
     * safe (the #63 precedent). Scale path: the same shingle-hash LSH as
-    * every dedup op (ScalableDedup.minhashCandidates); containment
+    * every dedup op (ScalableDedup.minhashBandSignaturesFromMins); containment
     * rescoring reuses the sorted-intersect counts with the ASYMMETRIC
     * denominator. */
   def dedupContainment(s: SparkSession, d: String): DataFrame = {
@@ -418,8 +418,7 @@ object TrainingData {
   /** #66 embedding-cosine near-dup pairs over a bounded probe window —
     * the vector-space member of the dedup family (exact #49, token-set
     * Jaccard #55, SimHash #62, char-ngram #63). Probe side broadcasts;
-    * cosine_sim is the fused native expression. Scale path:
-    * ScalableDedup.embeddingNearDup (hyperplane-LSH bucketing). */
+    * cosine_sim is the fused native expression. */
   /** The ONE embedding near-dup pair recipe (probe bound, rounding,
     * threshold) shared by judged #66 and #84 — tuning it in one place
     * keeps both queries and their oracles in lockstep. */
@@ -548,9 +547,9 @@ object TrainingData {
     * catching transposition/typo-level duplicates that set-based
     * Jaccard scores as distant. Built on the codegen'd `levenshtein`
     * expression; all-pairs only on the ≤40-doc broadcast probe set
-    * (the 100 TB path blocks candidates through
-    * ScalableDedup.minhashCandidates first, then scores ONLY the
-    * candidate pairs with this same expression). */
+    * (the 100 TB path blocks candidates through MinHash banding —
+    * ScalableDedup.minhashBandedCandidatesFromSigs — first, then scores
+    * ONLY the candidate pairs with this same expression). */
   def dedupLevenshtein(s: SparkSession, d: String): DataFrame = {
     val t = Tables.documents(s, d)
       .filter(col("doc_id") < 40)
@@ -1261,33 +1260,6 @@ object TrainingData {
           .cast("double") / budget).cast("long") * budget).cast("long").as("offset"))
       .orderBy(col("doc_id"))
       .limit(500)
-  }
-
-  /** Materialized form of #78: assemble each packed chunk's text in doc
-    * order — the actual training-sequence table a tokenizer consumes.
-    * Docs are never split: a doc belongs to the chunk its first token
-    * lands in, so a chunk can overrun the budget by at most one doc
-    * (greedy sequential packing with document-boundary preservation,
-    * the common pre-tokenization choice). Per-chunk state is bounded by
-    * the budget plus one doc, so the ordered collect is safe at any
-    * corpus size; the chunk id itself comes from the distributed
-    * running total, so there is no global window anywhere. */
-  def packChunks(docs: DataFrame, idCol: String, textCol: String,
-      budget: Int): DataFrame = {
-    require(budget > 0, s"budget must be positive, got $budget")
-    val withTok = docs.select(col(idCol), col(textCol),
-      size(split(col(textCol), " ")).as("_tok"))
-    GlobalRank.runningTotal(withTok, idCol, "_tok", "_cum")
-      .withColumn("chunk",
-        floor((col("_cum") - col("_tok")).cast("double") / budget).cast("long"))
-      .groupBy(col("chunk"))
-      .agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col(idCol), col(textCol)))),
-          x => x.getField(textCol)), " ").as("text"),
-        sum(col("_tok")).as("tokens"),
-        count(lit(1)).as("n_docs"))
-      .orderBy(col("chunk"))
   }
 
   /** #77 contrastive negative sampling (added round 4): k deterministic

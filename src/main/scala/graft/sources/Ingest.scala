@@ -111,9 +111,9 @@ object Ingest {
     * never from the file extension, which a 100 TB crawl corpus lies
     * about constantly. Output matches `Multimodal.MediaRow`'s shape
     * (media_id = a deterministic 64-bit hash of the path, kind derived
-    * from the sniffed format), ready for `decodeFeatures` /
-    * `MediaPipeline.curate`. Unrecognized payloads tag as `bin` and
-    * take the stub path downstream instead of failing the load.
+    * from the sniffed format), ready for `MediaPipeline.curate`.
+    * Unrecognized payloads tag as `bin` and are skipped by the
+    * signature jobs downstream instead of failing the load.
     *
     * `binaryFile` is scan-parallel like any file source (one task per
     * file group) and prunes on the path glob; `maxBytes` guards a

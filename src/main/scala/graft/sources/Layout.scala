@@ -1,10 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Physical table layout for the 100 TB tier — the writer-side half of
-  * scan and join efficiency. Four levers, each exercised by LayoutSpec
+  * scan and join efficiency. Two levers, each exercised by LayoutSpec
   * against the plans/files it claims to shape (plus [[saveZOrdered]]'s
   * two-dimensional variant of lever 2, see its scaladoc):
   *
@@ -21,10 +21,6 @@ import org.apache.spark.sql.functions.col
   *     data-page reads (the skipping is row-group-granular — plain
   *     parquet has no planner-level file pruning on data columns; that
   *     is what table formats add on top).
-  *  3. '''Compaction''' ([[compact]]): fold the thousands of KB-sized
-  *     files a streaming sink accumulates into ~`targetBytes` files —
-  *     per-file open, footer read, and task-scheduling overhead make a
-  *     million-file table scan-bound on metadata, not data.
   */
 object Layout {
 
@@ -127,61 +123,5 @@ object Layout {
       .sortWithinPartitions(col("_graft_z"))
       .drop("_graft_z")
       .write.mode("overwrite").parquet(dir)
-  }
-
-  /** Total bytes and file count of the parquet data files under `dir`
-    * (driver-side metadata listing — no data read). */
-  def parquetFootprint(spark: SparkSession, dir: String): (Long, Int) = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val it = fs.listFiles(path, true)
-    var bytes = 0L
-    var files = 0
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        bytes += f.getLen; files += 1
-      }
-    }
-    (bytes, files)
-  }
-
-  /** Compact the parquet files under `inDir` into ~`targetBytes` output
-    * files at `outDir`, returning the MEASURED output file count. The
-    * target count comes from the on-disk (compressed) size of exactly
-    * the files the scan will read (`inputFiles` — for a streaming-sink
-    * directory this respects `_spark_metadata` and excludes orphans
-    * from crashed batches), and the fold is a `coalesce` — task-merge
-    * only, no shuffle: compaction of a 100 TB tail must not re-shuffle
-    * the data it is defragmenting. `coalesce` can only REDUCE
-    * parallelism, so an input already at or below the target file count
-    * is copied, not split. Caveats: layout properties that depend on
-    * one-file-per-range ([[saveRangeSorted]]) do not survive arbitrary
-    * coalescing — re-run the range writer instead when pruning matters
-    * more than file count; and the output is a PLAIN directory (a
-    * streaming sink's exactly-once `_spark_metadata` log is not carried
-    * over — stop the stream before swapping the compacted copy in). */
-  def compact(spark: SparkSession, inDir: String, outDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): Int = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    // neither dir may contain the other: overwrite of outDir must not
-    // delete input files, and output landing INSIDE inDir would be
-    // double-read by every later scan of inDir
-    graft.PathGuard.requireDisjoint(spark, Seq(inDir), outDir,
-      "compaction input", hint = "Compact into a separate directory, " +
-        "then swap it in.")
-    graft.PathGuard.requireDisjoint(spark, Seq(outDir), inDir,
-      "compaction output", hint = "Compact into a directory outside the " +
-        "input, then swap it in.")
-    val read = spark.read.parquet(inDir)
-    val inFiles = read.inputFiles
-    require(inFiles.nonEmpty, s"no readable parquet files under $inDir")
-    val fs = new org.apache.hadoop.fs.Path(inDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val bytes = inFiles.iterator
-      .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-    val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    read.coalesce(n).write.mode("overwrite").parquet(outDir)
-    parquetFootprint(spark, outDir)._2
   }
 }

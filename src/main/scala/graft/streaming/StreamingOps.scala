@@ -1,62 +1,16 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-/** Structured Streaming entry points: the live file sources for events
-  * and documents, the streaming twins of the corpus and media curation
+/** Structured Streaming entry points: the live file source for
+  * documents and the streaming twins of the corpus and media curation
   * pipelines (annotation and incremental dedup over a generation-per-batch
-  * signature store), and the three event-stream operators `graft.Demo`
-  * drives — hourly tumbling counts, stateful sessions and a stateful
-  * as-of join. The batch forms are what the oracle judges; these are the
-  * `readStream` deployment path.
-  *
-  * Watermarks bound state: an aggregation over 1-hour windows with a
-  * 1-day watermark keeps ≤ ~25 open windows per key on the store, however
-  * large the throughput — the property that makes these run indefinitely
-  * on a cluster.
+  * signature store). The batch forms are what the oracle judges; these
+  * are the `readStream` deployment path.
   */
 object StreamingOps {
-
-  /** Live file-source wiring for the events table: `readStream` over the
-    * parquet directory with the same timestamp-drift handling as the batch
-    * loader (Tables.events). Streaming sources require an explicit schema,
-    * so the physical `ts` encoding is resolved once from the existing
-    * files' footers (a driver-side metadata read, no data scan) and the
-    * matching conversion applied — TIMESTAMP(NANOS) as raw longs ns→µs,
-    * TIMESTAMP(MICROS)-ntz cast to session-tz, native timestamp as-is.
-    * New files appearing under the path become micro-batches — the
-    * deployment path for the ingestor. */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the directory may not hold events.parquet YET (the ingestor
-    // deployment starts the stream first) — fall back to the current
-    // writer's encoding (µs TIMESTAMP_NTZ since the 2026-08-13 regen)
-    // instead of failing at stream definition time
-    val tsType =
-      try spark.read.option("pathGlobFilter", "events.parquet").parquet(dir)
-        .schema("ts").dataType
-      catch { case _: org.apache.spark.sql.AnalysisException => TimestampNTZType }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    tsType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
 
   /** Live file-source wiring for the documents corpus: parquet files
     * matching `glob` appearing under `dir` become micro-batches — the
@@ -81,168 +35,6 @@ object StreamingOps {
     * no state store, no watermark), so batch and stream cannot drift. */
   def annotateDocuments(docs: DataFrame): DataFrame =
     graft.CorpusPipeline.annotate(docs)
-
-  /** Twin of TimeSeries.streamTumbling: 1-hour tumbling count+sum per
-    * event_type. */
-  def tumbling(events: DataFrame, watermark: String = "1 day"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("c"), round(sum(col("value")), 2).as("s"))
-      .select(col("w.start").as("wstart"), col("event_type"), col("c"), col("s"))
-
-  /** One session interval in per-key state, in epoch millis. */
-  case class SessionSpan(start: Long, end: Long, n: Long)
-
-  /** All of a key's not-yet-final sessions (watermark hasn't passed
-    * end + gap for them, so a late-but-admissible event could still
-    * extend or merge them). */
-  case class SessionsState(spans: Seq[SessionSpan])
-
-  /** A session emitted once the watermark passed its gap (final). */
-  case class ClosedSession(user_id: Long, st: Timestamp, en: Timestamp, n: Long)
-
-  /** Merge points/intervals sorted by start under a gap rule: adjacent
-    * spans whose boundary distance is within the gap collapse. */
-  private[streaming] def mergeSpans(spans: Seq[SessionSpan], gapMs: Long): Seq[SessionSpan] =
-    spans.sortBy(s => (s.start, s.end)).foldLeft(List.empty[SessionSpan]) {
-      case ((prev :: rest), s) if s.start - prev.end <= gapMs =>
-        SessionSpan(prev.start, math.max(prev.end, s.end), prev.n + s.n) :: rest
-      case (acc, s) => s :: acc
-    }.reverse
-
-  /** Custom stateful sessionization via flatMapGroupsWithState — the
-    * escape hatch for session semantics `session_window` can't express
-    * (custom merge rules, per-session derived features, caps).
-    *
-    * Correctness contract (append mode): a session is emitted ONLY once
-    * the event-time watermark has passed `end + gap`, so no
-    * still-admissible event can extend or merge it afterwards. Until
-    * then every candidate session stays in state; out-of-order events
-    * inside the watermark merge exactly like in-order ones (interval
-    * merge, not last-event comparison). State per key is O(open spans
-    * within the watermark horizon). */
-  def statefulSessions(events: DataFrame, gapSeconds: Long = 1800,
-      watermark: String = "1 day"): Dataset[ClosedSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapMs = gapSeconds * 1000L
-    events.select(col("user_id").cast("long").as("user_id"), col("ts"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionsState, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp)], state: GroupState[SessionsState]) =>
-          val incoming = rows.map(r => SessionSpan(r._2.getTime, r._2.getTime, 1)).toSeq
-          val merged = mergeSpans(state.getOption.map(_.spans).getOrElse(Nil) ++ incoming, gapMs)
-          val wm = state.getCurrentWatermarkMs()
-          val (ripe, open) = merged.partition(_.end + gapMs <= wm)
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(SessionsState(open))
-            state.setTimeoutTimestamp(open.map(_.end).min + gapMs)
-          }
-          ripe.iterator.map(s =>
-            ClosedSession(user, new Timestamp(s.start), new Timestamp(s.end), s.n))
-      }
-  }
-
-  /** Per-key as-of fold state: the latest SEALED reference row's
-    * (instant, id) — O(1), never a history buffer — plus the
-    * (µs, side-rank, event_id) fold point and the watermark-bounded
-    * pending buffer of not-yet-sealed rows from BOTH sides. */
-  case class AsofState(refUs: Long, refId: Long, hasRef: Boolean,
-      lastUs: Long, lastRank: Int, lastId: Long,
-      pending: Seq[(Long, Int, Long)])
-
-  /** One enriched probe row — the judged `join_asof_native` shape:
-    * None when no reference row at-or-before the probe exists yet. */
-  case class AsofRow(purchase_id: Long, user_id: Long,
-      click_id: Option[Long])
-
-  /** Streaming twin of the judged `join_asof_native` (round-13, closing
-    * the round-12 verdict's twin-program gap): a TRUE stream-stream
-    * as-of — each probe event (default: purchases) is enriched with the
-    * latest reference event (default: clicks) by the same user at or
-    * before the probe instant, from ONE watermarked event stream
-    * carrying both sides. Spark's built-in stream-stream joins cannot
-    * express "latest at-or-before" (their state is a time-bounded
-    * buffer of ALL candidates, and the ≤-latest pick needs a per-row
-    * aggregate the join operator doesn't run), so rows of
-    * both sides buffer until the watermark STRICTLY passes their
-    * instant, then fold in exact (event-time µs, side, event_id) order —
-    * references before probes at the same instant, so a same-instant
-    * reference matches (the batch operator's c_ts ≤ ts rule), and
-    * ascending-id folding of same-instant references reproduces the
-    * batch query's max-event_id dedup without any per-instant aggregate.
-    * Per-user state after sealing is ONE (instant, id) pair — not a
-    * reference history — because a backward as-of only ever needs the
-    * latest sealed reference; that O(1) state is exactly why this shape
-    * survives an unbounded stream where a buffered stream-stream join's
-    * state is watermark-window-sized. Spec-pinned bit-identical to the
-    * batch `join_asof_native` under shuffled multi-batch delivery
-    * (StreamingOpsSpec).
-    *
-    * State lifetime (round-13 advice): an idle key sets no eviction
-    * timeout once its pending buffer drains — the latest sealed
-    * reference pair persists so a probe arriving much later still
-    * enriches correctly (exactly the batch semantics; eviction would
-    * silently turn those matches into nulls). Per-key state is O(1)
-    * but total state grows with distinct keys ever seen; unbounded
-    * churning key spaces need an upstream domain bound or an external
-    * TTL that accepts losing pre-TTL references. */
-  def statefulAsofJoin(events: DataFrame, probeType: String = "purchase",
-      refType: String = "click",
-      watermark: String = "1 day"): Dataset[AsofRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .filter(col("event_type").isin(probeType, refType))
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        // rank 0 = reference, 1 = probe: the fold's same-instant order
-        when(col("event_type") === probeType, lit(1)).otherwise(lit(0))
-          .as("rank"),
-        col("event_id").cast("long").as("event_id"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Timestamp, Int, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[AsofState, AsofRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Timestamp, Int, Long)],
-            state: GroupState[AsofState]) =>
-          val st = state.getOption.getOrElse(AsofState(
-            Long.MinValue, Long.MinValue, hasRef = false,
-            Long.MinValue, Int.MinValue, Long.MinValue, Nil))
-          def micros(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          val pending =
-            (st.pending ++ rows.map(r => (micros(r._2), r._3, r._4))).distinct
-          val wm = state.getCurrentWatermarkMs()
-          // strict-<: fold only SEALED instants (no row at this instant
-          // can still arrive)
-          val (ripe, keep) = pending.partition(_._1 < wm * 1000L)
-          var refUs = st.refUs; var refId = st.refId; var hasRef = st.hasRef
-          var lastUs = st.lastUs; var lastRank = st.lastRank
-          var lastId = st.lastId
-          val out = ripe.sorted.filter { case (us, rk, id) =>
-            // replay guard: strictly after the fold point
-            us > lastUs || (us == lastUs &&
-              (rk > lastRank || (rk == lastRank && id > lastId)))
-          }.flatMap { case (us, rk, id) =>
-            lastUs = us; lastRank = rk; lastId = id
-            if (rk == 0) { // reference: ascending (us, id) → latest wins
-              refUs = us; refId = id; hasRef = true
-              None
-            } else Some(AsofRow(id, user, if (hasRef) Some(refId) else None))
-          }
-          state.update(AsofState(refUs, refId, hasRef,
-            lastUs, lastRank, lastId, keep))
-          if (keep.nonEmpty)
-            state.setTimeoutTimestamp(Math.max(
-              Math.floorDiv(keep.map(_._1).min + 999L, 1000L), wm + 1L))
-          out.iterator
-      }
-  }
 
   /** Streaming incremental corpus dedup: each micro-batch of documents is
     * curated against the signature store grown by all previous batches

@@ -26,81 +26,11 @@ class AnnSpec extends SparkSpecBase {
     assert(m.forall { case (p, nbs) => !nbs.contains(p) })
   }
 
-  test("LSH top-k candidates are a subset-quality approximation of brute force") {
-    val exact = topkMap(Ann.bruteForceTopK(emb, probes, "vec_id", "embedding", k = 5))
-    val approx = topkMap(Ann.lshTopK(emb, probes, "vec_id", "embedding",
-      k = 5, bits = 16, bands = 4))
-    // every probe gets candidates, and recall@5 is nonzero overall
-    assert(approx.keySet == exact.keySet)
-    val recall = exact.keys.toSeq.map { p =>
-      approx(p).toSet.intersect(exact(p).toSet).size.toDouble / 5.0
-    }.sum / exact.size
-    assert(recall > 0.3, s"recall@5 too low: $recall")
-  }
-
-  test("LSH top-k on an empty corpus returns empty, not a crash") {
-    val empty = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding")
-    val r = Ann.lshTopK(empty, empty, "vec_id", "embedding")
-    assert(r.count() == 0 && r.columns.toSeq == Seq("probe_id", "nb", "sim"))
-  }
-
-  test("IVF top-k searches nprobe lists and approximates brute force") {
-    val exact = topkMap(Ann.bruteForceTopK(emb, probes, "vec_id", "embedding", k = 5))
-    val approx = topkMap(Ann.ivfTopK(spark, emb, probes, "vec_id", "embedding",
-      k = 5, nlist = 8, nprobe = 4))
-    assert(approx.keySet == exact.keySet)
-    val recall = exact.keys.toSeq.map { p =>
-      approx(p).toSet.intersect(exact(p).toSet).size.toDouble / 5.0
-    }.sum / exact.size
-    assert(recall > 0.3, s"recall@5 too low: $recall")
-  }
-
   /** Mean recall@5 of `approx` against brute force over the given probes. */
   private def recallAt5(approx: Map[Long, Seq[Long]], exact: Map[Long, Seq[Long]]): Double =
     exact.keys.toSeq.map { p =>
       approx.getOrElse(p, Seq.empty).toSet.intersect(exact(p).toSet).size.toDouble / 5.0
     }.sum / exact.size
-
-  test("ANN recall grid: LSH bands and IVF nprobe trade candidates for recall") {
-    // Quantified recall so the tiers' tunables are measured, not dead
-    // reckoning. The fixture is the DRIVER's random-embedding table — a
-    // worst case for ANN (no cluster structure, top-5 cosine ~0.4), so
-    // these floors are conservative for real embedding corpora. The grid
-    // lives in DESIGN.md ("ANN recall"); the assertions pin the
-    // documented operating points and the direction of each tunable.
-    // Everything is seeded (hyperplanes, KMeans) → deterministic.
-    val wide = emb.filter($"vec_id" < 20)
-    val exact = topkMap(Ann.bruteForceTopK(emb, wide, "vec_id", "embedding", k = 5))
-
-    val lsh = (for {
-      bits <- Seq(16, 32)
-      bands <- Seq(2, 4, 8)
-    } yield (bits, bands) -> recallAt5(
-      topkMap(Ann.lshTopK(emb, wide, "vec_id", "embedding", k = 5,
-        bits = bits, bands = bands)), exact)).toMap
-    val ivf = (for (nprobe <- Seq(1, 4, 8, 12))
-      yield nprobe -> recallAt5(
-        topkMap(Ann.ivfTopK(spark, emb, wide, "vec_id", "embedding", k = 5,
-          nlist = 16, nprobe = nprobe)), exact)).toMap
-
-    info("LSH recall@5: " + lsh.toSeq.sortBy(_._1).map { case ((b, bd), r) =>
-      f"bits=$b/bands=$bd:$r%.2f" }.mkString(" "))
-    info("IVF recall@5 (nlist=16): " + ivf.toSeq.sortBy(_._1).map { case (np, r) =>
-      f"nprobe=$np:$r%.2f" }.mkString(" "))
-
-    // more/shorter bands → more candidates → recall never degrades
-    assert(lsh((16, 8)) >= lsh((16, 2)) && lsh((32, 8)) >= lsh((32, 2)),
-      s"band recall direction violated: $lsh")
-    // more probed lists → recall never degrades
-    assert(ivf(8) >= ivf(4) && ivf(4) >= ivf(1),
-      s"nprobe recall direction violated: $ivf")
-    // documented operating points (DESIGN.md "ANN recall"): measured
-    // 0.97 / 0.86 / 0.93 on this seeded fixture; floors leave headroom
-    // only below the measurement, never above
-    assert(lsh((16, 8)) >= 0.9, s"lsh bits=16 bands=8 recall ${lsh((16, 8))}")
-    assert(ivf(8) >= 0.8, s"ivf nlist=16 nprobe=8 recall ${ivf(8)}")
-    assert(ivf(12) >= 0.9, s"ivf nlist=16 nprobe=12 recall ${ivf(12)}")
-  }
 
   test("persisted IVF index equals brute force at full probe and prunes partitions") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -120,7 +50,7 @@ class AnnSpec extends SparkSpecBase {
     val full = topkMap(Ann.ivfTopKIndexed(spark, dir, probes, "vec_id",
       "embedding", k = 5, nprobe = 8))
     assert(full == exact, "nprobe=nlist must equal brute force")
-    // the served approximation matches the per-call ivfTopK recall band
+    // partial probe still finds a share of the true neighbors
     val approx = topkMap(Ann.ivfTopKIndexed(spark, dir, probes, "vec_id",
       "embedding", k = 5, nprobe = 4))
     assert(recallAt5(approx, exact) > 0.3, s"recall: ${recallAt5(approx, exact)}")
@@ -134,6 +64,19 @@ class AnnSpec extends SparkSpecBase {
     assert(listScan.metrics("numPartitions").value == 1,
       s"expected 1 of 8 list partitions read, got " +
         s"${listScan.metrics("numPartitions").value}")
+    // REBUILDING in place clears the whole lists tree: rows routed by the
+    // replaced centroids must not survive beside the new ones
+    emb.limit(3).write.parquet(s"$dir/lists/gen=1/list_id=0")
+    Ann.buildIvfIndex(spark, emb, "vec_id", "embedding", dir, nlist = 8)
+    val genDirs = new java.io.File(s"$dir/lists").listFiles()
+      .map(_.getName).filter(_.startsWith("gen=")).toSeq
+    assert(genDirs == Seq("gen=0"), genDirs.mkString(","))
+    // a stray non-numeric gen dir names ITSELF in the failure, not a
+    // bare NumberFormatException with no path context
+    assert(new java.io.File(s"$dir/lists/gen=1.bak").mkdir())
+    val e = intercept[IllegalArgumentException](
+      PathGuard.generationDirs(spark, s"$dir/lists"))
+    assert(e.getMessage.contains("gen=1.bak"), e.getMessage)
   }
 
   test("indexed partial-probe recall is monotone in nprobe and exact at nprobe = nlist") {
@@ -159,185 +102,4 @@ class AnnSpec extends SparkSpecBase {
     assert(recalls.last._2 == 1.0, s"nprobe = nlist must be exact: $recalls")
   }
 
-  test("appendToIvfIndex grows the index without refit; full probe stays exact") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfgrow").toString + "/idx"
-    // build on the first half only, append the second half
-    Ann.buildIvfIndex(spark, emb.filter($"vec_id" < 250), "vec_id", "embedding",
-      dir, nlist = 8)
-    Ann.appendToIvfIndex(spark, emb.filter($"vec_id" >= 250), "vec_id",
-      "embedding", dir, generation = 1)
-    // probing every list is exhaustive over the UNION, so it must equal
-    // brute force over the full corpus — appended vectors included
-    val exact = topkMap(Ann.bruteForceTopK(emb, probes, "vec_id", "embedding", k = 5))
-    val grown = topkMap(Ann.ivfTopKIndexed(spark, dir, probes, "vec_id",
-      "embedding", k = 5, nprobe = 8))
-    assert(grown == exact, "grown index at nprobe=nlist must equal brute force")
-    // appended vectors are reachable at partial probe too
-    val approx = topkMap(Ann.ivfTopKIndexed(spark, dir, probes, "vec_id",
-      "embedding", k = 5, nprobe = 4))
-    assert(approx.values.flatten.exists(_ >= 250L),
-      "no appended vector ever surfaces as a neighbor")
-    // duplicate ids in one batch append BOTH rows (per-row assignment,
-    // not per-id routing — parity with build-time model.transform)
-    val before = spark.read.parquet(s"$dir/lists").count()
-    val dup = emb.filter($"vec_id" === 0L)
-      .union(emb.filter($"vec_id" === 0L))
-    Ann.appendToIvfIndex(spark, dup, "vec_id", "embedding", dir, generation = 2)
-    assert(spark.read.parquet(s"$dir/lists").count() == before + 2)
-    // REPLAYING a generation overwrites it instead of duplicating — the
-    // idempotence contract streaming ingest relies on
-    Ann.appendToIvfIndex(spark, dup, "vec_id", "embedding", dir, generation = 2)
-    assert(spark.read.parquet(s"$dir/lists").count() == before + 2,
-      "a replayed generation must replace its rows, not append them again")
-    // dimension drift errors instead of persisting corrupt rows — the
-    // check is per-ROW in the plan (raised at execution), so a mixed
-    // batch cannot slip a bad row past a first-row probe
-    import org.apache.spark.sql.functions.{array, lit}
-    val bad = emb.filter($"vec_id" === 1L).select($"vec_id", $"embedding")
-      .union(spark.range(1).select(($"id" + 9000L).as("vec_id"),
-        array(lit(0.1), lit(0.2)).as("embedding").cast("array<double>")))
-    val rowsBefore = spark.read.parquet(s"$dir/lists").count()
-    val e = intercept[Exception] {
-      Ann.appendToIvfIndex(spark, bad, "vec_id", "embedding", dir, generation = 3)
-    }
-    def chain(t: Throwable): String =
-      if (t == null) "" else t.getMessage + "\n" + chain(t.getCause)
-    assert(chain(e).contains("!= index dim"), chain(e))
-    // local tests run the default v1 committer: job-level commit, so
-    // the failed job leaves nothing behind (doc scopes the claim so)
-    assert(spark.read.parquet(s"$dir/lists").count() == rowsBefore,
-      "a failed append must not persist rows")
-    // a right-SIZED vector with a NaN element poisons every centroid
-    // distance — it must fail, not land in an unreachable -1 partition
-    val poisoned = spark.range(1).select(($"id" + 9100L).as("vec_id"),
-      array((0 until 64).map(i =>
-        if (i == 7) lit(Double.NaN) else lit(0.01 * i)): _*).as("embedding"))
-    val e3 = intercept[Exception] {
-      Ann.appendToIvfIndex(spark, poisoned, "vec_id", "embedding", dir, generation = 4)
-    }
-    assert(chain(e3).contains("null/NaN"), chain(e3))
-    assert(spark.read.parquet(s"$dir/lists").count() == rowsBefore)
-    // and a mismatched id TYPE is refused before any write
-    val intIds = emb.filter($"vec_id" === 2L)
-      .select($"vec_id".cast("int").as("vec_id"), $"embedding")
-    val e2 = intercept[IllegalArgumentException] {
-      Ann.appendToIvfIndex(spark, intIds, "vec_id", "embedding", dir, generation = 5)
-    }
-    assert(e2.getMessage.contains("mixed id types"), e2.getMessage)
-    // an index persisted in the FLAT pre-generation layout is refused
-    // with a migration message — gen subtrees beside list_id=... dirs
-    // would make the whole tree unreadable to partition discovery
-    val flat = java.nio.file.Files.createTempDirectory("ivfflat").toString + "/idx"
-    spark.range(4).select($"id".as("nb"),
-      array(lit(0.5)).as("vb"), ($"id" % 2).cast("int").as("list_id"))
-      .write.partitionBy("list_id").parquet(s"$flat/lists")
-    val e4 = intercept[IllegalArgumentException] {
-      Ann.appendToIvfIndex(spark, emb.limit(1), "vec_id", "embedding",
-        flat, generation = 1)
-    }
-    assert(e4.getMessage.contains("flat pre-generation"), e4.getMessage)
-    // REBUILDING in place clears every appended generation: surviving
-    // gen>=1 rows were assigned by the centroids just deleted
-    Ann.buildIvfIndex(spark, emb, "vec_id", "embedding", dir, nlist = 8)
-    val genDirs = new java.io.File(s"$dir/lists").listFiles()
-      .map(_.getName).filter(_.startsWith("gen=")).toSeq
-    assert(genDirs == Seq("gen=0"), genDirs.mkString(","))
-    assert(spark.read.parquet(s"$dir/lists").count() == 500)
-    // a stray non-numeric gen dir names ITSELF in the failure, not a
-    // bare NumberFormatException with no path context
-    val stray = new java.io.File(s"$dir/lists/gen=1.bak")
-    assert(stray.mkdir())
-    val e5 = intercept[IllegalArgumentException] {
-      Ann.appendToIvfIndex(spark, emb.limit(1), "vec_id", "embedding",
-        dir, generation = 1)
-    }
-    assert(e5.getMessage.contains("gen=1.bak"), e5.getMessage)
-    assert(stray.delete())
-  }
-
-  test("IVF recall drift across appends is measured, and indexStats makes the rebuild rule checkable") {
-    // The frozen-centroid erosion claim (Ann.appendToIvfIndex scaladoc)
-    // quantified on the driver's embedding fixture: build on half A,
-    // then (1) append the other half B unchanged — same distribution —
-    // and (2) append B shifted by +0.15/element (~1.2 sigma/dim), a
-    // cluster the fit never saw. Everything seeded → deterministic.
-    // Measured values live in DESIGN.md ("IVF recall drift"); the
-    // assertions pin those numbers (floors below, never above) plus the
-    // structural facts: full probe stays exhaustive-exact even under
-    // drift, shifted mass skews lists, and the rebuild flag trips
-    // exactly when appended mass reaches fitted mass.
-    val a = emb.filter($"vec_id" < 250).select($"vec_id", $"embedding")
-    val b = emb.filter($"vec_id" >= 250).select($"vec_id", $"embedding")
-    val bShift = b.select($"vec_id",
-      transform($"embedding", x => (x + lit(0.15)).cast("float")).as("embedding"))
-    val probesA = a.filter($"vec_id" < 10)
-    val probesB = b.filter($"vec_id" < 260)
-    val probesBShift = bShift.filter($"vec_id" < 260)
-
-    // state 0: base index over A only
-    val dir1 = java.nio.file.Files.createTempDirectory("ivfdrift1").toString + "/idx"
-    Ann.buildIvfIndex(spark, a, "vec_id", "embedding", dir1, nlist = 8)
-    val exactA = topkMap(Ann.bruteForceTopK(a, probesA, "vec_id", "embedding", k = 5))
-    val rBase = recallAt5(topkMap(Ann.ivfTopKIndexed(spark, dir1, probesA,
-      "vec_id", "embedding", k = 5, nprobe = 4)), exactA)
-    val stats0 = Ann.indexStats(spark, dir1)
-    assert(stats0.fittedRows == 250 && stats0.appendedRows == 0
-      && stats0.generations == Seq(0L) && !stats0.rebuildRecommended, stats0.toString)
-
-    // state 1: same-distribution append of B
-    Ann.appendToIvfIndex(spark, b, "vec_id", "embedding", dir1, generation = 1)
-    val full = a.union(b)
-    val exactFull = topkMap(Ann.bruteForceTopK(full,
-      probesA.union(probesB), "vec_id", "embedding", k = 5))
-    val rSame = recallAt5(topkMap(Ann.ivfTopKIndexed(spark, dir1,
-      probesA.union(probesB), "vec_id", "embedding", k = 5, nprobe = 4)), exactFull)
-    val stats1 = Ann.indexStats(spark, dir1)
-    assert(stats1.fittedRows == 250 && stats1.appendedRows == 250
-      && stats1.generations == Seq(0L, 1L), stats1.toString)
-    // appended mass now RIVALS fitted mass — the documented rule trips
-    assert(stats1.rebuildRecommended, stats1.toString)
-
-    // state 2: distribution-SHIFTED append
-    val dir2 = java.nio.file.Files.createTempDirectory("ivfdrift2").toString + "/idx"
-    Ann.buildIvfIndex(spark, a, "vec_id", "embedding", dir2, nlist = 8)
-    Ann.appendToIvfIndex(spark, bShift, "vec_id", "embedding", dir2, generation = 1)
-    val corpus2 = a.union(bShift)
-    val exact2 = topkMap(Ann.bruteForceTopK(corpus2,
-      probesA.union(probesBShift), "vec_id", "embedding", k = 5))
-    val rShift = recallAt5(topkMap(Ann.ivfTopKIndexed(spark, dir2,
-      probesA.union(probesBShift), "vec_id", "embedding", k = 5, nprobe = 4)), exact2)
-    val stats2 = Ann.indexStats(spark, dir2)
-
-    info(f"recall@5 nprobe=4/nlist=8 — base:$rBase%.2f sameDist:$rSame%.2f shifted:$rShift%.2f")
-    info(f"listSkew — base:${stats0.listSkew}%.2f sameDist:${stats1.listSkew}%.2f shifted:${stats2.listSkew}%.2f")
-
-    // drifted mass concentrates in the few nearest frozen lists: the
-    // cost-erosion number grows even where recall holds
-    assert(stats2.listSkew > stats1.listSkew,
-      f"shifted append should skew lists: ${stats2.listSkew}%.2f vs ${stats1.listSkew}%.2f")
-    // full probe is exhaustive over the union regardless of drift
-    val fullProbe = topkMap(Ann.ivfTopKIndexed(spark, dir2,
-      probesA.union(probesBShift), "vec_id", "embedding", k = 5, nprobe = 8))
-    assert(fullProbe == exact2, "nprobe=nlist must stay exhaustive-exact under drift")
-    // measured floors (DESIGN.md "IVF recall drift": 0.84/0.83/0.86 —
-    // headroom below the measurement, never above)
-    assert(rBase >= 0.7 && rSame >= 0.7 && rShift >= 0.7,
-      f"recall floors: base=$rBase%.2f same=$rSame%.2f shift=$rShift%.2f")
-  }
-
-  test("hard negatives drop near-duplicates and keep the next-hardest neighbors") {
-    // anchor 1: 100 is a near-copy (cosine ~1), 2..4 progressively farther
-    val vecs = Seq(
-      (1L, Seq(1.0, 0.0, 0.0)),
-      (100L, Seq(0.999, 0.01, 0.0)),  // duplicate of anchor
-      (2L, Seq(0.9, 0.4, 0.0)),
-      (3L, Seq(0.5, 0.8, 0.0)),
-      (4L, Seq(0.0, 1.0, 0.0))
-    ).toDF("vec_id", "embedding")
-    val probes = vecs.filter($"vec_id" === 1L)
-    val topk = Ann.bruteForceTopK(vecs, probes, "vec_id", "embedding", k = 4)
-    val hard = Ann.hardNegatives(topk, k = 2, dupCosine = 0.98)
-      .select($"nb").collect().map(_.getLong(0)).toSeq
-    assert(hard == Seq(2L, 3L)) // 100 excluded as dup; hardest-first order
-  }
 }

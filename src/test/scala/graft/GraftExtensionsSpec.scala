@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** The spark.sql.extensions entry point must register the engine's
-  * optimizer rules. Session extensions only apply at first session
-  * creation, so this inspects the registration directly through the
-  * bridge (the fresh-JVM end-to-end proof is graft.Demo, whose session
-  * is built with the config and whose output asserts the rewrite). */
+  * optimizer rule and planner strategy. Session extensions only apply at
+  * first session creation, so this inspects the registration directly
+  * through the bridge and checks the class loads by name, as the config
+  * loads it. That the registered rule rewrites plans and keeps results is
+  * LatestPerKeyRuleSpec's job. */
 class GraftExtensionsSpec extends SparkSpecBase {
 
   test("GraftExtensions registers LatestPerKeyRule") {

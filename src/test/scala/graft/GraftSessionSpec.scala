@@ -28,6 +28,7 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
 

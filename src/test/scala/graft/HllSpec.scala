@@ -18,6 +18,12 @@ class HllSpec extends SparkSpecBase {
   private def estimate(c: Column): Column =
     GraftBridge.column(Hll.HllEstimate(GraftBridge.expression(c)))
 
+  /** The graft_hll_sketch and graft_hll_merge aggregates. */
+  private def sketch(c: Column): Column = GraftBridge.column(
+    Hll.HllSketchAgg(Hll.hash64(GraftBridge.expression(c))).toAggregateExpression())
+  private def merge(c: Column): Column = GraftBridge.column(
+    Hll.HllMergeAgg(GraftBridge.expression(c)).toAggregateExpression())
+
   private def relErr(approx: Long, exact: Long): Double =
     math.abs(approx.toDouble - exact) / math.max(exact, 1L)
 
@@ -43,13 +49,13 @@ class HllSpec extends SparkSpecBase {
     val ev = Tables.events(spark, sf())
     // per-event_type sketches — the "one sketch per partition/day" shape
     val sketches = ev.groupBy($"event_type")
-      .agg(Hll.hllSketch($"user_id").as("sk"))
+      .agg(sketch($"user_id").as("sk"))
     assert(sketches.count() == 5)
     // round-trip through parquet: sketch is a plain binary column
     val dir = java.nio.file.Files.createTempDirectory("hll").toString
     sketches.write.mode("overwrite").parquet(dir)
     val merged = spark.read.parquet(dir)
-      .agg(Hll.hllMerge($"sk").as("m")).collect().head.getLong(0)
+      .agg(merge($"sk").as("m")).collect().head.getLong(0)
     val direct = ev.agg(Hll.hll($"user_id")).collect().head.getLong(0)
     // union of per-group sketches is LOSSLESS: must equal direct exactly
     assert(merged == direct, s"merged=$merged direct=$direct")
@@ -57,10 +63,10 @@ class HllSpec extends SparkSpecBase {
 
   test("merge across a subset of sketches answers subset cardinality") {
     val ev = Tables.events(spark, sf())
-    val sketches = ev.groupBy($"event_type").agg(Hll.hllSketch($"user_id").as("sk"))
+    val sketches = ev.groupBy($"event_type").agg(sketch($"user_id").as("sk"))
     val subset = Seq("click", "view")
     val approx = sketches.filter($"event_type".isin(subset: _*))
-      .agg(Hll.hllMerge($"sk")).collect().head.getLong(0)
+      .agg(merge($"sk")).collect().head.getLong(0)
     val exact = ev.filter($"event_type".isin(subset: _*))
       .select(countDistinct($"user_id")).collect().head.getLong(0)
     assert(relErr(approx, exact) < 0.05, s"approx=$approx exact=$exact")
@@ -109,7 +115,7 @@ class HllSpec extends SparkSpecBase {
     assert(viaExpr == direct, s"expr=$viaExpr direct=$direct")
     // the decode path is a native expression, never a UDF
     val plan = Tables.events(spark, sf())
-      .groupBy($"event_type").agg(Hll.hllSketch($"user_id").as("sk"))
+      .groupBy($"event_type").agg(sketch($"user_id").as("sk"))
       .select(estimate($"sk"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BatchEvalPython") && !plan.toLowerCase.contains("scalaudf"),

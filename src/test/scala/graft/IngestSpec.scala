@@ -156,8 +156,8 @@ class IngestSpec extends SparkSpecBase {
       assert(again(r.getAs[String]("path")) == r.getAs[Long]("media_id")) }
     val wav = Ingest.readMediaDirectory(spark, dir, glob = "a.dat").collect()
     assert(wav.length == 1)
-    val decoded = Multimodal.decodeWav(wav.head.getAs[Array[Byte]]("media"))
-    assert(decoded.sampleRate == 8000 && decoded.nSamples == 64)
+    assert(Multimodal.wavSamples(wav.head.getAs[Array[Byte]]("media")).toSeq ==
+      Seq.fill(64)(1000L))
     // the size guard filters oversize payloads instead of reading them
     assert(Ingest.readMediaDirectory(spark, dir, maxBytes = 16).collect()
       .map(r => new java.io.File(r.getAs[String]("path")).getName).toSet == Set("e.mp4"))
@@ -176,9 +176,5 @@ class IngestSpec extends SparkSpecBase {
     val asRows = Ingest.readMediaDirectory(spark, dir)
       .as[Multimodal.MediaRow].collect()
     assert(asRows.length == 5 && asRows.forall(_.width == 0))
-    val feats = Multimodal.decodeFeatures(
-      Ingest.readMediaDirectory(spark, dir, glob = "a.dat")
-        .as[Multimodal.MediaRow]).collect()
-    assert(feats.length == 1 && feats.head.features(0) == 8000.0f) // real WAV decode
   }
 }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.sources.Layout
 
 /** The physical-layout levers actually shape what they claim to shape:
-  * bucketed tables join and aggregate with zero Exchange, range-sorted
-  * files carry disjoint per-file ranges that row-group skipping acts
-  * on, and compaction folds a fragmented directory without losing rows.
+  * bucketed tables join and aggregate with zero Exchange, and
+  * range-sorted files carry disjoint per-file ranges that row-group
+  * skipping acts on.
   */
 class LayoutSpec extends SparkSpecBase {
 
@@ -45,7 +45,7 @@ class LayoutSpec extends SparkSpecBase {
       // between 8 files and partitions x buckets files)
       val loc = spark.sessionState.catalog.getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier("lay_left")).location
-      val (_, bucketFiles) = Layout.parquetFootprint(spark, loc.toString)
+      val bucketFiles = spark.read.parquet(loc.toString).inputFiles.length
       assert(bucketFiles == 8, s"expected one file per bucket, got $bucketFiles")
       // re-saving a table from its own files fails fast instead of
       // deleting the input mid-read
@@ -132,33 +132,4 @@ class LayoutSpec extends SparkSpecBase {
         "row-group skipping did not engage")
   }
 
-  test("compact folds a fragmented directory without losing rows") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("lay_cmp").toString
-    val df = (1 to 5000).map(i => (i.toLong, s"x$i")).toDF("k", "s")
-    df.repartition(64).write.parquet(s"$base/frag")
-    val (_, fragFiles) = Layout.parquetFootprint(spark, s"$base/frag")
-    assert(fragFiles == 64)
-    val n = Layout.compact(spark, s"$base/frag", s"$base/tight")
-    val (_, tightFiles) = Layout.parquetFootprint(spark, s"$base/tight")
-    assert(n == 1 && tightFiles == 1, s"n=$n files=$tightFiles")
-    assert(spark.read.parquet(s"$base/tight").count() == 5000)
-    // a smaller target keeps more files — and the return value is the
-    // MEASURED output count (coalesce cannot split, so the on-disk
-    // count, not the byte-arithmetic estimate, is the truth)
-    val (bytes, _) = Layout.parquetFootprint(spark, s"$base/frag")
-    val n2 = Layout.compact(spark, s"$base/frag", s"$base/tight2", bytes / 3)
-    val (_, tight2Files) = Layout.parquetFootprint(spark, s"$base/tight2")
-    assert(n2 == tight2Files, s"returned $n2, on disk $tight2Files")
-    assert(n2 >= 2 && n2 < 64, s"n2=$n2")
-    assert(spark.read.parquet(s"$base/tight2").count() == 5000)
-    // neither direction of nesting is a legal compaction layout
-    intercept[IllegalArgumentException] {
-      Layout.compact(spark, s"$base/frag", s"$base/frag/sub")
-    }
-    intercept[IllegalArgumentException] {
-      Layout.compact(spark, base, s"$base/elsewhere")
-    }
-    ()
-  }
 }

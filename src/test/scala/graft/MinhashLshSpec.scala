@@ -55,7 +55,7 @@ class MinhashLshSpec extends SparkSpecBase {
           size(array_union($"ha", $"hb"))).as("j"))
       .filter($"j" >= 0.8)
       .select($"a_id", $"b_id")
-    val cand = ScalableDedup.minhashBandedCandidates(docs, "doc_id", "hs", 4, 4)
+    val cand = ScalableDedupSpec.minhashBandedCandidates(docs, "doc_id", "hs", 4, 4)
     val missed = brute.exceptAll(cand)
     assert(missed.isEmpty, s"high-J pairs missed by banding: ${missed.collect().mkString(",")}")
     docs.unpersist()

@@ -45,24 +45,6 @@ class Mp4Spec extends SparkSpecBase {
     intercept[IllegalArgumentException](Mp4.parseMp4(Array[Byte](1, 2, 3)))
   }
 
-  test("decodeFeatures: real container metadata for mp4, stub for opaque") {
-    import spark.implicits._
-    locally(spark) // force session init before createDataset
-    val realMp4 = Mp4.encodeMp4Minimal(320, 240, 4000, 100)
-    val opaque = Array.tabulate[Byte](64)(i => (i * 7).toByte)
-    val ds = spark.createDataset(Seq(
-      Multimodal.MediaRow(1L, "video", realMp4, "mp4", 320, 240, 0),
-      Multimodal.MediaRow(2L, "video", opaque, "mp4", 8, 8, 0)))
-    val got = Multimodal.decodeFeatures(ds, dim = 8).collect()
-      .map(f => f.media_id -> f.features).toMap
-    // real: [w, h, durationSec, nTracks, nSamples, 0-padded...]
-    assert(got(1L)(0) == 320.0f && got(1L)(1) == 240.0f)
-    assert(math.abs(got(1L)(2) - 4.0f) < 1e-6)
-    assert(got(1L)(3) == 1.0f && got(1L)(4) == 100.0f)
-    // opaque: stub hash features, not container fields
-    assert(got(2L)(0) != 8.0f || got(2L)(1) != 8.0f)
-  }
-
   test("chunked writer: sample walk resolves multi-run stsc to ABSOLUTE offsets") {
     // 7 samples of distinct sizes over chunks of (2, 1, 3, 1) samples —
     // two stsc runs collapse to (1→2), (2→1), (3→3), (4→1) positions,

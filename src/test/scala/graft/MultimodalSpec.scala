@@ -7,23 +7,6 @@ import graft.multimodal.Multimodal
 class MultimodalSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private lazy val media = Multimodal.syntheticMedia(spark, 30).repartition(4)
-
-  test("decodeFeatures keeps ids, emits fixed-dim vectors, is deterministic") {
-    val f1 = Multimodal.decodeFeatures(media, dim = 16)
-    assert(f1.count() == 30)
-    assert(f1.collect().forall(_.features.length == 16))
-    val again = Multimodal.decodeFeatures(media, dim = 16)
-      .collect().map(r => r.media_id -> r.features.toSeq).toMap
-    val first = f1.collect().map(r => r.media_id -> r.features.toSeq).toMap
-    assert(again == first)
-  }
-
-  test("decode is a pure map: partitioning survives") {
-    val out = Multimodal.decodeFeatures(media, dim = 4)
-    assert(out.rdd.getNumPartitions == media.rdd.getNumPartitions)
-  }
-
   test("frame sampling slices the payload with size and stride") {
     val df = Seq((1L, Array.range(0, 100).map(_.toByte))).toDF("id", "media")
     val frames = df.select(Multimodal.frameSample($"media", frameSize = 40, stride = 30).as("f"))
@@ -34,21 +17,14 @@ class MultimodalSpec extends SparkSpecBase {
     assert(arr(1)(0) == 30.toByte)
   }
 
-  test("WAV round-trip: encode → decode matches hand-computed stats") {
+  test("WAV round-trip: wavSamples returns the exact samples, mono and stereo") {
     val samples = Array[Short](1000, -1000, 1000, -1000, 0, 500)
-    val w = Multimodal.decodeWav(Multimodal.encodeWavPcm16(samples, 8000))
-    assert(w.sampleRate == 8000 && w.channels == 1 && w.nSamples == 6)
-    assert(math.abs(w.mean - 500.0 / 6) < 1e-9)
-    assert(math.abs(w.rms - math.sqrt((4 * 1000.0 * 1000 + 500.0 * 500) / 6)) < 1e-9)
-    // sign sequence (0 counts as non-negative): + - + - + + → 4 crossings / 5
-    assert(math.abs(w.zeroCrossRate - 4.0 / 5) < 1e-9)
-    assert(w.peak == 1000.0)
-  }
-
-  test("WAV stereo: channel count and interleaved sample count survive") {
-    val w = Multimodal.decodeWav(
-      Multimodal.encodeWavPcm16(Array[Short](1, 2, 3, 4, 5, 6), 44100, channels = 2))
-    assert(w.sampleRate == 44100 && w.channels == 2 && w.nSamples == 6)
+    assert(Multimodal.wavSamples(Multimodal.encodeWavPcm16(samples, 8000)).toSeq ==
+      samples.toSeq.map(_.toLong))
+    // stereo stays interleaved, in file order
+    val stereo = Array[Short](1, 2, 3, 4, 5, 6)
+    assert(Multimodal.wavSamples(
+      Multimodal.encodeWavPcm16(stereo, 44100, channels = 2)).toSeq == Seq(1L, 2, 3, 4, 5, 6))
   }
 
   test("BMP round-trip: encode → decode matches hand-computed channel means") {
@@ -67,14 +43,14 @@ class MultimodalSpec extends SparkSpecBase {
 
   test("malformed payloads fail loudly, not with fake features") {
     val junk = Array.tabulate[Byte](100)(_.toByte)
-    val e1 = intercept[IllegalArgumentException](Multimodal.decodeWav(junk))
+    val e1 = intercept[IllegalArgumentException](Multimodal.wavSamples(junk))
     assert(e1.getMessage.contains("RIFF"))
     val e2 = intercept[IllegalArgumentException](Multimodal.decodeBmp(junk))
     assert(e2.getMessage.contains("BM header"))
     // PCM-8 / float WAVs must be rejected, not misparsed
     val wav = Multimodal.encodeWavPcm16(Array[Short](1, 2), 8000)
     wav(20) = 3 // audioFormat = IEEE float
-    val e3 = intercept[IllegalArgumentException](Multimodal.decodeWav(wav))
+    val e3 = intercept[IllegalArgumentException](Multimodal.wavSamples(wav))
     assert(e3.getMessage.contains("PCM-16"))
   }
 
@@ -85,7 +61,7 @@ class MultimodalSpec extends SparkSpecBase {
     val wav = Multimodal.encodeWavPcm16(Array[Short](1, 2, 3, 4), 8000)
     val wbuf = java.nio.ByteBuffer.wrap(wav).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     wbuf.putInt(40, 0x7ffffff0) // data chunk size field
-    val e1 = intercept[IllegalArgumentException](Multimodal.decodeWav(wav))
+    val e1 = intercept[IllegalArgumentException](Multimodal.wavSamples(wav))
     assert(e1.getMessage.contains("overruns"))
     // BMP height = Int.MinValue: abs stays negative in Int — must fail,
     // not skip the pixel loop and return fake zero stats
@@ -186,14 +162,6 @@ class MultimodalSpec extends SparkSpecBase {
       e5.getMessage)
   }
 
-  test("a null format tag takes the stub path instead of an executor NPE") {
-    val bytes = Array.tabulate[Byte](16)(_.toByte)
-    val ds = spark.createDataset(Seq(
-      Multimodal.MediaRow(9L, "video", bytes, null, 0, 0, 0)))
-    val got = Multimodal.decodeFeatures(ds, dim = 4).collect()
-    assert(got.length == 1 && got.head.features.length == 4)
-  }
-
   test("a JPEG and a BMP of the same pixels are cross-container near-dups") {
     import graft.multimodal.Jpeg
     val (w, h) = (32, 32)
@@ -220,23 +188,6 @@ class MultimodalSpec extends SparkSpecBase {
     assert(hamming <= 3, s"cross-container hamming $hamming")
     val pairs = Multimodal.imageNearDups(ds, maxHamming = 3).collect()
     assert(pairs.length == 1)
-  }
-
-  test("a non-baseline JPEG under the jpeg tag stubs instead of killing the job") {
-    import graft.multimodal.Jpeg
-    val good = Jpeg.encodeJpeg(Array.fill[Byte](8 * 8 * 3)(99.toByte), 8, 8)
-    val progressive = good.clone()
-    val sofAt = progressive.sliding(2).indexWhere(p =>
-      (p(0) & 0xff) == 0xff && (p(1) & 0xff) == 0xc0)
-    progressive(sofAt + 1) = 0xc2.toByte
-    val ds = spark.createDataset(Seq(
-      Multimodal.MediaRow(1L, "image", good, "jpeg", 8, 8, 0),
-      Multimodal.MediaRow(2L, "image", progressive, "jpeg", 8, 8, 0)))(
-      org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
-    val got = Multimodal.decodeFeatures(ds, dim = 8).collect()
-      .map(f => f.media_id -> f.features).toMap
-    assert(got(1L)(0) == 8.0f && got(1L)(1) == 8.0f) // real decode
-    assert(got(2L)(0) != 8.0f || got(2L)(1) != 8.0f) // stub hash path
   }
 
   test("corrupt-past-the-sniff payloads stub/skip instead of failing the job") {
@@ -266,74 +217,20 @@ class MultimodalSpec extends SparkSpecBase {
       Multimodal.MediaRow(1L, "image", corrupt, "jpeg", 64, 40, 0),
       Multimodal.MediaRow(2L, "video", badMp4, "mp4", 0, 0, 0)))(
       org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
-    val got = Multimodal.decodeFeatures(ds, dim = 8).collect() // must not throw
-    assert(got.length == 2 && got.forall(_.features.length == 8))
-    // the signature job SKIPS the undecodable row rather than dying
+    // the signature jobs SKIP the undecodable rows rather than dying
     assert(Multimodal.imageAHashes(ds).collect().isEmpty)
+    assert(Multimodal.videoHashes(ds).collect().isEmpty)
   }
 
-  test("decodeFeatures dispatches: real stats for wav/bmp, stub for the rest") {
-    val wavBytes = Multimodal.encodeWavPcm16(Array[Short](100, -100, 100, -100), 16000)
-    val bmpBytes = Multimodal.encodeBmp24(2, 2, (_, _) => (10, 20, 30))
-    val mp4Bytes = Array.tabulate[Byte](32)(i => (i * 7).toByte)
-    val pngBytes = Multimodal.encodePng(2, 2, (_, _) => (10, 20, 30))
-    val ds = spark.createDataset(Seq(
-      Multimodal.MediaRow(1L, "audio", wavBytes, "wav", 0, 0, 16000),
-      Multimodal.MediaRow(2L, "image", bmpBytes, "bmp", 2, 2, 0),
-      Multimodal.MediaRow(3L, "video", mp4Bytes, "mp4", 8, 8, 0),
-      Multimodal.MediaRow(4L, "image", pngBytes, "png", 2, 2, 0)))
-    val got = Multimodal.decodeFeatures(ds, dim = 8)
-      .collect().map(r => r.media_id -> r.features.toSeq).toMap
-    val w = Multimodal.decodeWav(wavBytes)
-    assert(got(1L) == Seq(16000f, 1f, 4f, w.mean.toFloat, w.rms.toFloat,
-      w.zeroCrossRate.toFloat, w.peak.toFloat, 0f))
-    val b = Multimodal.decodeBmp(bmpBytes)
-    assert(got(2L) == Seq(2f, 2f, 10f, 20f, 30f, b.meanLuma.toFloat, 0f, 0f))
-    assert(got(3L).take(3) != got(2L).take(3)) // stub path, not a decode
-    val p = Multimodal.decodePng(pngBytes)
-    assert(got(4L) == Seq(2f, 2f, 3f, 10f, 20f, 30f, p.meanLuma.toFloat, 0f))
-  }
-
-  test("syntheticMedia emits genuinely decodable wav/bmp/avi payloads") {
-    val rows = media.collect()
-    rows.filter(_.format == "wav").foreach { r =>
-      val w = Multimodal.decodeWav(r.media)
-      assert(w.sampleRate == r.sample_rate && w.nSamples >= 64)
-    }
-    rows.filter(_.format == "bmp").foreach { r =>
-      val b = Multimodal.decodeBmp(r.media)
-      assert(b.width == r.width && b.height == r.height)
-    }
-    rows.filter(_.format == "avi").foreach { r =>
-      val a = Multimodal.decodeAvi(r.media)
-      assert(a.width == r.width && a.height == r.height && a.frames >= 2)
-    }
-    assert(rows.count(_.format == "wav") == 10 && rows.count(_.format == "bmp") == 10)
-    assert(rows.count(_.format == "avi") == 5 && rows.count(_.format == "mp4") == 5)
-  }
-
-  test("AVI round-trip: encode → decode matches dimensions, frames, luma") {
-    // 2 frames, 3x2 (padded rows, same trap as the BMP round-trip)
-    val f0 = Array(
-      Array((255, 0, 0), (0, 255, 0), (0, 0, 255)),
-      Array((10, 20, 30), (40, 50, 60), (70, 80, 90)))
-    val f1 = Array(
-      Array((0, 0, 0), (0, 0, 0), (0, 0, 0)),
-      Array((255, 255, 255), (255, 255, 255), (255, 255, 255)))
-    val avi = Multimodal.encodeAviDib(3, 2,
-      Seq((x, y) => f0(y)(x), (x, y) => f1(y)(x)), fps = 5)
-    val a = Multimodal.decodeAvi(avi)
-    assert(a.width == 3 && a.height == 2 && a.frames == 2)
-    assert(a.microsPerFrame == 200000)
-    // mean luma across frames = avg(frame0 luma, frame1 luma), both
-    // hand-computable from the channel means
-    def luma(px: Array[Array[(Int, Int, Int)]]): Double = {
-      val flat = px.flatten
-      val (r, g, b) = (flat.map(_._1).sum / 6.0, flat.map(_._2).sum / 6.0,
-        flat.map(_._3).sum / 6.0)
-      0.299 * r + 0.587 * g + 0.114 * b
-    }
-    assert(math.abs(a.meanLuma - (luma(f0) + luma(f1)) / 2) < 1e-9)
+  test("AVI round-trip: encode → aviGrayPixels returns every frame in order") {
+    // 2 gray frames, 3x2 (padded rows, same trap as the BMP round-trip)
+    val f0 = Array(Array(255, 0, 128), Array(10, 40, 70))
+    val f1 = Array(Array(0, 0, 0), Array(255, 255, 255))
+    def gray(f: Array[Array[Int]]): (Int, Int) => (Int, Int, Int) =
+      (x, y) => (f(y)(x), f(y)(x), f(y)(x))
+    val avi = Multimodal.encodeAviDib(3, 2, Seq(gray(f0), gray(f1)), fps = 5)
+    assert(Multimodal.aviGrayPixels(avi).toSeq ==
+      (f0.flatten ++ f1.flatten).toSeq.map(_.toLong))
   }
 
   import MediaFixtures.{shot, encShot, randomFrame}
@@ -368,16 +265,15 @@ class MultimodalSpec extends SparkSpecBase {
     buf.putInt(180, -8) // strf biHeight (RIFF 12 + hdrl 12 + avih 64 + strl 12 + strh 64 + strf hdr 8 + 8)
     assert(Multimodal.aviFingerprint(down) == Multimodal.aviFingerprint(up),
       "orientation must be normalized, like bmpAHash")
-    assert(Multimodal.decodeAvi(down).meanLuma == Multimodal.decodeAvi(up).meanLuma)
     // strf/avih dimension disagreement is a loud failure, not a misread
     val bad = encShot(frames)
     java.nio.ByteBuffer.wrap(bad).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .putInt(176, 9) // strf biWidth
-    val e = intercept[IllegalArgumentException](Multimodal.decodeAvi(bad))
+    val e = intercept[IllegalArgumentException](Multimodal.aviFingerprint(bad))
     assert(e.getMessage.contains("disagree"), e.getMessage)
   }
 
-  test("videoFrameHashes samples frames; videoNearDups pairs near-identical videos") {
+  test("videoHashes skips undecodable rows; videoNearDups pairs near-identical videos") {
     val rnd = new scala.util.Random(11)
     val frames = shot(rnd, 6)
     val tweaked = frames.map(_.map(_.clone())).clone()
@@ -388,10 +284,9 @@ class MultimodalSpec extends SparkSpecBase {
       Multimodal.MediaRow(2L, "video", encShot(tweaked), "avi", 8, 8, 0),
       Multimodal.MediaRow(3L, "video", encShot(unrelated), "avi", 8, 8, 0),
       Multimodal.MediaRow(4L, "video", Array[Byte](1, 2, 3), "mp4", 0, 0, 0)))
-    // every 2nd frame of each AVI row; the mp4 row is skipped
-    val fh = Multimodal.videoFrameHashes(ds, step = 2).collect()
-    assert(fh.map(_.getLong(0)).distinct.sorted.toSeq == Seq(1L, 2L, 3L))
-    assert(fh.count(_.getLong(0) == 1L) == 3) // frames 0, 2, 4
+    // one fingerprint per AVI row; the opaque mp4 row is skipped
+    assert(Multimodal.videoHashes(ds).collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L, 3L))
     val pairs = Multimodal.videoNearDups(ds)
       .select($"a_media_id", $"b_media_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -412,23 +307,12 @@ class MultimodalSpec extends SparkSpecBase {
     }
     val j0 = Jpeg.encodeJpeg(card(0), w, h, quality = 90)
     val j1 = Jpeg.encodeJpeg(card(4), w, h, quality = 90)
-    val avi = Multimodal.encodeAviMjpeg(w, h, Seq(j0, j1), fps = 5)
-    // container parse + REAL per-frame decode: meanLuma is the average of
-    // the two frames' decoded luma, not a stub
-    val info = Multimodal.decodeAvi(avi)
-    assert(info.width == w && info.height == h && info.frames == 2)
-    val expected = (Jpeg.decodeJpeg(j0).meanLuma + Jpeg.decodeJpeg(j1).meanLuma) / 2
-    assert(math.abs(info.meanLuma - expected) < 1e-9)
-    // per-frame hashes equal the SAME frames hashed as standalone JPEGs —
-    // an MJPEG video frame lands in the image signature space
-    val ds = spark.createDataset(Seq(
-      Multimodal.MediaRow(1L, "video", avi, "avi", w, h, 0)))(
-      org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
-    val fh = Multimodal.videoFrameHashes(ds).collect()
-      .map(r => r.getInt(1) -> r.getLong(2)).toMap
-    assert(fh.keySet == Set(0, 1))
-    assert(fh(0) == Multimodal.jpegAHash(j0))
-    assert(fh(1) == Multimodal.jpegAHash(j1))
+    val avi = Multimodal.encodeAviMjpeg(w, h, Seq(j0, j0, j1), fps = 5)
+    // REAL per-frame decode: the frames hash as the SAME JPEGs do
+    // standalone, so the 2-of-3 majority vote is exactly j0's aHash — an
+    // MJPEG video frame lands in the image signature space
+    assert(Multimodal.jpegAHash(j0) != Multimodal.jpegAHash(j1))
+    assert(Multimodal.aviFingerprint(avi) == Multimodal.jpegAHash(j0))
     // fingerprint is deterministic and far from an unrelated DIB video
     assert(Multimodal.aviFingerprint(avi) == Multimodal.aviFingerprint(avi.clone()))
     // a frame that is not a JPEG under the MJPG codec fails loudly
@@ -440,7 +324,7 @@ class MultimodalSpec extends SparkSpecBase {
       i
     }
     notJpeg(moviAt + 8) = 0 // clobber the frame's SOI marker
-    val e = intercept[IllegalArgumentException](Multimodal.decodeAvi(notJpeg))
+    val e = intercept[IllegalArgumentException](Multimodal.aviFingerprint(notJpeg))
     assert(e.getMessage.contains("SOI"), e.getMessage)
   }
 
@@ -477,13 +361,10 @@ class MultimodalSpec extends SparkSpecBase {
       Multimodal.MediaRow(2L, "video", avi, "avi", w, h, 0),
       Multimodal.MediaRow(3L, "video", Array[Byte](1, 2, 3), "mp4", 0, 0, 0)))(
       org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
-    val fh = Multimodal.videoFrameHashes(ds).collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    assert(fh.keySet.map(_._1) == Set(1L, 2L)) // opaque mp4 row skipped
-    for (i <- 0 until 3) {
-      assert(fh((1L, i)) == Multimodal.jpegAHash(j(i)))
-      assert(fh((1L, i)) == fh((2L, i)))
-    }
+    val vh = Multimodal.videoHashes(ds).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(vh.keySet == Set(1L, 2L)) // opaque mp4 row skipped
+    assert(vh(1L) == vh(2L))
     // fingerprints agree across containers too, and videoNearDups pairs them
     assert(Multimodal.mp4MjpegFingerprint(mp4) ==
       Multimodal.aviFingerprint(avi))
@@ -495,53 +376,19 @@ class MultimodalSpec extends SparkSpecBase {
 
   test("malformed AVI payloads fail loudly, not with fake features") {
     val junk = Array.tabulate[Byte](100)(_.toByte)
-    val e1 = intercept[IllegalArgumentException](Multimodal.decodeAvi(junk))
+    val e1 = intercept[IllegalArgumentException](Multimodal.aviFingerprint(junk))
     assert(e1.getMessage.contains("RIFF"))
     // a truncated movi list must trip the bounds walk, not overrun
     val avi = Multimodal.encodeAviDib(4, 4, Seq((_, _) => (1, 2, 3)))
     val cut = avi.take(avi.length - 10)
-    val e2 = intercept[IllegalArgumentException](Multimodal.decodeAvi(cut))
+    val e2 = intercept[IllegalArgumentException](Multimodal.aviFingerprint(cut))
     assert(e2.getMessage.contains("overruns"), e2.getMessage)
     // frame-count mismatch between avih and movi is a loud failure
     val lying = avi.clone()
     val buf = java.nio.ByteBuffer.wrap(lying).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     buf.putInt(48, 7) // avih dwTotalFrames (RIFF 12 + LIST hdr 12 + avih hdr 8 + 16)
-    val e3 = intercept[IllegalArgumentException](Multimodal.decodeAvi(lying))
+    val e3 = intercept[IllegalArgumentException](Multimodal.aviFingerprint(lying))
     assert(e3.getMessage.contains("declares"), e3.getMessage)
-  }
-
-  test("wavFrameFeatures: hand-computed per-frame energy and zero crossings") {
-    // 4 silent samples, 4 at +1000, 4 alternating ±1000 → frames of 4 / stride 4
-    val samples = Array[Short](0, 0, 0, 0, 1000, 1000, 1000, 1000,
-      1000, -1000, 1000, -1000)
-    val wav = Multimodal.encodeWavPcm16(samples, 8000)
-    val ds = spark.createDataset(Seq(
-      Multimodal.MediaRow(7L, "audio", wav, "wav", 0, 0, 8000),
-      Multimodal.MediaRow(8L, "video", Array[Byte](1, 2, 3), "mp4", 0, 0, 0)))
-    val got = Multimodal.wavFrameFeatures(ds, frameSize = 4, stride = 4)
-      .collect().sortBy(_.frame_idx)
-    assert(got.forall(_.media_id == 7L) && got.length == 3) // mp4 row skipped
-    assert(got.map(_.start_sample).toSeq == Seq(0L, 4L, 8L))
-    assert(got(0).rms == 0.0 && got(0).zero_cross_rate == 0.0)
-    assert(got(1).rms == 1000.0 && got(1).zero_cross_rate == 0.0)
-    assert(got(2).rms == 1000.0 && math.abs(got(2).zero_cross_rate - 1.0) < 1e-9)
-    // overlapping frames: stride 2 over 12 samples → 5 frames
-    assert(Multimodal.wavFrameFeatures(ds, frameSize = 4, stride = 2).count() == 5)
-  }
-
-  test("wavFrameFeatures is channel-aware: constant stereo DC is zero activity") {
-    // interleaved L=+1000 / R=-1000: framing the raw interleaved stream
-    // would flip sign at every step and read pure DC as max-frequency
-    val stereo = Array.tabulate[Short](32)(i => if (i % 2 == 0) 1000 else -1000)
-    val wav = Multimodal.encodeWavPcm16(stereo, 8000, channels = 2)
-    val ds = spark.createDataset(Seq(
-      Multimodal.MediaRow(1L, "audio", wav, "wav", 0, 0, 8000)))
-    val got = Multimodal.wavFrameFeatures(ds, frameSize = 8, stride = 8)
-      .collect().sortBy(_.frame_idx)
-    assert(got.length == 2) // 16 sample-frames / 8 per window
-    got.foreach { fr =>
-      assert(fr.rms == 1000.0 && fr.zero_cross_rate == 0.0, fr.toString)
-    }
   }
 
   test("tiny images hash by content, not by empty-block coincidence") {

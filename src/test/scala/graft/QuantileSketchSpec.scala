@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.functions.QuantileSketch
 
@@ -36,7 +37,8 @@ class QuantileSketchSpec extends SparkSpecBase {
       .agg(QuantileSketch.quantileSketch($"value").as("sk"))
       .write.parquet(dir)
     val merged = spark.read.parquet(dir)
-      .agg(QuantileSketch.quantileMerge($"sk").as("sk"))
+      .agg(GraftBridge.column(QuantileSketch.QMergeAgg(GraftBridge.expression($"sk"))
+        .toAggregateExpression()).as("sk"))
       .collect().head.getAs[Array[Byte]](0)
     val direct = e.agg(QuantileSketch.quantileSketch($"value").as("sk"))
       .collect().head.getAs[Array[Byte]](0)

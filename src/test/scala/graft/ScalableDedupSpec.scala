@@ -1,12 +1,29 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.operators.ScalableDedup
 
+/** Banded MinHash candidates in one call, composed from the reached
+  * forms: minima once, band signatures, then the bucket join. */
+object ScalableDedupSpec {
+  def minhashBandSignatures(df: DataFrame, idCol: String, hashCol: String,
+      bands: Int, rowsPerBand: Int): DataFrame =
+    ScalableDedup.minhashBandSignaturesFromMins(
+      df.withColumn("_mh", ScalableDedup.minhashMins(col(hashCol), bands * rowsPerBand)),
+      idCol, hashCol, "_mh", bands, rowsPerBand)
+
+  def minhashBandedCandidates(df: DataFrame, idCol: String, hashCol: String,
+      bands: Int, rowsPerBand: Int, maxBucketSize: Option[Int] = None): DataFrame =
+    ScalableDedup.minhashBandedCandidatesFromSigs(
+      minhashBandSignatures(df, idCol, hashCol, bands, rowsPerBand), idCol, maxBucketSize)
+}
+
 class ScalableDedupSpec extends SparkSpecBase {
   import spark.implicits._
+  import ScalableDedupSpec._
 
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again and again today"),
@@ -31,43 +48,6 @@ class ScalableDedupSpec extends SparkSpecBase {
     assert(!pairs.exists { case (a, b) => Set(a, b) == Set(1L, 3L) })
   }
 
-  test("minhash LSH surfaces high-jaccard candidate pairs") {
-    val pairs = ScalableDedup.minhashCandidates(docs, "doc_id", "toks",
-      maxJaccardDistance = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 4L))) // jaccard 1.0
-    assert(pairs.contains((1L, 2L))) // 12 of 13 tokens shared
-  }
-
-  test("embedding near-dup finds planted duplicates within buckets") {
-    val base = (0 until 16).map(_.toDouble / 7.0)
-    val dup = base.map(_ * 1.0001) // cosine ~ 1
-    val far = (0 until 16).map(i => if (i % 2 == 0) 1.0 else -1.0)
-    val df = Seq((1L, base), (2L, dup), (3L, far)).toDF("id", "v")
-    val got = ScalableDedup.embeddingNearDup(df, "id", "v", minCosine = 0.99)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 2L)))
-  }
-
-  test("embedding near-dup on empty input returns empty, not a crash") {
-    val empty = Seq.empty[(Long, Seq[Double])].toDF("id", "v")
-    val got = ScalableDedup.embeddingNearDup(empty, "id", "v")
-    assert(got.count() == 0)
-    assert(got.columns.toSeq == Seq("a_id", "b_id", "cosine"))
-    // schema matches the non-empty path even for non-long id columns
-    val emptyStr = Seq.empty[(String, Seq[Double])].toDF("id", "v")
-    val gotStr = ScalableDedup.embeddingNearDup(emptyStr, "id", "v")
-    assert(gotStr.schema("a_id").dataType ==
-      org.apache.spark.sql.types.StringType)
-  }
-
-  test("minhash candidates over the documents table run and are symmetric-free") {
-    val d = Tables.documents(spark, sf()).limit(100)
-      .withColumn("toks", TextFunctions.tokenSet($"text"))
-    val pairs = ScalableDedup.minhashCandidates(d, "doc_id", "toks").collect()
-    assert(pairs.forall(r => r.getLong(0) < r.getLong(1)))
-  }
-
   test("minhashBandedCandidates: empty hash sets drop out instead of sharing a bucket") {
     // an empty set has no shingles (Jaccard 0 against everything); before
     // the guard, concat_ws collapsed its all-null minhash band to the
@@ -77,7 +57,7 @@ class ScalableDedupSpec extends SparkSpecBase {
       (1L, Seq.empty[Long]), (2L, Seq.empty[Long]), (3L, Seq.empty[Long]),
       (4L, Seq(5L, 7L, 9L)), (5L, Seq(5L, 7L, 9L))
     ).toDF("id", "hs")
-    val cand = ScalableDedup.minhashBandedCandidates(df, "id", "hs",
+    val cand = minhashBandedCandidates(df, "id", "hs",
         bands = 4, rowsPerBand = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand == Set((4L, 5L)),
@@ -197,7 +177,7 @@ class ScalableDedupSpec extends SparkSpecBase {
       .toDF("doc_id", "text")
       .select($"doc_id",
         graft.functions.ShingleHash32Expr.shingle_hash32($"text", 4).as("hs"))
-    def pairs(cap: Option[Int]) = ScalableDedup.minhashBandedCandidates(
+    def pairs(cap: Option[Int]) = minhashBandedCandidates(
         docs, "doc_id", "hs", bands = 4, rowsPerBand = 4, maxBucketSize = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val uncapped = pairs(None)
@@ -227,7 +207,7 @@ class ScalableDedupSpec extends SparkSpecBase {
     val bands = 8; val rpb = 2
     // the fixture must have teeth: (a) at least one hot band bucket
     // holds BOTH pair docs and 50 boilerplate docs...
-    val sigs = ScalableDedup.minhashBandSignatures(df, "doc_id", "hs",
+    val sigs = minhashBandSignatures(df, "doc_id", "hs",
         bands, rpb)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
     val byBucket = sigs.groupBy(s => (s._2, s._3)).view
@@ -240,7 +220,7 @@ class ScalableDedupSpec extends SparkSpecBase {
     assert(byBucket.values.exists(_ == Set(1L, 2L)),
       "fixture lost its teeth: no pair-only bucket")
     // the cap drops every hot bucket, yet the pair is still found
-    val capped = ScalableDedup.minhashBandedCandidates(df, "doc_id", "hs",
+    val capped = minhashBandedCandidates(df, "doc_id", "hs",
         bands, rpb, maxBucketSize = Some(10))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped.contains((1L, 2L)),

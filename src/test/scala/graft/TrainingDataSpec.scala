@@ -154,41 +154,6 @@ class TrainingDataSpec extends SparkSpecBase {
     assert(rows.forall(r => r.getDouble(4) >= 0.8 && r.getDouble(4) <= 1.0))
   }
 
-  test("packChunks preserves every doc, orders within chunks, bounds overrun") {
-    import org.apache.spark.sql.functions.{col, size, split}
-    val budget = 200
-    val docs = Tables.documents(spark, sf()).select(col("doc_id"), col("text"))
-    val chunks = TrainingData.packChunks(docs, "doc_id", "text", budget)
-      .collect()
-    val nDocs = docs.count()
-    assert(chunks.map(_.getAs[Long]("n_docs")).sum == nDocs, "docs lost or duplicated")
-    // chunk ids are exactly 0..max with no gaps
-    val ids = chunks.map(_.getAs[Long]("chunk")).sorted
-    assert(ids.head == 0L && ids.last == ids.length - 1L && ids.distinct.length == ids.length)
-    // the reported token count equals the assembled text's own count
-    chunks.foreach { r =>
-      val recount = r.getAs[String]("text").split(" ").length.toLong
-      assert(recount == r.getAs[Long]("tokens"), s"chunk ${r.getAs[Long]("chunk")}")
-    }
-    // driver-side replay of the greedy assignment must agree chunk-for-chunk
-    val perDoc = docs.select(col("doc_id"), size(split(col("text"), " ")).as("t"))
-      .orderBy(col("doc_id")).collect()
-    var cum = 0L
-    val expected = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
-    perDoc.foreach { r =>
-      expected(cum / budget) += 1
-      cum += r.getAs[Int]("t")
-    }
-    chunks.foreach { r =>
-      assert(r.getAs[Long]("n_docs") == expected(r.getAs[Long]("chunk")),
-        s"chunk ${r.getAs[Long]("chunk")} doc count") }
-    // every chunk except the last starts at or past its budget boundary
-    // only because a doc never splits: overrun is bounded by one doc
-    val maxDoc = perDoc.map(_.getAs[Int]("t")).max.toLong
-    chunks.filter(_.getAs[Long]("chunk") < ids.last).foreach { r =>
-      assert(r.getAs[Long]("tokens") < budget + maxDoc) }
-  }
-
   test("text_repetition: duplicate-bigram basis points, single-token doc dropped") {
     // "a b a b c": bigrams [a b, b a, a b, b c] → 4 total, 3 distinct,
     // dup_bp = round(10000·1/4) = 2500; "x x x x": [x x]×3 → dup_bp 6667

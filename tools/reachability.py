@@ -22,7 +22,8 @@ Roots:
   - SparkEntry.queries, SparkEntry.oracleSql and SparkEntry.entry;
   - the pipelines' entry defs and the streaming twins their scaladoc
     names (see PIPELINE_ROOTS);
-  - the mains: Demo, Tool, Bench, Verify, GenSf;
+  - every top-level `object` in src/main/scala that declares
+    `def main(args: Array[String])`;
   - GraftSession.enrich and every `register` def (SQL-name
     registrations);
   - all of perfbench/scala (every engine symbol the benchmark calls).
@@ -37,7 +38,6 @@ otherwise.
 import os, re, sys
 from collections import defaultdict
 
-MAINS = ["Demo", "Tool", "Bench", "Verify", "GenSf"]
 ENTRY_ROOTS = [("SparkEntry", "queries"), ("SparkEntry", "oracleSql"),
                ("SparkEntry", "entry"), ("GraftSession", "enrich")]
 PIPELINE_ROOTS = [
@@ -53,6 +53,7 @@ PIPELINE_ROOTS = [
 OWNER_CALLED = {"apply", "unapply", "unapplySeq", "main"}
 # Spark bases whose abstract members are implemented without `override`
 FRAMEWORK_BASES = re.compile(r"\bextends\s+Aggregator\b")
+MAIN = re.compile(r"\bdef\s+main\s*\(\s*\w+\s*:\s*Array\s*\[\s*String\s*\]\s*\)")
 DECL = re.compile(r"\b(def|val|var|class|object|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
 WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 MODIFIERS = {"override", "implicit", "private", "protected", "final", "lazy",
@@ -292,11 +293,16 @@ def main(root, why=None):
         if p.startswith("perfbench/"):
             for dc in decls[p]:
                 reach(dc)
-    for o, n in ENTRY_ROOTS + PIPELINE_ROOTS + [(m, "main") for m in MAINS]:
+    for o, n in ENTRY_ROOTS + PIPELINE_ROOTS:
         hits = find(o, n)
         if not hits:
             sys.exit(f"reachability: root {o}.{n} not found")
         for dc in hits:
+            reach(dc)
+    for dc in by_name["main"]:
+        own = dc.owner
+        if (dc.path.startswith("src/") and own and own.kind == "object"
+                and own.owner is None and MAIN.match(files[dc.path], dc.start)):
             reach(dc)
     for dc in by_name["register"]:
         reach(dc)
