@@ -17,14 +17,31 @@ class MultimodalSpec extends SparkSpecBase {
     assert(arr(1)(0) == 30.toByte)
   }
 
-  test("WAV round-trip: wavSamples returns the exact samples, mono and stereo") {
+  /** (sample rate, channels) as the RIFF `fmt ` chunk records them. */
+  private def wavHeader(bytes: Array[Byte]): (Int, Int) = {
+    val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (buf.getInt(24), buf.getShort(22).toInt)
+  }
+
+  test("WAV round-trip: encode → decode matches hand-computed stats") {
     val samples = Array[Short](1000, -1000, 1000, -1000, 0, 500)
-    assert(Multimodal.wavSamples(Multimodal.encodeWavPcm16(samples, 8000)).toSeq ==
-      samples.toSeq.map(_.toLong))
+    val wav = Multimodal.encodeWavPcm16(samples, 8000)
+    assert(wavHeader(wav) == (8000, 1))
+    val s = Multimodal.wavSamples(wav).map(_.toDouble)
+    assert(s.toSeq == samples.toSeq.map(_.toDouble))
+    assert(math.abs(s.sum / s.length - 500.0 / 6) < 1e-9)
+    assert(math.abs(math.sqrt(s.map(x => x * x).sum / s.length) -
+      math.sqrt((4 * 1000.0 * 1000 + 500.0 * 500) / 6)) < 1e-9)
+    // sign sequence (0 counts as non-negative): + - + - + + → 4 crossings
+    assert(s.sliding(2).count(p => (p(0) >= 0) != (p(1) >= 0)) == 4)
+    assert(s.map(math.abs).max == 1000.0)
+  }
+
+  test("WAV stereo: channel count and interleaved sample count survive") {
+    val wav = Multimodal.encodeWavPcm16(Array[Short](1, 2, 3, 4, 5, 6), 44100, channels = 2)
+    assert(wavHeader(wav) == (44100, 2))
     // stereo stays interleaved, in file order
-    val stereo = Array[Short](1, 2, 3, 4, 5, 6)
-    assert(Multimodal.wavSamples(
-      Multimodal.encodeWavPcm16(stereo, 44100, channels = 2)).toSeq == Seq(1L, 2, 3, 4, 5, 6))
+    assert(Multimodal.wavSamples(wav).toSeq == Seq(1L, 2, 3, 4, 5, 6))
   }
 
   test("BMP round-trip: encode → decode matches hand-computed channel means") {
