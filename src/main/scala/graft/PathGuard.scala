@@ -22,8 +22,8 @@ object PathGuard {
     * `gen=1.bak` — or an overflowing all-digit name — fails with a
     * message naming itself instead of a bare NumberFormatException with
     * no path context. Non-gen children are ignored; a missing dir is
-    * empty. Shared by every generation-per-batch store (text/media
-    * signature deltas, the ANN index lists). */
+    * empty. Shared by every generation-per-batch store (the text and
+    * media signature deltas). */
   def generationDirs(spark: SparkSession, dir: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())

@@ -66,12 +66,6 @@ object TextAnalysis {
     round(greatest(lit(0.0), least(score, lit(1.0))), 6)
   }
 
-  /** Order-insensitive content fingerprint: 64-bit hash of the sorted
-    * distinct token set. Equal for word-order permutations and repeated
-    * tokens — the cheap "same bag of words" dedup key. */
-  def contentFingerprint(text: Column): Column =
-    xxhash64(concat_ws(" ", array_sort(array_distinct(split(text, "\\s+")))))
-
   /** THE cross-engine 32-bit md5 bucket code: first 8 hex chars of
     * md5(x) as a long — computable identically in other engines (DuckDB:
     * `('0x'||substr(md5(x),1,8))::BIGINT`), unlike xxhash64. Every
@@ -88,8 +82,8 @@ object TextAnalysis {
 
   /** Order-SENSITIVE rolling document fingerprint: polynomial hash
     * acc = (acc*31 + code) mod 1e9+7 over per-token md5-derived codes.
-    * Complements contentFingerprint (order-insensitive): two documents
-    * with the same words in different order collide there but not here. */
+    * Two documents with the same words in different order get different
+    * fingerprints. */
   def rollingFingerprint(text: Column): Column =
     aggregate(
       transform(split(text, " "), t => md5Bucket(t) % 65536L),
@@ -125,18 +119,5 @@ object TextAnalysis {
       .withColumn("idf", log((lit(n.toDouble) + 1) / (col("df") + 1)) + 1)
       .withColumn("tfidf", col("tf") * col("idf"))
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("idf"), col("tfidf"))
-  }
-
-  /** Rolling k-shingle min-hash fingerprint: hash every k-token shingle,
-    * keep the minimum — one deterministic minhash band, the building block
-    * of near-dup LSH (see graft.operators.ScalableDedup). */
-  def shingleFingerprint(text: Column, k: Int = 3): Column = {
-    val ws = split(text, "\\s+")
-    val shingles = transform(
-      sequence(lit(1), greatest(size(ws) - (k - 1), lit(1))),
-      // try_element_at: short documents produce one partial shingle instead
-      // of an ANSI out-of-bounds error (concat_ws skips the nulls)
-      i => concat_ws(" ", (0 until k).map(j => try_element_at(ws, i + j)): _*))
-    array_min(transform(shingles, s => xxhash64(s)))
   }
 }

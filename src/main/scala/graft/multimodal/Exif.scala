@@ -55,15 +55,9 @@ object Exif {
       exposure: Option[(Long, Long)])
 
   /** One GPS coordinate: hemisphere ref + the three RATIONALs (degrees,
-    * minutes, seconds) exactly as stored — `toDegrees` folds them. */
+    * minutes, seconds) exactly as stored. */
   case class GpsCoord(ref: String, degNum: Long, degDen: Long,
-      minNum: Long, minDen: Long, secNum: Long, secDen: Long) {
-    def toDegrees: Double = {
-      val mag = degNum.toDouble / degDen + minNum.toDouble / minDen / 60.0 +
-        secNum.toDouble / secDen / 3600.0
-      if (ref == "S" || ref == "W") -mag else mag
-    }
-  }
+      minNum: Long, minDen: Long, secNum: Long, secDen: Long)
 
   /** IFD0 + the pointed-to Exif sub-IFD and GPS IFD (each None when the
     * pointer tag is absent). */

@@ -2,11 +2,10 @@ package graft.multimodal
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Multimodal column plumbing: media (image/audio/video) as opaque binary
-  * columns with typed metadata, plus resize / frame-sample operators and
+  * columns with typed metadata, plus resize operators and
   * perceptual near-dup signatures (image aHash, audio energy
   * fingerprint, video frame-hash vote) feeding the same banded-hamming
   * join as text dedup.
@@ -1160,15 +1159,6 @@ object Multimodal {
   private def mp4FrameHash(bytes: Array[Byte], s: (Long, Int)): Long =
     jpegAHash(java.util.Arrays.copyOfRange(bytes, s._1.toInt, s._1.toInt + s._2))
 
-  /** Majority-vote fingerprint of an MJPEG MP4 (the [[aviFingerprint]]
-    * twin). Throws on non-MJPEG codecs — callers route via
-    * [[mp4MjpegFrames]] first. */
-  def mp4MjpegFingerprint(bytes: Array[Byte]): Long = {
-    val samples = mp4MjpegFrames(bytes).getOrElse(throw new IllegalArgumentException(
-      "mp4MjpegFingerprint: payload has no decodable MJPEG video track"))
-    majorityVote(sampleNine(samples.length).map(i => mp4FrameHash(bytes, samples(i))))
-  }
-
   /** Per-video fingerprints for the decodable video rows of a media
     * table: (media_id, sig) — the video signature store, exactly like
     * [[imageAHashes]] and [[audioHashes]]. AVI rows always fingerprint;
@@ -1193,23 +1183,10 @@ object Multimodal {
   def videoNearDups(media: Dataset[MediaRow], maxHamming: Int = 3): DataFrame =
     mediaNearDupsFromSigs(videoHashes(media).persist(), maxHamming)
 
-  /** Frame sampling: slice the payload into fixed-size frames with a
-    * stride, as an array<binary> column — pure Column expressions, no
-    * decode needed for container formats with fixed frame layout. */
-  def frameSample(media: org.apache.spark.sql.Column, frameSize: Int,
-      stride: Int): org.apache.spark.sql.Column = {
-    // number of full frames: floor((len - frameSize) / stride) + 1, if any
-    val nFrames = (floor((length(media) - frameSize).cast("double") / stride) + 1).cast("int")
-    when(length(media) >= frameSize,
-      transform(sequence(lit(1), nFrames),
-        i => substr(media, (i - lit(1)) * stride + 1, lit(frameSize))))
-      .otherwise(array().cast("array<binary>"))
-  }
-
   /** REAL spatial downscale of a 24-bit BMP: box-filter average of the
     * source pixels mapping to each target pixel, re-encoded bottom-up.
-    * Target dimensions follow the same cap rule as [[resizeMeta]]
-    * (`ceil(dim * maxSide / maxDim)`, aspect preserved); payloads
+    * Target dimensions are `ceil(dim * maxSide / maxDim)` (aspect
+    * preserved); payloads
     * already within `maxSide` return unchanged. A pure byte→byte
     * function, so it runs inside a per-row map — no shuffle, scales with
     * partitions. */
@@ -1227,14 +1204,4 @@ object Multimodal {
     })
   }
 
-  /** Resize metadata for a planned downscale — the Column-only form for
-    * metadata-bearing tables; the actual pixel transform for BMP rows is
-    * [[bmpResize]] (other formats would plug a codec into the same
-    * shape). */
-  def resizeMeta(df: DataFrame, maxSide: Int): DataFrame = {
-    val scale = least(lit(1.0),
-      lit(maxSide.toDouble) / greatest(col("width"), col("height")))
-    df.withColumn("out_width", ceil(col("width") * scale).cast("int"))
-      .withColumn("out_height", ceil(col("height") * scale).cast("int"))
-  }
 }

@@ -100,54 +100,37 @@ object Ann {
     * centroid, `partitionBy("list_id")`, so a probe batch's scan prunes
     * to the probed lists' partitions and never touches the rest.
     *
-    * `fitFraction` < 1 fits the clustering on a seeded sample — at
-    * 100 TB the KMeans fit must not scan the corpus; assignment of ALL
-    * rows is still one broadcast-model map pass.
-    *
     * REBUILDING in place clears the whole lists tree (old assignments
     * were routed by the centroids being replaced), so `corpus` must be
     * the FULL data the rebuilt index should serve. */
   def buildIvfIndex(spark: SparkSession, corpus: DataFrame, idCol: String,
-      vecCol: String, dir: String, nlist: Int = 16,
-      fitFraction: Double = 1.0, seed: Long = 42L): Unit = {
+      vecCol: String, dir: String, nlist: Int = 16, seed: Long = 42L): Unit = {
     require(nlist > 0, s"nlist must be positive, got $nlist")
-    require(fitFraction > 0 && fitFraction <= 1,
-      s"fitFraction must be in (0,1], got $fitFraction")
     graft.PathGuard.requireDisjoint(spark, corpus.inputFiles.toSeq, dir,
       "index input", hint = "Build the index outside the corpus directory.")
     val feats = kmeansFeats(corpus, idCol, vecCol)
     require(feats.head(1).nonEmpty, "cannot build an IVF index on an empty corpus")
-    val fitOn =
-      if (fitFraction >= 1.0) feats
-      else {
-        val s = feats.sample(withReplacement = false, fitFraction, seed)
-        // a sample that misses every row cannot seed the clustering
-        if (s.head(1).isEmpty) feats else s
-      }
     val model = new KMeans().setK(nlist).setSeed(seed)
-      .setFeaturesCol("fv").fit(fitOn)
-    // generation layout, like the text/media signature stores: the
-    // build is gen=0. Readers discover (gen, list_id) partitions and
-    // prune on list_id alone.
+      .setFeaturesCol("fv").fit(feats)
     // REBUILD ordering: clear the old lists tree BEFORE the new
     // centroids commit — every crash state is then loud ("no IVF
     // index" / unreadable lists), never new centroids silently routing
-    // over generations assigned by the old ones. (delete on a missing
-    // path is a no-op, no exists probe needed)
+    // over lists assigned by the old ones. (delete on a missing path is
+    // a no-op, no exists probe needed)
     val listsPath = new org.apache.hadoop.fs.Path(s"$dir/lists")
     val listsFs = listsPath.getFileSystem(spark.sessionState.newHadoopConf())
     // delete can return false WITHOUT throwing (e.g. a non-removable
     // child): a failed clear must abort before the centroid commit, or
     // the new centroids would silently route over old-lineage lists
     require(listsFs.delete(listsPath, true) || !listsFs.exists(listsPath),
-      s"failed to clear $listsPath for rebuild — old generations would " +
+      s"failed to clear $listsPath for rebuild — old lists would " +
         "survive under the new centroids.")
     centroidTable(spark, model)
       .write.mode("overwrite").parquet(s"$dir/centroids")
     model.transform(feats)
       .select(col("nb"), col("vb"), col("prediction").as("list_id"))
       .write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"$dir/lists/gen=0")
+      .parquet(s"$dir/lists")
   }
 
   /** Per-JVM memo of each index directory's vector dimension — the
@@ -155,7 +138,7 @@ object Ann {
     * (~100 ms of pure dispatch). Metadata only, same schema-stable-
     * within-one-JVM contract as [[graft.Tables]]'s footer memo; a
     * rebuild that changes the dimension mid-JVM uses a fresh directory
-    * (the judged index root is write-once behind a done-marker). */
+    * (the judged index is write-once behind [[LayoutLock]]'s marker). */
   private val indexDimCache =
     new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
@@ -208,26 +191,6 @@ object Ann {
     ivfRank(probeLists, lists, k)
   }
 
-  /** Per-JVM once-only index root for the judged ANN query — the same
-    * write-once marker protocol as Relational's layout copies: temp
-    * root per process, dataset-path tag, marker committed AFTER the
-    * build so a crashed build rebuilds instead of serving a partial
-    * index. */
-  private lazy val judgedIndexRoot: java.io.File =
-    java.nio.file.Files.createTempDirectory("graft_ann_index").toFile
-
-  private def indexOnce(name: String, d: String)(build: String => Unit): String = {
-    val dir = new java.io.File(judgedIndexRoot,
-      s"${name}_${java.lang.Integer.toHexString(d.hashCode)}")
-    val done = new java.io.File(dir, "_graft_index_done")
-    if (!done.exists()) {
-      build(dir.toString)
-      done.createNewFile()
-      ()
-    }
-    dir.toString
-  }
-
   /** #212 judged EXACT-PROBE IVF serving (round-14) — the ANN serving
     * stack under the oracle gate via PROBE-EXHAUSTION INVISIBILITY:
     * with `nprobe = nlist` every list is routed, so [[ivfTopKIndexed]]
@@ -243,7 +206,7 @@ object Ann {
     * with id tie-break; AnnSpec separately pins that partial-probe
     * recall against this same exact answer is monotone in nprobe. */
   def annIvfExact(s: SparkSession, d: String): DataFrame = {
-    val dir = indexOnce("ivf_exact", d) { out =>
+    val dir = LayoutLock.once("ivf_exact", d) { out =>
       buildIvfIndex(s, graft.Tables.embeddings(s, d), "vec_id", "embedding",
         out, nlist = 8)
     }

@@ -204,12 +204,6 @@ object DedupClusters {
     (labels, iter)
   }
 
-  /** One keeper (min id) per duplicate cluster; ids not in any pair are
-    * implicitly their own keeper and are not returned. */
-  def keepers(components: DataFrame): DataFrame =
-    components.groupBy(col("comp"))
-      .agg(min(col("id")).as("keeper"), count(lit(1)).as("cluster_size"))
-
   /** Full pipeline: ids + candidate pairs → (id, keeper) replacement map
     * for every non-keeper duplicate.
     *

@@ -40,17 +40,4 @@ object Features {
         sqrt(avg(col(s"${prefix}_delta") * col(s"${prefix}_delta")).over(frame)))
   }
 
-  /** Per-(key, fixed time bucket) feature table: the batch form of a
-    * tumbling-window feature job, one partial+final aggregate. `bucket`
-    * is a date_trunc unit ("hour", "day", ...). */
-  def bucketed(df: DataFrame, key: Column, ts: Column, value: Column,
-      bucket: String): DataFrame =
-    df.groupBy(key.as("series_key"),
-        date_trunc(bucket, ts).cast("timestamp_ntz").as("bucket_start"))
-      .agg(
-        count(value).as("cnt"),
-        avg(value).as("mean"),
-        stddev_samp(value).as("std"),
-        min(value).as("min"),
-        max(value).as("max"))
 }

@@ -64,31 +64,6 @@ object GlobalRank {
     n
   }
 
-  /** Sampled ascending split points for a STRING `primaryCol` (strings
-    * have no `percentile_approx`, so the sample is explicit): bottom-k of
-    * the DISTINCT values by hash — a uniform sample of the value space —
-    * then every n-th of the sorted sample. ONE driver action, and a
-    * distributed top-k one at that (per-partition partial bottom-k, tiny
-    * merge): nothing here scans or sorts the full data on one task. The
-    * distinct-first step means a heavy-hitter value cannot flood the
-    * sample — and rank ties share a bucket anyway, so sampling the
-    * VALUE space (not the row space) is the balance that matters for the
-    * per-bucket window. Split quality only affects load balance, never
-    * rank values (any ascending array is a correct bucketing). */
-  def stringSplitPoints(df: DataFrame, primaryCol: String, buckets: Int,
-      sampleSize: Int = 4096): Array[String] = {
-    val sample = df.select(col(primaryCol).cast("string").as("_v"))
-      .where(col("_v").isNotNull)
-      .distinct()
-      .orderBy(xxhash64(col("_v")), col("_v")) // deterministic bottom-k
-      .limit(sampleSize)
-      .collect().map(_.getString(0)).sorted
-    if (sample.isEmpty) Array.empty[String]
-    else (1 until buckets)
-      .map(i => sample(math.min(sample.length - 1, (i.toLong * sample.length / buckets).toInt)))
-      .distinct.sorted.toArray
-  }
-
   /** Deterministic monotone bucket id for `primary` given an ascending
     * array-literal of split points: the number of split points strictly on
     * the "sorts-before" side of the value. Equal values always map to
@@ -158,42 +133,21 @@ object GlobalRank {
       splits.map(sp => math.min(b, sp.length + 1)).getOrElse(b), weight)
   }
 
-  /** [[withRank]] for a STRING primary column. The numeric path's lazy
-    * `percentile_approx` sampling doesn't exist for strings, so splits
-    * come from the caller — any ascending array is correct (balance-only
-    * concern); [[stringSplitPoints]] samples them in one distributed
-    * top-k action. Empty splits degrade to a single bucket (correct,
-    * serial — only acceptable for bounded inputs).
+  /** [[withRank]] for a STRING primary column, with LAZY sampled splits
+    * — the string analogue of the numeric path's `percentile_approx`
+    * subtree, ZERO driver actions: bottom-k of the distinct values by
+    * hash (a uniform value-space sample a heavy-hitter key cannot flood;
+    * the limit is a distributed top-k) collapses to a sorted array in a
+    * 1-row aggregate, broadcast onto every row by a cross join (computed
+    * once — the exchange is reused across the count and rank branches,
+    * pinned in GlobalRankSpec), and the every-n-th split points are read
+    * from the array inside the bucket expression. Split quality only
+    * moves load balance, never rank values.
     *
     * Null keys fail LOUDLY: a null never compares, so it would silently
     * land in bucket 0 — which under `desc` holds the TOP values, where
     * the window's nulls-last order would assign it a plausible-looking
     * but wrong global rank. */
-  def withRankOnStrings(df: DataFrame, primaryCol: String, desc: Boolean,
-      sortCols: Seq[Column], out: String, splits: Array[String]): DataFrame = {
-    val bC = fresh(df, "_b")
-    val bucket =
-      if (splits.isEmpty) lit(0)
-      else bucketExprOf(col(primaryCol), array(splits.map(lit(_)): _*), desc)
-    val bucketed = df.withColumn(bC,
-      when(col(primaryCol).isNull, raise_error(lit(
-          s"withRankOnStrings: null in '$primaryCol' (null keys have no " +
-            "defined rank position; filter or coalesce them first)")))
-        .otherwise(bucket))
-    rankBucketed(bucketed, bC, sortCols, out, splits.length + 1)
-  }
-
-  /** [[withRankOnStrings]] with LAZY sampled splits — the string analogue
-    * of the numeric path's `percentile_approx` subtree, ZERO driver
-    * actions: bottom-k of the distinct values by hash (a uniform
-    * value-space sample a heavy-hitter key cannot flood; the limit is a
-    * distributed top-k) collapses to a sorted array in a 1-row aggregate,
-    * broadcast onto every row by a cross join (computed once — the
-    * exchange is reused across the count and rank branches, pinned in
-    * GlobalRankSpec for the numeric twin), and the every-n-th split
-    * points are read from the array inside the bucket expression. Split
-    * quality only moves load balance, never rank values. Null keys fail
-    * loudly, as in [[withRankOnStrings]]. */
   def withRankStringSampled(df: DataFrame, primaryCol: String, desc: Boolean,
       sortCols: Seq[Column], out: String, buckets: Int = 0,
       sampleSize: Int = 4096): DataFrame =
@@ -223,9 +177,9 @@ object GlobalRank {
       .limit(sampleSize)
       .agg(sort_array(collect_list(col(spC))).as(spC))
     val arr = col(spC)
-    // positions 1-based: min(len-1, i*len/b) + 1, i = 1..b-1 (same rule as
-    // stringSplitPoints); the greatest() keeps element_at legal on the
-    // empty-sample row, whose branch the size()=0 guard never selects
+    // positions 1-based: min(len-1, i*len/b) + 1, i = 1..b-1; the
+    // greatest() keeps element_at legal on the empty-sample row, whose
+    // branch the size()=0 guard never selects
     val splitArr = array_distinct(transform(sequence(lit(1), lit(b - 1)),
       i => element_at(arr,
         greatest(lit(1), least(size(arr),

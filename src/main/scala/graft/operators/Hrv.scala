@@ -567,43 +567,9 @@ object Hrv {
         col("value_resampled"))
   }
 
-  /** LOCF grid resampling via the native as-of join (same contract as
-    * [[resample]]): the tick grid probes the samples with a backward as-of
-    * per series. The union+window form shuffles ticks AND samples into one
-    * sorted window per series; this form merges the two sorted sides in a
-    * single pass per partition — the shape to prefer when the grid is much
-    * smaller than the series (coarse steps over dense signals, the
-    * reference's downsampling direction). Tie semantics match [[resample]]:
-    * time is (instant, value) so an exact-timestamp duplicate carries the
-    * larger value; null-valued samples are skipped like `last(ignoreNulls)`.
-    */
-  def resampleAsof(df: DataFrame, key: Column, ts: Column, value: Column,
-      stepSeconds: Long): DataFrame = {
-    val micros = stepSeconds * 1000000L
-    val ticks = df.groupBy(key.as("series_key"))
-      .agg(min(unix_micros(ts)).as("t0"), max(unix_micros(ts)).as("t1"))
-      .select(col("series_key"),
-        explode(sequence(col("t0"), col("t1"), lit(micros))).as("tick_tm"))
-      // a tick accepts any sample at or before its instant, so its probe
-      // must sort at-or-after every same-instant sample value; NaN is
-      // Spark's ordering maximum for doubles (above +Infinity, equal to
-      // itself), so even non-finite samples are consumed inclusively
-      .withColumn("pt", struct(col("tick_tm").as("tm"),
-        lit(Double.NaN).as("v")))
-    val samples = df
-      .filter(value.isNotNull)
-      .select(key.as("series_key"), unix_micros(ts).as("sample_tm"),
-        value.cast("double").as("sample_v"))
-      .withColumn("st", struct(col("sample_tm").as("tm"), col("sample_v").as("v")))
-    graft.plans.AsofJoin(ticks, samples, Seq("series_key"), "pt", "st")
-      .select(ticks("series_key"),
-        timestamp_micros(col("tick_tm")).cast("timestamp_ntz").as("ts"),
-        col("sample_v").as("value_resampled"))
-  }
-
   /** LINEAR-interpolation resampling to a uniform grid — the classic
     * pre-step for FFT-style spectral analysis of irregular RR series
-    * (where [[resample]]/[[resampleAsof]] carry the last observation,
+    * (where [[resample]] carries the last observation,
     * this interpolates between the bracketing samples). Each tick runs
     * one BACKWARD and one FORWARD native sorted-merge as-of pass
     * against the samples ([[graft.plans.AsofJoin]] — two single-pass

@@ -15,11 +15,11 @@ import graft.functions.CosineSimilarityExpr.cosine_sim
   * Scale notes: exact dedup is a hash group-by (shuffle on the content
   * hash — uniform by construction, no skew). The brute-force cosine and
   * Jaccard pair scans keep the small probe side broadcast so the big side
-  * streams once; the 100 TB upgrade path (MinHash-LSH banding for Jaccard,
-  * random-hyperplane bucketing for cosine) replaces the all-pairs join
-  * with an equi-join on bucket ids — see graft.operators.ScalableDedup
-  * (unjudged; LSH is randomized so it cannot hash-match a deterministic
-  * oracle).
+  * streams once; the 100 TB upgrade path for Jaccard (MinHash-LSH
+  * banding) replaces the all-pairs join with an equi-join on bucket ids
+  * — see graft.operators.ScalableDedup. Its hash functions are pinned,
+  * so the banding is deterministic and judged: `dedup_minhash_lsh` and
+  * `llm_lsh_append` run it against a DuckDB replay of the same bands.
   */
 object LlmOps {
 

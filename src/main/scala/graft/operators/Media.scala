@@ -423,15 +423,6 @@ object Media {
         col("m._7").as("lon_centisec"))
       .orderBy(col("p_partkey"))
 
-  /** Per-process root for the sniff-route media layout (the same
-    * once-per-JVM discipline as Relational's layoutOnce). */
-  private lazy val mediaLayoutRoot: java.io.File =
-    java.nio.file.Files.createTempDirectory("graft_media_layout").toFile
-
-  private def mediaLayoutOnce(name: String, d: String)(write: String => Unit): String =
-    LayoutLock.once(new java.io.File(mediaLayoutRoot,
-      s"${name}_${java.lang.Integer.toHexString(d.hashCode)}"), mkdirs = true)(write)
-
   private val featureBmp = udf { (bytes: Array[Byte]) =>
     Multimodal.bmpGrayPixels(bytes).map(_.toLong).sum
   }
@@ -464,7 +455,7 @@ object Media {
     * the source level for the length guard; the sniff reads the row's
     * binary column) — embarrassingly parallel at 100 TB. */
   def mmSniffRoute(s: SparkSession, d: String): DataFrame = {
-    val dir = mediaLayoutOnce("media_sniff", d) { out =>
+    val dir = LayoutLock.once("media_sniff", d, mkdirs = true) { out =>
       val lieExt = Map("bmp" -> "png", "png" -> "wav", "wav" -> "jpg", "jpeg" -> "bmp")
       (0 to 160).foreach { k =>
         val (fmt, bytes) = (k % 4) match {
@@ -532,7 +523,7 @@ object Media {
     * wrong key, or a dropped shard moves the hash. Scale: shards are
     * the parallelism unit exactly as training loaders consume them. */
   def sourceTarWebdataset(s: SparkSession, d: String): DataFrame = {
-    val dir = mediaLayoutOnce("wds_shards", d) { out =>
+    val dir = LayoutLock.once("wds_shards", d, mkdirs = true) { out =>
       val entries = Tables.part(s, d)
         .filter(col("p_partkey") <= 120)
         .select(col("p_partkey"))
@@ -585,7 +576,7 @@ object Media {
     * ordinary rows and silently polluted samples. Scale: identical to
     * [[sourceTarWebdataset]] — shards are the parallelism unit. */
   def sourceTarPax(s: SparkSession, d: String): DataFrame = {
-    val dir = mediaLayoutOnce("wds_pax", d) { out =>
+    val dir = LayoutLock.once("wds_pax", d, mkdirs = true) { out =>
       val key0 = format_string(
         "webdataset/shards/split-%d/category-%d/" + ("x" * 60) + "-%09d",
         col("p_partkey") % 4, col("p_partkey") % 7, col("p_partkey"))
@@ -648,7 +639,7 @@ object Media {
     * directory-driven seeks — media zips ship many archives by
     * construction. */
   def mmZipIngest(s: SparkSession, d: String): DataFrame = {
-    val dir = mediaLayoutOnce("zip_media", d) { out =>
+    val dir = LayoutLock.once("zip_media", d, mkdirs = true) { out =>
       val entries = Tables.part(s, d)
         .filter(col("p_partkey") <= 140)
         .select(format_string("blob-%04d.bin", col("p_partkey")).as("name"),

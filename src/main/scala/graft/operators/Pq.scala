@@ -10,7 +10,7 @@ import graft.functions.VectorFunctions
 import graft.functions.CosineSimilarityExpr.cosine_sim
 
 /** Product quantization for memory-bound similarity serving — the
-  * compression tier of the ANN family ([[Ann]]: brute force → LSH → IVF;
+  * compression tier of the ANN family ([[Ann]]: brute force → IVF;
   * this: PQ codes + asymmetric distance + exact rerank), per the public
   * design of Jégou, Douze & Schmid, "Product Quantization for Nearest
   * Neighbor Search", IEEE TPAMI 33(1), 2011.

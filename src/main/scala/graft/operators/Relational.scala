@@ -47,7 +47,7 @@ object Relational {
     * the marker file commits AFTER the write so a crashed write
     * rewrites instead of serving partial files. */
   def scanRangePruned(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("lineitem", d) { out =>
+    val dir = LayoutLock.once("lineitem", d) { out =>
       graft.sources.Layout.saveRangeSorted(
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity")),
         out, numFiles = 8, Seq("l_orderkey"))
@@ -74,7 +74,7 @@ object Relational {
     * gets ONE file instead of one per upstream task (the small-files
     * guard that matters at a million partitions). */
   def scanPartitionPruned(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("events_bydate", d) { out =>
+    val dir = LayoutLock.once("events_bydate", d) { out =>
       graft.sources.Ingest.writePartitioned(
         Tables.events(s, d)
           .select(col("ts"), col("event_type"), col("value"))
@@ -102,7 +102,7 @@ object Relational {
     * the re-layout must be semantically INVISIBLE. Same per-JVM
     * lifetime/marker protocol as [[scanRangePruned]]. */
   def scanZorderPruned(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("events_zorder", d) { out =>
+    val dir = LayoutLock.once("events_zorder", d) { out =>
       graft.sources.Layout.saveZOrdered(
         Tables.events(s, d)
           .select(col("user_id"), to_date(col("ts")).as("day"),
@@ -136,7 +136,7 @@ object Relational {
     * not in the aggregate. */
   def sourceCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val dir = layoutOnce("lineitem_csv", d) { out =>
+    val dir = LayoutLock.once("lineitem_csv", d) { out =>
       graft.sources.Ingest.writeCsv(
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
           col("l_returnflag"), col("l_quantity"), col("l_extendedprice"),
@@ -170,7 +170,7 @@ object Relational {
     * per-lang hash sum. Same per-JVM lifetime/marker protocol. */
   def sourceJsonRoundtrip(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val dir = layoutOnce("documents_json", d) { out =>
+    val dir = LayoutLock.once("documents_json", d) { out =>
       graft.sources.Ingest.writeJson(
         Tables.documents(s, d).select(col("doc_id"), col("lang"),
           col("source"), col("text"), col("n_chars")),
@@ -202,7 +202,7 @@ object Relational {
     * AND that hive partitioning composes with a second format. Same
     * per-JVM lifetime/marker protocol as the other layouts. */
   def sourceOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("orders_orc", d) { out =>
+    val dir = LayoutLock.once("orders_orc", d) { out =>
       graft.sources.Ingest.writeOrcPartitioned(
         Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
@@ -246,7 +246,7 @@ object Relational {
       StructField("o_orderdate", TimestampNTZType),
       StructField("o_bucket", IntegerType),
       StructField("o_big", BooleanType)))
-    val dir = layoutOnce("orders_avro", d) { out =>
+    val dir = LayoutLock.once("orders_avro", d) { out =>
       graft.sources.Avro.writeAvro(
         Tables.orders(s, d).select(
           col("o_orderkey"),
@@ -292,7 +292,7 @@ object Relational {
       StructField("o_custkey", LongType),
       StructField("o_orderstatus", StringType),
       StructField("o_totalprice", DoubleType)))
-    val dir = layoutOnce("orders_avro_q", d) { out =>
+    val dir = LayoutLock.once("orders_avro_q", d) { out =>
       graft.sources.Avro.writeAvro(
         Tables.orders(s, d).select(
           col("o_orderkey"),
@@ -343,7 +343,7 @@ object Relational {
       StructField("o_custkey", LongType),
       StructField("o_orderstatus", StringType),
       StructField("o_totalprice", DoubleType)))
-    val dir = layoutOnce("orders_avro_one", d) { out =>
+    val dir = LayoutLock.once("orders_avro_one", d) { out =>
       graft.sources.Avro.writeAvro(
         Tables.orders(s, d).select(
           col("o_orderkey"),
@@ -417,7 +417,7 @@ object Relational {
     * split unit; per-record work is embarrassingly parallel and the
     * only shuffle is the bounded ordered output. */
   def sourceWarcExtract(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl", d) { out =>
+    val dir = LayoutLock.once("warc_crawl", d) { out =>
       val info = Seq(("warcinfo", null: String,
         "2024-01-01T00:00:00Z", "<urn:uuid:00000000-0000-0000-0000-999999999999>",
         "application/warc-fields",
@@ -492,7 +492,7 @@ object Relational {
     * [[sourceWarcExtract]] — per-record work is embarrassingly
     * parallel, files are the split unit. */
   def sourceWarcChunked(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl_chunked", d) { out =>
+    val dir = LayoutLock.once("warc_crawl_chunked", d) { out =>
       val recs = Tables.part(s, d)
         .filter(col("p_partkey") <= 150)
         .select(makeChunkedWarcRecord(col("p_partkey")).as("r"))
@@ -551,7 +551,7 @@ object Relational {
     * layering order, or a truncated stream moves body_len/text and
     * fails the hash. Same scale shape as the sibling crawl rows. */
   def sourceWarcEncoded(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl_gz", d) { out =>
+    val dir = LayoutLock.once("warc_crawl_gz", d) { out =>
       val recs = Tables.part(s, d)
         .filter(col("p_partkey") <= 150)
         .select(makeEncodedWarcRecord(col("p_partkey")).as("r"))
@@ -643,7 +643,7 @@ object Relational {
     * the decode is the same single pass a blind reader does — charset
     * correctness is free at 100 TB. */
   def sourceWarcCharset(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl_charset", d) { out =>
+    val dir = LayoutLock.once("warc_crawl_charset", d) { out =>
       val recs = Tables.part(s, d)
         .filter(col("p_partkey") <= 150)
         .select(makeCharsetWarcRecord(col("p_partkey")).as("r"))
@@ -728,7 +728,7 @@ object Relational {
     * the stored-once side; this is exactly the shuffle a revisit-
     * aware corpus rebuild pays, and the only one. */
   def sourceWarcRevisit(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl_revisit", d) { out =>
+    val dir = LayoutLock.once("warc_crawl_revisit", d) { out =>
       val recs = Tables.part(s, d)
         .filter(col("p_partkey") <= 300)
         .select(makeRevisitWarcRecord(col("p_partkey")).as("r"))
@@ -834,7 +834,7 @@ object Relational {
     * it — unbounded chasing is a DoS vector, and loops surface as
     * flags, not infinite work. */
   def sourceWarcRedirect(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl_redirect", d) { out =>
+    val dir = LayoutLock.once("warc_crawl_redirect", d) { out =>
       val recs = Tables.part(s, d)
         .filter(col("p_partkey") <= 300)
         .select(makeRedirectWarcRecord(col("p_partkey")).as("r"))
@@ -942,7 +942,7 @@ object Relational {
     * hash. Scale shape: identical to [[sourceWarcCharset]] — the
     * sentinel path costs one map lookup, nothing more. */
   def sourceWarcCharsetUnknown(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl_charset_unknown", d) { out =>
+    val dir = LayoutLock.once("warc_crawl_charset_unknown", d) { out =>
       val recs = Tables.part(s, d)
         .filter(col("p_partkey") <= 150)
         .select(makeUnknownCharsetWarcRecord(col("p_partkey")).as("r"))
@@ -1069,7 +1069,7 @@ object Relational {
     * members carry no sync marker, so the index the WRITER emits for
     * free is what makes a 40 GB container fan out instead of straggle. */
   def sourceWarcSplit(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl_split", d) { out =>
+    val dir = LayoutLock.once("warc_crawl_split", d) { out =>
       val recs = Tables.part(s, d)
         .filter(col("p_partkey") <= 150)
         .select(makeWarcRecord(col("p_partkey")).as("r"))
@@ -1108,7 +1108,7 @@ object Relational {
     * contain broken containers; one must cost one quarantine row,
     * never the job. */
   def sourceWarcQuarantine(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("warc_crawl_q", d) { out =>
+    val dir = LayoutLock.once("warc_crawl_q", d) { out =>
       val recs = Tables.part(s, d)
         .filter(col("p_partkey") <= 100)
         .select(makeWarcRecord(col("p_partkey")).as("r"))
@@ -1138,28 +1138,6 @@ object Relational {
       .orderBy(col("status"))
   }
 
-  /** Per-process root for [[scanRangePruned]]'s re-layouts: created
-    * lazily once per JVM, so concurrent processes write disjoint
-    * directories and no marker file outlives the process that wrote
-    * the data it marks. */
-  private lazy val rangeLayoutRoot: java.io.File =
-    java.nio.file.Files.createTempDirectory("graft_range_layout").toFile
-
-  /** The write-once layout protocol shared by every re-layout query
-    * (range-sort, date-partition, z-order, CSV/JSON/ORC round-trips):
-    * per-JVM temp root + dataset-path tag, marker file committed AFTER
-    * the write so a crashed write rewrites instead of serving partial
-    * files. Returns the layout directory. */
-  private def layoutOnce(name: String, d: String)(write: String => Unit): String =
-    LayoutLock.once(new java.io.File(rangeLayoutRoot, s"${name}_${pathTag(d)}"))(write)
-
-  /** Dataset-path tag naming the per-JVM layout copies of
-    * [[scanRangePruned]] and [[joinBucketed]] — a PATH hash, so repeat
-    * runs inside one JVM reuse the layout and distinct sf dirs get
-    * distinct copies. */
-  private def pathTag(d: String): String =
-    java.lang.Integer.toHexString(d.hashCode)
-
   /** #188 SCHEMA-EVOLUTION read — the append-only pipeline reality that
     * a column added mid-corpus must not fork the reader: generation 1
     * is written WITHOUT `o_orderpriority`, generation 2 WITH it, and
@@ -1171,7 +1149,7 @@ object Relational {
     * standard additive-evolution contract of a parquet data lake (the
     * footer union is per-file metadata work, not a data rewrite). */
   def sourceSchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("orders_evo", d) { out =>
+    val dir = LayoutLock.once("orders_evo", d) { out =>
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -1401,7 +1379,7 @@ object Relational {
     * oracle recomputes the v2 state directly from orders, so a row
     * lost to (or leaked past) the partition boundary moves the hash. */
   def sourceScd2Pruned(s: SparkSession, d: String): DataFrame = {
-    val dir = layoutOnce("scd2_dim", d) { out =>
+    val dir = LayoutLock.once("scd2_dim", d) { out =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"))
       val delta2 = base.filter(col("o_orderkey") % 7 === 0)
@@ -1506,8 +1484,8 @@ object Relational {
     * `hint("merge")` pins the sort-merge form the 100 TB plan takes
     * instead of letting tiny test data broadcast. */
   def joinBucketed(s: SparkSession, d: String): DataFrame = {
-    val ot = s"graft_bkt_orders_${pathTag(d)}"
-    val lt = s"graft_bkt_lineitem_${pathTag(d)}"
+    val ot = s"graft_bkt_orders_${LayoutLock.pathTag(d)}"
+    val lt = s"graft_bkt_lineitem_${LayoutLock.pathTag(d)}"
     // project to exactly the join/agg columns before the write — the
     // prepaid layout should carry only what downstream reads
     if (!s.catalog.tableExists(ot))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Salted equi-join for skewed keys.
@@ -18,34 +18,6 @@ import org.apache.spark.sql.functions._
   * results.
   */
 object SkewJoin {
-
-  /** Sketch-driven hot-key detection: probe each candidate key (usually
-    * the distinct keys of the SMALL join side) against a Count-Min
-    * sketch of the fact side's join key, returning the keys whose
-    * estimated fact-row count is ≥ `threshold` — the inputs to route
-    * through [[saltedInnerJoin]] while everything else takes the plain
-    * join.
-    *
-    * Why a sketch and not `fact.groupBy(key).count()`: the exact count
-    * is itself a full shuffle of the fact table keyed exactly like the
-    * join being protected — at 100 TB the diagnosis would cost as much
-    * as the disease. The CMS sketch is ONE map-side-combinable
-    * aggregate collapsing to 32 KB, broadcast into a codegen'd scalar
-    * probe over the candidates — no shuffle touches the fact table.
-    * CMS never undercounts, so no hot key is missed; a cold key's
-    * worst-case overcount (≤ 2N/w) costs only a needless salting. The
-    * sketch can also be yesterday's persisted `graft_cms_sketch` column
-    * (functions/CountMin), making detection free at plan time. */
-  def hotKeysBySketch(fact: DataFrame, factKey: String, candidates: DataFrame,
-      candidateKey: String, threshold: Long): DataFrame = {
-    val sk = fact.agg(
-      graft.functions.CountMin.cmsSketch(col(factKey)).as("_sk"))
-    candidates.select(col(candidateKey)).distinct()
-      .crossJoin(broadcast(sk))
-      .filter(graft.functions.CountMin.cmsEstimate(col("_sk"),
-        col(candidateKey)) >= threshold)
-      .select(col(candidateKey))
-  }
 
   def saltedInnerJoin(left: DataFrame, right: DataFrame, leftKey: String,
       rightKey: String, tiebreak: String, saltBuckets: Int): DataFrame = {

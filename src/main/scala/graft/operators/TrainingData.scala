@@ -1476,7 +1476,7 @@ object TrainingData {
   }
 
   /** #109 FULLY JUDGED MinHash-LSH near-dup dedup — the scale-path dedup
-    * with the oracle caveat closed: [[ScalableDedup.minhashBandedCandidates]]
+    * with the oracle caveat closed: [[ScalableDedup.minhashBandedCandidatesFromSigs]]
     * uses PINNED hash functions (one md5 per char-4-gram shingle → 32-bit
     * int, then 16 fixed (a·h+b) mod 2³¹−1 universal hashes — no seed, no
     * engine randomness, no floats), so DuckDB replays the identical

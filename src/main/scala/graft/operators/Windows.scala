@@ -95,9 +95,7 @@ object Windows {
     * inside the plan, ZERO driver actions, same shape as the numeric
     * path): no partition-less window, one bucket-id exchange. Ranks
     * depend on the WHOLE table; only the first 300 doc ids are
-    * emitted. Callers with domain-known splits use
-    * [[GlobalRank.withRankOnStrings]] + [[GlobalRank.stringSplitPoints]]
-    * instead. */
+    * emitted. */
   def winRankStringGlobal(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d)
       .select(col("doc_id"), md5(col("text")).as("_k"))

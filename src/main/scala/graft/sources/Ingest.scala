@@ -120,10 +120,7 @@ object Ingest {
     * single pathological object from OOMing an executor — the `length`
     * filter is PUSHED DOWN to the binaryFile source (length is one of
     * its pushdown columns), so oversize file CONTENT is never read
-    * into memory. The drop is not silent: [[oversizeFiles]] lists
-    * exactly the excluded files (path + length, content never read) so
-    * a load can count/record its quarantine side, mirroring
-    * [[partitionValid]]'s (valid, bad) contract for text rows. */
+    * into memory. */
   def readMediaDirectory(spark: SparkSession, dir: String,
       glob: String = "*", maxBytes: Long = 64L * 1024 * 1024): DataFrame = {
     val sniff = {
@@ -165,15 +162,4 @@ object Ingest {
         col("length").as("n_bytes"))
   }
 
-  /** The files [[readMediaDirectory]] EXCLUDES under the same `glob` and
-    * `maxBytes`: (path, n_bytes), content never read (pruned column +
-    * pushed length filter). Count or persist this alongside the media
-    * load so the oversize drop is recorded, not silent. */
-  def oversizeFiles(spark: SparkSession, dir: String,
-      glob: String = "*", maxBytes: Long = 64L * 1024 * 1024): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .filter(col("length") > maxBytes)
-      .select(col("path"), col("length").as("n_bytes"))
 }

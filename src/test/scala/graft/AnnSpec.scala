@@ -66,17 +66,12 @@ class AnnSpec extends SparkSpecBase {
         s"${listScan.metrics("numPartitions").value}")
     // REBUILDING in place clears the whole lists tree: rows routed by the
     // replaced centroids must not survive beside the new ones
-    emb.limit(3).write.parquet(s"$dir/lists/gen=1/list_id=0")
+    emb.limit(3).write.parquet(s"$dir/lists/list_id=99")
     Ann.buildIvfIndex(spark, emb, "vec_id", "embedding", dir, nlist = 8)
-    val genDirs = new java.io.File(s"$dir/lists").listFiles()
-      .map(_.getName).filter(_.startsWith("gen=")).toSeq
-    assert(genDirs == Seq("gen=0"), genDirs.mkString(","))
-    // a stray non-numeric gen dir names ITSELF in the failure, not a
-    // bare NumberFormatException with no path context
-    assert(new java.io.File(s"$dir/lists/gen=1.bak").mkdir())
-    val e = intercept[IllegalArgumentException](
-      PathGuard.generationDirs(spark, s"$dir/lists"))
-    assert(e.getMessage.contains("gen=1.bak"), e.getMessage)
+    val listDirs = new java.io.File(s"$dir/lists").listFiles()
+      .map(_.getName).filter(_.startsWith("list_id=")).sorted.toSeq
+    assert(listDirs == (0 until 8).map(i => s"list_id=$i"), listDirs.mkString(","))
+    assert(spark.read.parquet(s"$dir/lists").count() == emb.count())
   }
 
   test("indexed partial-probe recall is monotone in nprobe and exact at nprobe = nlist") {

@@ -92,9 +92,6 @@ class DedupClustersSpec extends SparkSpecBase {
 
   test("keepers and replacement map") {
     val pairs = Seq((10L, 20L), (20L, 30L), (40L, 50L)).toDF("a", "b")
-    val k = DedupClusters.keepers(DedupClusters.connectedComponents(pairs, "a", "b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(k == Set((10L, 10L, 3L), (40L, 40L, 2L)))
     val repl = DedupClusters.replacementMap(pairs, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(repl == Map(20L -> 10L, 30L -> 10L, 50L -> 40L))

@@ -111,8 +111,6 @@ class ExifSpec extends SparkSpecBase {
       val (lat, lon) = full.gps.get
       assert(lat == Exif.GpsCoord("N", 37, 1, 46, 1, 2997, 100))
       assert(lon == Exif.GpsCoord("W", 122, 1, 25, 1, 1234, 100))
-      assert(math.abs(lat.toDegrees - (37 + 46 / 60.0 + 29.97 / 3600.0)) < 1e-12)
-      assert(lon.toDegrees < 0, "W hemisphere must fold negative")
     }
   }
 

@@ -33,12 +33,4 @@ class FeaturesSpec extends SparkSpecBase {
     assert(math.abs(got(2).getDouble(0) - math.sqrt((9.0 + 4.0) / 2)) < 1e-12)
   }
 
-  test("bucketed features equal the tumbling aggregate") {
-    val got = Features.bucketed(ev, $"event_type", $"ts", $"value", "hour")
-    val want = SparkEntry.queries("stream_tumbling")(spark, sf())
-    val joined = want.join(got,
-      want("wstart") === got("bucket_start") && want("event_type") === got("series_key"))
-    assert(joined.count() == want.count())
-    assert(joined.filter(want("c") =!= got("cnt")).count() == 0)
-  }
 }

@@ -265,7 +265,7 @@ class HrvSpec extends SparkSpecBase {
     assert(single.length == 1 && single.head.getDouble(2) == 5.0)
   }
 
-  test("resampleAsof matches the union+window form, including exact-tie carry") {
+  test("resample carries the larger value on an exact-timestamp tie and skips null samples") {
     // duplicate timestamp at t=4s: larger value (40.0) must carry, and a
     // null-valued sample at t=6s must be skipped, matching last(ignoreNulls)
     val df = Seq(
@@ -274,32 +274,11 @@ class HrvSpec extends SparkSpecBase {
       (2L, 100L, Some(5.0)))
       .toDF("user_id", "sec", "value")
       .withColumn("ts", timestamp_seconds($"sec"))
-    val asof = Hrv.resampleAsof(df, $"user_id", $"ts", $"value", stepSeconds = 2)
-      .orderBy($"series_key", $"ts").collect().map(r => (r.getLong(0), r.get(1), r.get(2)))
-    val locf = Hrv.resample(df, $"user_id", $"ts", $"value", stepSeconds = 2)
-      .orderBy($"series_key", $"ts").collect().map(r => (r.getLong(0), r.get(1), r.get(2)))
-    assert(asof.sameElements(locf))
-    assert(asof.map(_._3).toSeq.take(6) == Seq(10.0, 10.0, 40.0, 40.0, 40.0, 99.0))
-  }
-
-  test("resampleAsof consumes non-finite samples at exact tick instants") {
-    // +Infinity at t=2s coincides with a grid tick; the NaN probe sentinel
-    // must still sort at-or-after it so the tick carries the sample
-    val df = Seq((1L, 0L, 1.0), (1L, 2L, Double.PositiveInfinity), (1L, 4L, 7.0))
-      .toDF("user_id", "sec", "value")
-      .withColumn("ts", timestamp_seconds($"sec"))
-    val got = Hrv.resampleAsof(df, $"user_id", $"ts", $"value", stepSeconds = 2)
+    val got = Hrv.resample(df, $"user_id", $"ts", $"value", stepSeconds = 2)
+      .filter($"series_key" === 1)
       .orderBy($"ts").collect().map(_.getDouble(2))
-    assert(got.toSeq == Seq(1.0, Double.PositiveInfinity, 7.0))
-  }
-
-  test("resampleAsof matches resample on the events table") {
-    val e = Tables.events(spark, sf())
-    val a = Hrv.resampleAsof(e, $"user_id", $"ts", $"value", stepSeconds = 3600)
-      .orderBy($"series_key", $"ts").collect()
-    val l = Hrv.resample(e, $"user_id", $"ts", $"value", stepSeconds = 3600)
-      .orderBy($"series_key", $"ts").collect()
-    assert(a.length == l.length && a.sameElements(l))
+    // grid at 0,2,4,6,8,10s → carried values 10,10,40,40,40,99
+    assert(got.toSeq == Seq(10.0, 10.0, 40.0, 40.0, 40.0, 99.0))
   }
 
   test("full pipeline runs on the events table") {

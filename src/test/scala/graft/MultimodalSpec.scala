@@ -1,21 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.multimodal.Multimodal
 
 class MultimodalSpec extends SparkSpecBase {
   import spark.implicits._
-
-  test("frame sampling slices the payload with size and stride") {
-    val df = Seq((1L, Array.range(0, 100).map(_.toByte))).toDF("id", "media")
-    val frames = df.select(Multimodal.frameSample($"media", frameSize = 40, stride = 30).as("f"))
-      .select(size($"f").as("n"), $"f").collect().head
-    assert(frames.getInt(0) == 3) // offsets 0, 30, 60 fit a 40-byte frame
-    val arr = frames.getSeq[Array[Byte]](1)
-    assert(arr.forall(_.length == 40))
-    assert(arr(1)(0) == 30.toByte)
-  }
 
   /** (sample rate, channels) as the RIFF `fmt ` chunk records them. */
   private def wavHeader(bytes: Array[Byte]): (Int, Int) = {
@@ -382,9 +370,7 @@ class MultimodalSpec extends SparkSpecBase {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(vh.keySet == Set(1L, 2L)) // opaque mp4 row skipped
     assert(vh(1L) == vh(2L))
-    // fingerprints agree across containers too, and videoNearDups pairs them
-    assert(Multimodal.mp4MjpegFingerprint(mp4) ==
-      Multimodal.aviFingerprint(avi))
+    // videoNearDups pairs them
     val pairs = Multimodal.videoNearDups(ds)
       .select($"a_media_id", $"b_media_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -479,7 +465,7 @@ class MultimodalSpec extends SparkSpecBase {
     // structure survives: aHash of the resized image stays near the original
     assert(java.lang.Long.bitCount(
       Multimodal.bmpAHash(a) ^ Multimodal.bmpAHash(small)) <= 3)
-    // odd dims follow resizeMeta's ceil rule: 15x10 capped at 7 → 7x5
+    // odd dims round up: 15x10 capped at 7 → 7x5
     val odd = Multimodal.bmpResize(
       Multimodal.encodeBmp24(15, 10, (_, _) => (1, 2, 3)), 7)
     val oi = Multimodal.decodeBmp(odd)
@@ -538,13 +524,4 @@ class MultimodalSpec extends SparkSpecBase {
     val pairs = Multimodal.audioNearDups(spark.createDataset(rows), maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)), pairs.toString)
-  }
-
-  test("resize metadata preserves aspect ratio cap") {
-    val df = Seq((1024, 512), (100, 50)).toDF("width", "height")
-    val got = Multimodal.resizeMeta(df, maxSide = 256)
-      .select($"out_width", $"out_height").collect()
-      .map(r => (r.getInt(0), r.getInt(1))).toSeq
-    assert(got == Seq((256, 128), (100, 50)))
-  }
-}
+  }}

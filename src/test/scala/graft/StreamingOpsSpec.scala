@@ -164,4 +164,17 @@ class StreamingOpsSpec extends SparkSpecBase {
       || Option(e.getCause).exists(_.getMessage.contains("Refusing to mix lineages")))
   }
 
+  test("generationDirs names a stray non-numeric gen dir in its failure") {
+    // the generation store's reader lists gen=<n> children through
+    // PathGuard.generationDirs: a stray dir must name ITSELF, not die as
+    // a bare NumberFormatException with no path context
+    val dir = java.nio.file.Files.createTempDirectory("gendirs").toFile
+    assert(new java.io.File(dir, "gen=0").mkdir())
+    assert(new java.io.File(dir, "other").mkdir())
+    assert(PathGuard.generationDirs(spark, dir.toString) == Seq(0L))
+    assert(new java.io.File(dir, "gen=1.bak").mkdir())
+    val e = intercept[IllegalArgumentException](
+      PathGuard.generationDirs(spark, dir.toString))
+    assert(e.getMessage.contains("gen=1.bak"), e.getMessage)
+  }
 }

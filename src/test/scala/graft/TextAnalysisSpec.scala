@@ -36,27 +36,6 @@ class TextAnalysisSpec extends SparkSpecBase {
     assert(s(0) > s(1))
   }
 
-  test("content fingerprint is order- and duplication-insensitive") {
-    val df = Seq(
-      ("a", "red green blue"),
-      ("b", "blue red green"),
-      ("c", "red red green blue"),
-      ("d", "red green yellow")).toDF("id", "text")
-    val fp = df.select($"id", TextAnalysis.contentFingerprint($"text").as("f"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fp("a") == fp("b") && fp("b") == fp("c"))
-    assert(fp("a") != fp("d"))
-  }
-
-  test("shingle fingerprint equal for identical docs, short docs don't crash") {
-    val df = Seq("one two three four five", "one two three four five", "hi")
-      .toDF("text")
-    val f = df.select(TextAnalysis.shingleFingerprint($"text").as("f"))
-      .collect().map(_.getLong(0))
-    assert(f(0) == f(1))
-    assert(f(2) != 0L)
-  }
-
   test("tfidf: rare terms outweigh common ones, values hand-check") {
     val df = Seq(
       (1L, "cat cat dog"),

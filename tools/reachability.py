@@ -30,10 +30,11 @@ Roots:
 
 Prints each unreached def (or type, once for all its members) with its
 file and line, marking those listed in DESIGN.md's "Kept without a
-caller" table; what only a listed entry reaches needs no row. Exits 1 if
-any unreached def is not listed there with a reason, or if a listed
-entry names a def that is reached or no longer exists (a stale row); 0
-otherwise.
+caller" table; what only a listed entry reaches needs no row. Each row's
+reason opens with one of KINDS, so a library def that merely has a spec
+cannot be parked there. Exits 1 if any unreached def is not listed there,
+if a row's reason opens with no kind, or if a row names a def that is
+reached or no longer exists (a stale row); 0 otherwise.
 """
 import os, re, sys
 from collections import defaultdict
@@ -49,6 +50,8 @@ PIPELINE_ROOTS = [
     ("StreamingOps", "incrementalDedupStream"),
     ("StreamingOps", "incrementalMediaDedupStream"),
 ]
+# the reasons a def may stay without a caller (DESIGN.md lists each)
+KINDS = ("reference:", "fixture builder:", "spec probe:", "deployment entry:")
 # members the compiler or Spark call without naming them
 OWNER_CALLED = {"apply", "unapply", "unapplySeq", "main"}
 # Spark bases whose abstract members are implemented without `override`
@@ -343,6 +346,10 @@ def main(root, why=None):
     listed = {key(dc) for dc in unreached}
     for k in sorted(set(kept) - listed):
         print(f"STALE DESIGN.md 'Kept without a caller' row {k}: reached or gone")
+        bad += 1
+    for k in sorted(k for k, reason in kept.items() if not reason.startswith(KINDS)):
+        print(f"UNKINDED DESIGN.md 'Kept without a caller' row {k}: "
+              f"its reason opens with none of {', '.join(KINDS)}")
         bad += 1
     print(f"\n{len(entry_reached)} of {len(alld)} declarations reached from the "
           f"entry points; {len(unreached)} unreached, {bad} without a reason")
