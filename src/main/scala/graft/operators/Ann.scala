@@ -1,12 +1,10 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
+import graft.functions.{KMeansLocal, NearestCentroidExpr, VectorFunctions}
 import graft.functions.CosineSimilarityExpr.cosine_sim
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -16,7 +14,8 @@ import graft.functions.CosineSimilarityExpr.cosine_sim
   *    hold the approximate paths to (the judged form is
   *    LlmOps.llmCosineTopk).
   *  - `buildIvfIndex` + `ivfTopKIndexed`: a persisted inverted-file index
-  *    via seeded KMeans, built once and served many times; probes search
+  *    via seeded driver-side k-means ([[KMeansLocal]]) on a bounded
+  *    learning sample, built once and served many times; probes search
   *    the `nprobe` nearest centroids' list partitions only — the classic
   *    IVF-Flat layout, with the centroid table broadcast.
   */
@@ -53,23 +52,11 @@ object Ann {
     topKBySim(pairs, k)
   }
 
-  /** Corpus-side feature frame for KMeans: (nb, vb array, fv vector). */
+  /** Corpus-side feature frame for the index: (nb, vb array). */
   private def kmeansFeats(corpus: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     corpus.select(col(idCol).as("nb"),
       VectorFunctions.toDoubleVec(col(vecCol)).as("vb"))
-      .withColumn("fv", array_to_vector(col("vb")))
-
-  /** Broadcastable centroid routing table (list_id, cv) of a fitted
-    * model — the single definition both the per-call and persisted IVF
-    * paths write/read, so their routing cannot diverge. */
-  private def centroidTable(spark: SparkSession,
-      model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (v, i) => (i, v.toArray.toSeq) }.toSeq
-      .toDF("list_id", "cv")
-  }
 
   /** Route each probe to its `nprobe` nearest centroids (euclidean, as
     * in IVF): (probe_id, vp, list_id). */
@@ -92,7 +79,7 @@ object Ann {
       .select(col("probe_id"), col("nb"), cosine_sim(col("vp"), col("vb")).as("sim")), k)
 
   /** Build and PERSIST an IVF-Flat index at `dir`, so serving never
-    * re-clusters: fitting KMeans per call is fine for a one-shot audit
+    * re-clusters: fitting k-means per call is fine for a one-shot audit
     * and wrong for a 100 TB corpus served repeatedly.
     *
     * Layout: `dir/centroids` (`nlist` rows — the broadcastable routing
@@ -109,9 +96,11 @@ object Ann {
     graft.PathGuard.requireDisjoint(spark, corpus.inputFiles.toSeq, dir,
       "index input", hint = "Build the index outside the corpus directory.")
     val feats = kmeansFeats(corpus, idCol, vecCol)
-    require(feats.head(1).nonEmpty, "cannot build an IVF index on an empty corpus")
-    val model = new KMeans().setK(nlist).setSeed(seed)
-      .setFeaturesCol("fv").fit(feats)
+    val pts = KMeansLocal.sample(feats, col("vb"), nlist)
+    require(pts.nonEmpty, "cannot build an IVF index on an empty corpus")
+    // the routing table (list_id, cv): list i is centroid i
+    val cents = KMeansLocal.fit(pts, nlist, seed).toSeq.zipWithIndex
+      .map { case (v, i) => (i, v.toSeq) }
     // REBUILD ordering: clear the old lists tree BEFORE the new
     // centroids commit — every crash state is then loud ("no IVF
     // index" / unreadable lists), never new centroids silently routing
@@ -125,10 +114,14 @@ object Ann {
     require(listsFs.delete(listsPath, true) || !listsFs.exists(listsPath),
       s"failed to clear $listsPath for rebuild — old lists would " +
         "survive under the new centroids.")
-    centroidTable(spark, model)
+    import spark.implicits._
+    cents.toDF("list_id", "cv")
       .write.mode("overwrite").parquet(s"$dir/centroids")
-    model.transform(feats)
-      .select(col("nb"), col("vb"), col("prediction").as("list_id"))
+    // every vector to its nearest centroid: the fused argmin over the
+    // centroid array in list_id order (ties to the smallest list_id),
+    // shipped as one plan literal
+    feats.withColumn("list_id",
+      NearestCentroidExpr.nearest_centroid(col("vb"), typedlit(cents)))
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$dir/lists")
   }
@@ -195,7 +188,7 @@ object Ann {
     * stack under the oracle gate via PROBE-EXHAUSTION INVISIBILITY:
     * with `nprobe = nlist` every list is routed, so [[ivfTopKIndexed]]
     * degenerates PROVABLY to exact brute-force cosine top-k (list
-    * pruning is the ONLY approximation in IVF-Flat; the seeded KMeans
+    * pruning is the ONLY approximation in IVF-Flat; the seeded k-means
     * layout can relocate rows but never drop a candidate when all
     * lists are probed). The oracle is therefore plain exact KNN SQL —
     * the same judged-invisibility move as `join_bucketed` (layout) and

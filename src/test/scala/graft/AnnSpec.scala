@@ -97,4 +97,12 @@ class AnnSpec extends SparkSpecBase {
     assert(recalls.last._2 == 1.0, s"nprobe = nlist must be exact: $recalls")
   }
 
+  test("building an IVF index rejects an empty corpus") {
+    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("ivfempty").toString + "/idx"
+    assertThrows[IllegalArgumentException] {
+      Ann.buildIvfIndex(spark, empty, "vec_id", "embedding", dir, nlist = 8)
+    }
+  }
+
 }

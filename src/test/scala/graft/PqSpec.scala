@@ -177,4 +177,11 @@ class PqSpec extends SparkSpecBase {
       Pq.train(spark, emb, "embedding", m = 7) // 64 % 7 != 0
     }
   }
+
+  test("coarse training rejects an empty corpus") {
+    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    assertThrows[IllegalArgumentException] {
+      Pq.trainCoarse(spark, empty, "embedding")
+    }
+  }
 }

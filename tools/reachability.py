@@ -33,8 +33,10 @@ file and line, marking those listed in DESIGN.md's "Kept without a
 caller" table; what only a listed entry reaches needs no row. Each row's
 reason opens with one of KINDS, so a library def that merely has a spec
 cannot be parked there. Exits 1 if any unreached def is not listed there,
-if a row's reason opens with no kind, or if a row names a def that is
-reached or no longer exists (a stale row); 0 otherwise.
+if a row's reason opens with no kind, if a row names a def that is
+reached or no longer exists (a stale row), or if code in src/main/scala
+names `org.apache.spark.ml` (the engine fits its models itself; specs
+may still use spark.ml); 0 otherwise.
 """
 import os, re, sys
 from collections import defaultdict
@@ -56,6 +58,7 @@ KINDS = ("reference:", "fixture builder:", "spec probe:", "deployment entry:")
 OWNER_CALLED = {"apply", "unapply", "unapplySeq", "main"}
 # Spark bases whose abstract members are implemented without `override`
 FRAMEWORK_BASES = re.compile(r"\bextends\s+Aggregator\b")
+SPARK_ML = re.compile(r"\borg\s*\.\s*apache\s*\.\s*spark\s*\.\s*ml")
 MAIN = re.compile(r"\bdef\s+main\s*\(\s*\w+\s*:\s*Array\s*\[\s*String\s*\]\s*\)")
 DECL = re.compile(r"\b(def|val|var|class|object|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
 WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -351,6 +354,12 @@ def main(root, why=None):
         print(f"UNKINDED DESIGN.md 'Kept without a caller' row {k}: "
               f"its reason opens with none of {', '.join(KINDS)}")
         bad += 1
+    for p, t in sorted(files.items()):
+        if p.startswith("src/"):
+            for m in SPARK_ML.finditer(t):
+                print(f"SPARK.ML {p}:{t.count(chr(10), 0, m.start()) + 1}: "
+                      "src/main uses org.apache.spark.ml")
+                bad += 1
     print(f"\n{len(entry_reached)} of {len(alld)} declarations reached from the "
           f"entry points; {len(unreached)} unreached, {bad} without a reason")
     return 1 if bad else 0
