@@ -11,10 +11,15 @@ import org.apache.spark.sql.functions._
   * collect, then codegen'd assignment against the fitted centroids).
   *
   * k-means++ initialisation from a `java.util.Random(seed)`, then Lloyd
-  * iterations until no assignment changes or `iters` run out. Distance
-  * ties go to the lowest centroid index (strict `<`, the
-  * [[NearestCentroidExpr]] contract), and a cluster left empty keeps its
-  * previous centroid, so no centroid is ever NaN.
+  * iterations until no assignment changes or 20 have run (spark.ml's
+  * default, which the fits this replaced used). Distance ties go to the
+  * lowest centroid index (strict `<`, the [[NearestCentroidExpr]]
+  * contract), and a cluster left empty keeps its previous centroid.
+  * Points must be finite, so no centroid is ever NaN.
+  *
+  * The fit is single-threaded and costs about 20·n·k·dim flops on a
+  * sample of n = max(4096, 256·k) points: quadratic in k, so it is
+  * meant for small models (k up to a few hundred), not a large nlist.
   */
 object KMeansLocal {
 
@@ -22,14 +27,18 @@ object KMeansLocal {
     * fitting on a bounded sample, a few hundred points per centroid. */
   def sampleCap(k: Int): Int = math.max(4096, 256 * k)
 
-  /** A deterministic, bounded learning sample of the non-null vectors
-    * `vec` of `df`: the first [[sampleCap]] rows by `xxhash64` of the
-    * vector (hash order, so the sample is not biased toward small
-    * first coordinates), collected to the driver. */
+  /** A deterministic, bounded learning sample of the vectors `vec` of
+    * `df`: the first [[sampleCap]] rows by `xxhash64` of the vector
+    * (hash order, so the sample is not biased toward small first
+    * coordinates), collected to the driver. A null vector fails loudly;
+    * a null element reads as NaN, which [[fit]] rejects. */
   def sample(df: DataFrame, vec: Column, k: Int): Array[Array[Double]] =
-    df.select(vec.as("v")).filter(col("v").isNotNull)
-      .orderBy(xxhash64(col("v")), col("v")).limit(sampleCap(k))
-      .collect().map(_.getSeq[Double](0).toArray)
+    df.select(vec.as("v")).orderBy(xxhash64(col("v")), col("v"))
+      .limit(sampleCap(k)).collect().map { r =>
+        require(!r.isNullAt(0), "null vector in the k-means learning sample")
+        r.getSeq[java.lang.Double](0)
+          .map(x => if (x == null) Double.NaN else x.doubleValue).toArray
+      }
 
   private def sqDist(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0
@@ -51,13 +60,16 @@ object KMeansLocal {
     best
   }
 
-  /** Fit `k` centroids to `points` (all of one dimension). */
-  def fit(points: Array[Array[Double]], k: Int, seed: Long,
-      iters: Int = 20): Array[Array[Double]] = {
+  private val MaxIters = 20
+
+  /** Fit `k` centroids to `points` (finite, all of one dimension). */
+  def fit(points: Array[Array[Double]], k: Int, seed: Long): Array[Array[Double]] = {
     require(k > 0, s"k must be positive, got $k")
     require(points.nonEmpty, "cannot fit k-means on no points")
     val dim = points(0).length
     require(points.forall(_.length == dim), "points must share one dimension")
+    require(points.forall(_.forall(java.lang.Double.isFinite)),
+      "k-means points must be finite (no NaN, infinite or null coordinate)")
     val n = points.length
     val rng = new java.util.Random(seed)
     // k-means++: each next centroid is a point drawn with probability
@@ -76,7 +88,7 @@ object KMeansLocal {
     val assign = Array.fill(n)(-1)
     var it = 0
     var changed = true
-    while (it < iters && changed) {
+    while (it < MaxIters && changed) {
       changed = false
       val sums = Array.ofDim[Double](k, dim)
       val counts = new Array[Int](k)

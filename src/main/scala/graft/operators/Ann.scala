@@ -101,6 +101,16 @@ object Ann {
     // the routing table (list_id, cv): list i is centroid i
     val cents = KMeansLocal.fit(pts, nlist, seed).toSeq.zipWithIndex
       .map { case (v, i) => (i, v.toSeq) }
+    // every vector to its nearest centroid: the fused argmin over the
+    // centroid array in list_id order (ties to the smallest list_id),
+    // shipped as one plan literal
+    val listId = NearestCentroidExpr.nearest_centroid(col("vb"), typedlit(cents))
+    // a null, short or non-finite vector gets list -1, which no probe
+    // routes to: refuse the build before the old index is touched,
+    // rather than silently leave that row out of every answer
+    val unroutable = feats.filter(listId < 0).select(col("nb")).head(1)
+    require(unroutable.isEmpty, s"row ${unroutable.head.get(0)} has a null, " +
+      s"non-finite or not ${pts.head.length}-dim vector: no IVF list can hold it")
     // REBUILD ordering: clear the old lists tree BEFORE the new
     // centroids commit — every crash state is then loud ("no IVF
     // index" / unreadable lists), never new centroids silently routing
@@ -117,11 +127,7 @@ object Ann {
     import spark.implicits._
     cents.toDF("list_id", "cv")
       .write.mode("overwrite").parquet(s"$dir/centroids")
-    // every vector to its nearest centroid: the fused argmin over the
-    // centroid array in list_id order (ties to the smallest list_id),
-    // shipped as one plan literal
-    feats.withColumn("list_id",
-      NearestCentroidExpr.nearest_centroid(col("vb"), typedlit(cents)))
+    feats.withColumn("list_id", listId)
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$dir/lists")
   }

@@ -60,6 +60,7 @@ object Pq {
     val pts = normedSample(corpus, vecCol, k)
     require(pts.nonEmpty, "cannot train PQ codebooks on an empty corpus")
     val dim = pts.head.length
+    require(pts.forall(_.length == dim), "embeddings must share one dimension")
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val sub = dim / m
     val books = (0 until m).map { j =>

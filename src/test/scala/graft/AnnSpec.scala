@@ -97,6 +97,37 @@ class AnnSpec extends SparkSpecBase {
     assert(recalls.last._2 == 1.0, s"nprobe = nlist must be exact: $recalls")
   }
 
+  test("building an IVF index refuses vectors no list can hold and keeps the old index") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfbad").toString + "/idx"
+    val good = emb.filter($"vec_id" < 100).select($"vec_id", $"embedding")
+    Ann.buildIvfIndex(spark, good, "vec_id", "embedding", dir, nlist = 4)
+    // inside the learning sample: a null, a short and a NaN-holding vector
+    Seq(None, Some(Seq(1f, 2f)), Some(Seq.fill(63)(0.5f) :+ Float.NaN)).foreach { v =>
+      val bad = Seq((9001L, v)).toDF("vec_id", "embedding")
+      assertThrows[IllegalArgumentException] {
+        Ann.buildIvfIndex(spark, good.unionByName(bad), "vec_id", "embedding", dir, nlist = 4)
+      }
+    }
+    // outside it: a short vector whose hash ranks after more than
+    // sampleCap(4) good rows, so only the assignment pass sees it
+    val big = spark.range(6000).select($"id".as("vec_id"),
+      array(sin($"id"), cos($"id")).as("embedding"))
+    val h = xxhash64($"embedding")
+    val cands = (0 until 100).map(i => (100000L + i, Seq(i.toDouble))).toDF("vec_id", "embedding")
+    val last = cands.select($"vec_id", h).orderBy(h.desc).head()
+    val rest = big.filter(h < last.getLong(1))
+    assert(rest.count() > graft.functions.KMeansLocal.sampleCap(4))
+    val e = intercept[IllegalArgumentException] {
+      Ann.buildIvfIndex(spark, rest.unionByName(cands.filter($"vec_id" === last.getLong(0))),
+        "vec_id", "embedding", dir, nlist = 4)
+    }
+    assert(e.getMessage.contains("no IVF list can hold it"), e.getMessage)
+    // every refusal came before the old index was touched
+    val exact = topkMap(Ann.bruteForceTopK(good, probes, "vec_id", "embedding", k = 5))
+    assert(topkMap(Ann.ivfTopKIndexed(spark, dir, probes, "vec_id", "embedding",
+      k = 5, nprobe = 4)) == exact)
+  }
+
   test("building an IVF index rejects an empty corpus") {
     val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivfempty").toString + "/idx"

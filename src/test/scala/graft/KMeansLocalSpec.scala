@@ -6,7 +6,8 @@ import graft.functions.KMeansLocal
 
 /** The driver-side k-means kernel behind every ANN model fit:
   * determinism, recovery of planted clusters, the lowest-index
-  * tie-break, degenerate inputs, and the bounded learning sample. */
+  * tie-break, degenerate and non-finite inputs, and the bounded
+  * learning sample. */
 class KMeansLocalSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -70,10 +71,18 @@ class KMeansLocalSpec extends SparkSpecBase {
     }
   }
 
-  test("the learning sample is bounded, deterministic and skips nulls") {
+  test("non-finite points are rejected") {
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { x =>
+      val e = intercept[IllegalArgumentException] {
+        KMeansLocal.fit(blobs.map(_._2) :+ Array(1.0, x), 2, seed = 1L)
+      }
+      assert(e.getMessage.contains("finite"), e.getMessage)
+    }
+  }
+
+  test("the learning sample is bounded and deterministic, and refuses nulls") {
     val df = spark.range(5000).select(
       array($"id".cast("double"), ($"id" % 7).cast("double")).as("v"))
-      .union(Seq(Option.empty[Seq[Double]]).toDF("v"))
     val a = KMeansLocal.sample(df, $"v", 1)
     assert(a.length == KMeansLocal.sampleCap(1) && a.length == 4096)
     assert(a.map(_.toSeq).toSeq == KMeansLocal.sample(df, $"v", 1).map(_.toSeq).toSeq)
@@ -81,5 +90,14 @@ class KMeansLocalSpec extends SparkSpecBase {
     assert(a.exists(_(0) >= 4096.0))
     // a table under the cap comes back whole
     assert(KMeansLocal.sample(df.filter($"v"(0) < 300), $"v", 16).length == 300)
+    // a null vector fails the sample; a null element reads as NaN, which
+    // the fit then refuses
+    val small = df.filter($"v"(0) < 10)
+    assertThrows[IllegalArgumentException] {
+      KMeansLocal.sample(small.union(Seq(Option.empty[Seq[Double]]).toDF("v")), $"v", 1)
+    }
+    val holed = KMeansLocal.sample(small.union(Seq(Seq(Some(1.0), None)).toDF("v")), $"v", 1)
+    assert(holed.exists(p => p(0) == 1.0 && p(1).isNaN))
+    assertThrows[IllegalArgumentException] { KMeansLocal.fit(holed, 2, seed = 1L) }
   }
 }
