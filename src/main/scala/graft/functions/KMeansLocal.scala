@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * k-means++ initialisation from a `java.util.Random(seed)`, then Lloyd
   * iterations until no assignment changes or 20 have run (spark.ml's
-  * default, which the fits this replaced used). Distance ties go to the
-  * lowest centroid index (strict `<`, the [[NearestCentroidExpr]]
-  * contract), and a cluster left empty keeps its previous centroid.
-  * Points must be finite, so no centroid is ever NaN.
+  * default cap). Distance ties go to the lowest centroid index (strict
+  * `<`, the [[NearestCentroidExpr]] contract), and a cluster left empty
+  * keeps its previous centroid. Points must be finite, so no centroid
+  * is ever NaN.
   *
   * The fit is single-threaded and costs about 20·n·k·dim flops on a
   * sample of n = max(4096, 256·k) points: quadratic in k, so it is
